@@ -704,17 +704,20 @@ class _HuffTable:
     """Decode table with a 16-bit-prefix LUT: lut[peek16] = (length,
     value) of the unique code that prefixes those bits (None where no
     code matches — incomplete trees). Built once per distinct table
-    content (memoized), replacing the per-bit canonical walk."""
+    content (memoized), replacing the per-bit canonical walk. Codes
+    past the 16-bit space (an over-subscribed DHT) can never match
+    and are skipped, so the LUT stays at 65,536 entries."""
 
     __slots__ = ("lut",)
 
     def __init__(self, codes: dict[int, tuple[int, int]]) -> None:
         lut: list[tuple[int, int] | None] = [None] * 65536
         for v, (code, length) in codes.items():
+            span = 1 << (16 - length)
             start = code << (16 - length)
-            lut[start : start + (1 << (16 - length))] = [(length, v)] * (
-                1 << (16 - length)
-            )
+            if start + span > 65536:
+                continue
+            lut[start : start + span] = [(length, v)] * span
         self.lut = lut
 
 

@@ -244,15 +244,9 @@ def lzw_tiff_encode(data: bytes) -> bytes:
     return bytes(out)
 
 
-_TIF_BASE_TABLE: list[bytes] = []
-
-
-def _tif_base_table() -> list[bytes]:
-    if not _TIF_BASE_TABLE:
-        _TIF_BASE_TABLE.extend(
-            [bytes([i]) for i in range(256)] + [b"", b""]
-        )
-    return _TIF_BASE_TABLE
+# the 256 literal codes plus placeholders for CLEAR and EOI; each
+# decode works on its own copy
+_TIF_BASE_TABLE: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
 
 
 def lzw_tiff_decode(data: bytes) -> bytes | None:
@@ -287,7 +281,7 @@ def lzw_tiff_decode(data: bytes) -> bytes | None:
 
     def reset() -> None:
         nonlocal table, width, prev
-        table = _tif_base_table().copy()
+        table = _TIF_BASE_TABLE.copy()
         width = 9
         prev = None
 

@@ -615,9 +615,8 @@ def connected_components(
     by ``src`` — which would also remove the per-round edge-side
     exchange at SMJ scale — was measured 1.3-2.6× SLOWER end to end
     at the bench point: the columnar cache build and per-round
-    InMemoryTableScan cost more than the tiny exchanges they save;
-    see OPTIMIZATION_r13.md.) Returns (id, component) with
-    component = min id in the component.
+    InMemoryTableScan cost more than the tiny exchanges they save.)
+    Returns (id, component) with component = min id in the component.
     """
     both_dirs = F.explode(
         F.array(

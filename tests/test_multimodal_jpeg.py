@@ -326,6 +326,17 @@ def test_truncated_sof_returns_none():
     assert decode_jpeg_dc(payload) is None
 
 
+def test_oversubscribed_huffman_table_keeps_lut_size():
+    """A malformed DHT with more codes than its lengths allow (three
+    1-bit codes) must not grow the decode LUT past the 16-bit space;
+    the codes that fit still decode."""
+    from queryengine_spark.multimodal.jpeg import _canonical_codes, _HuffTable
+
+    table = _HuffTable(_canonical_codes([3] + [0] * 15, [7, 8, 9]))
+    assert len(table.lut) == 65536
+    assert table.lut[0] == (1, 7) and table.lut[0xFFFF] == (1, 8)
+
+
 # --- r5: 3-component YCbCr 4:4:4 -------------------------------------------
 
 
