@@ -124,6 +124,20 @@ _AC_VALS = [
 #: read-only.
 _CANONICAL_MEMO: dict[tuple[bytes, bytes], dict[int, tuple[int, int]]] = {}
 
+#: entries a Huffman memo keeps. Files can carry arbitrary DHT
+#: tables, so a long-lived worker decoding many of them would grow its
+#: memos without limit; past the cap a memo starts over. A decode
+#: table holds a 65,536-entry LUT, so the cap bounds that memo near
+#: 32 MB. Real inputs reuse a handful of tables and never reach it.
+_MEMO_MAX = 64
+
+
+def _memoize(memo: dict, key, value):
+    if len(memo) >= _MEMO_MAX:
+        memo.clear()
+    memo[key] = value
+    return value
+
 
 def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
     """value → (code, length) canonical Huffman assignment (JPEG
@@ -142,8 +156,7 @@ def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, i
             code += 1
             k += 1
         code <<= 1
-    _CANONICAL_MEMO[key] = out
-    return out
+    return _memoize(_CANONICAL_MEMO, key, out)
 
 
 class _BitWriter:
@@ -730,8 +743,7 @@ def _build_decode_table(bits: list[int], vals: list[int]) -> _HuffTable:
     key = (bytes(bits), bytes(vals))
     hit = _DECODE_TABLE_MEMO.get(key)
     if hit is None:
-        hit = _HuffTable(_canonical_codes(bits, vals))
-        _DECODE_TABLE_MEMO[key] = hit
+        hit = _memoize(_DECODE_TABLE_MEMO, key, _HuffTable(_canonical_codes(bits, vals)))
     return hit
 
 

@@ -2,12 +2,18 @@
 engine's entire query semantics (/root/reference/src/heurFuzz.py,
 SURVEY.md §2-§4), re-expressed as a declarative Spark plan:
 
+  one probe per side (bounded take of raw term hashes)
   prepare_terms  →  [distinct query terms, when queries repeat]
                  →  candidate generation (cross | inverted-index)
                  →  per-query heuristic top-K (window group-limit)
-                 →  partial_ratio refine (Arrow pandas UDF)
+                 →  partial_ratio refine (Arrow pandas UDF, once per row)
                  →  per-query argmax with reference tie-breaks
                  →  left join back + 'NA' fill
+
+Building the plan runs at most one probe job per input side. The
+query probe sizes the query side and measures its term repetition;
+the reference probe picks the strategy and the reference-side term
+dedup.
 
 The four middle stages depend only on the query TERM (no order they
 use reads q_id). So when query terms repeat ≥2× on average (the rule
@@ -15,7 +21,9 @@ the ref side's term dedup uses) they run once per distinct trimmed
 term, and the winners fan back out to every query row in the final
 left join. Otherwise they run once per query row: on distinct queries
 the aggregation saves nothing and its extra shuffle stage cost 13% of
-rows/s (100 queries × 12,000 refs, 4 cores).
+rows/s (100 queries × 12,000 refs, 4 cores). Where a stage runs per
+distinct term, the terms are made distinct first and each term's
+bigram array is built after that, once.
 
 Reference semantics preserved (cites into /root/reference/):
 - coverage = (# query-bigram positions whose bigram occurs in the
@@ -45,7 +53,7 @@ is an equi-join on 2-byte bigram keys with map-side pre-aggregation
 on both sides, AQE skew-join splitting, and an optional
 stop-bigram document-frequency cap for hot keys; the per-query top-K
 is a WindowGroupLimit (partial top-k before shuffle). Nothing is
-ever collected to the driver.
+collected to the driver but the probes' bounded term-hash samples.
 """
 
 from __future__ import annotations
@@ -176,7 +184,7 @@ def candidates_inverted(
     docstring for the divergence contract.
     """
     if dedup_terms is None:
-        dedup_terms = _dup_heavy(refs, "r_term")
+        dedup_terms = _probe(refs, "r_term")[1]
     hits = _inverted_hits(
         queries, refs, stop_bigram_df_ratio, broadcast_queries, dedup_terms
     )
@@ -229,16 +237,17 @@ def _inverted_hits(
 ) -> DataFrame:
     """(q_key, r_key, hits) — the inverted-index join + aggregation at
     id granularity, or at distinct-TERM granularity when dedup_terms
-    (see candidates_inverted docstring)."""
+    (see candidates_inverted docstring). The distinct-term sides build
+    each term's bigram array once, after the distinct: carrying the
+    per-row arrays through it would shuffle them and turn the hash
+    aggregate into a sort aggregate."""
     q_side = (
-        queries.select(F.col("q_term").alias("q_key"), "q_bigrams")
-        .dropDuplicates(["q_key"])
+        _term_keys(queries, "q")
         if dedup_terms
         else queries.select(F.col("q_id").alias("q_key"), "q_bigrams")
     )
     r_side = (
-        refs.select(F.col("r_term").alias("r_key"), "r_bigrams")
-        .dropDuplicates(["r_key"])
+        _term_keys(refs, "r")
         if dedup_terms
         else refs.select(F.col("r_id").alias("r_key"), "r_bigrams")
     )
@@ -277,13 +286,23 @@ def _inverted_hits(
     # q_bi, whose groupBy would execute a whole shuffle job just to
     # decide the hint.
     if broadcast_queries is None:
-        broadcast_queries = _is_small(queries.select("q_id"), 20_000)
+        broadcast_queries = _probe(queries, "q_term")[0] <= _PROBE_ROWS
     if broadcast_queries:
         q_bi = F.broadcast(q_bi)
     return (
         q_bi.join(r_bi, "bg")
         .groupBy("q_key", "r_key")
         .agg(F.sum("mult").alias("hits"))
+    )
+
+
+def _term_keys(prepared: DataFrame, p: str) -> DataFrame:
+    # ({p}_key, {p}_bigrams) per distinct term of a prepared relation
+    _, bigrams = _term_columns(p)
+    return (
+        prepared.select(f"{p}_term")
+        .distinct()
+        .select(F.col(f"{p}_term").alias(f"{p}_key"), bigrams)
     )
 
 
@@ -318,7 +337,7 @@ def topk_candidates_inverted(
     """
     order = _best_match_order() if lendiff_asc else None
     if dedup_terms is None:
-        dedup_terms = _dup_heavy(refs, "r_term")
+        dedup_terms = _probe(refs, "r_term")[1]
     if not dedup_terms:
         cands = candidates_inverted(
             queries, refs, stop_bigram_df_ratio, broadcast_queries, dedup_terms=False
@@ -328,11 +347,17 @@ def topk_candidates_inverted(
     hits = _inverted_hits(
         queries, refs, stop_bigram_df_ratio, broadcast_queries, dedup_terms=True
     )
-    q_terms = queries.select(
-        "q_term", "q_len", F.size("q_bigrams").alias("q_nbg")
-    ).dropDuplicates(["q_term"])
-    r_terms = refs.groupBy("r_term").agg(
-        F.min("r_len").alias("r_len"), F.count(F.lit(1)).alias("cnt")
+    q_len, q_bigrams = _term_columns("q")
+    r_len, _ = _term_columns("r")
+    q_terms = (
+        queries.select("q_term")
+        .distinct()
+        .select("q_term", q_len, F.size(q_bigrams).alias("q_nbg"))
+    )
+    r_terms = (
+        refs.groupBy("r_term")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .select("r_term", "cnt", r_len)
     )
     term_cands = (
         hits.join(q_terms, hits["q_key"] == q_terms["q_term"])
@@ -371,21 +396,6 @@ def _distinct_terms(prepared: DataFrame) -> DataFrame:
         .agg(F.min("q_id").alias("q_id"))
         .select("q_id", "q_term", *_term_columns("q"))
     )
-
-
-def _dup_heavy(prepared: DataFrame, term_col: str, sample: int = 20_000) -> bool:
-    """One narrow job over a bounded sample: are terms duplicated ≥2×
-    on average? Decides the dedup_terms default."""
-    row = (
-        prepared.select(term_col)
-        .limit(sample)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct(term_col).alias("d"),
-        )
-        .collect()[0]
-    )
-    return row["n"] >= 2 * max(row["d"], 1)
 
 
 def _topk_order() -> list[Column]:
@@ -432,7 +442,14 @@ def select_best(scored: DataFrame) -> DataFrame:
     """Winner selection (reference R2, src/heurFuzz.py:113-125):
     max score → min lendiff → first in candidate order, which under
     the Q1 candidate ordering is cov DESC then r_id DESC. Rows with
-    score 0 (all below cutoff) produce no winner."""
+    score 0 (all below cutoff) produce no winner.
+
+    The ``score > 0`` test runs after the window, on the rank-1 row:
+    placed before it, the optimizer pushes the filter below the
+    projection that defines ``score`` and evaluates the scoring UDF a
+    second time. The rank-1 row has the query's highest score, so it
+    scores 0 only when every row of the query does, and the winners
+    are the same."""
     w = Window.partitionBy("q_id").orderBy(
         F.col("score").desc(),
         F.col("lendiff").asc(),
@@ -440,9 +457,8 @@ def select_best(scored: DataFrame) -> DataFrame:
         F.col("r_id").desc(),
     )
     return (
-        scored.filter(F.col("score") > 0)
-        .withColumn("best_rank", F.row_number().over(w))
-        .filter(F.col("best_rank") == 1)
+        scored.withColumn("best_rank", F.row_number().over(w))
+        .filter((F.col("best_rank") == 1) & (F.col("score") > 0))
         .select("q_id", "q_term", F.col("r_term").alias("match"), F.col("score"))
     )
 
@@ -469,35 +485,45 @@ def fuzzy_match(
     the 2..buffer-byte contract) appears exactly once; unmatched
     queries carry match='NA', score=0 (reference R3).
 
-    Candidate generation, top-K, refine and the argmax run once per
-    distinct trimmed query term when query terms repeat ≥2× on
-    average (the rule the ref side's term dedup uses, read by the
-    same narrow probe that sizes the query side), and once per query
-    row otherwise. The result is the same either way, because none
-    of those stages' orders reads q_id.
+    Building the plan runs at most one probe job per side, each a
+    bounded take of trimmed-term hashes from the RAW input
+    (:func:`_probe`), so no probe runs the prepared subtrees:
+    - the query probe sizes the query side for the broadcast hint and
+      picks the query granularity. Candidate generation, top-K,
+      refine and the argmax run once per distinct trimmed query term
+      when query terms repeat ≥2× on average, and once per query row
+      otherwise. The result is the same either way, because none of
+      those stages' orders reads q_id;
+    - the reference probe, skipped when the strategy is ``cross``,
+      picks ``auto``'s strategy and, by the same ≥2× rule, whether
+      the inverted path joins candidates per distinct reference term.
+
+    Refine scores each top-K row with ``partial_ratio`` once.
     """
     cfg = config or FuzzyConfig()
     q = prepare_terms(queries_raw, query_col, query_id, "q", cfg.buffer_size)
     r = prepare_terms(refs_raw, ref_col, ref_id, "r", cfg.buffer_size)
-    # one narrow probe on the RAW input decides the broadcast hint and
-    # the join key that fans the winners back out to the query rows
-    # (avoids probing the prepared subtrees)
-    small_q, repeated_q = _probe_queries(queries_raw, query_col)
+    n_q, repeated_q = _probe(queries_raw, query_col)
     key = "q_term" if repeated_q else "q_id"
     terms = _distinct_terms(q) if repeated_q else q
 
     strategy = cfg.candidate_strategy
+    if strategy != "cross":
+        n_r, repeated_r = _probe(
+            refs_raw, ref_col, max(_PROBE_ROWS, cfg.auto_cross_threshold)
+        )
     if strategy == "auto":
         # tiny reference sets: dense mode costs nothing and keeps the
         # reference's zero-coverage candidate behavior
-        strategy = "cross" if _is_small(refs_raw, cfg.auto_cross_threshold) else "inverted"
+        strategy = "cross" if n_r <= cfg.auto_cross_threshold else "inverted"
 
     if strategy == "cross":
         topk = topk_candidates(candidates_cross(terms, r), cfg.top_k)
     elif strategy == "inverted":
         # top-K prunes at term granularity before the id fan-out
         topk = topk_candidates_inverted(
-            terms, r, cfg.top_k, cfg.stop_bigram_df_ratio, broadcast_queries=small_q
+            terms, r, cfg.top_k, cfg.stop_bigram_df_ratio,
+            broadcast_queries=n_q <= _PROBE_ROWS, dedup_terms=repeated_r,
         )
     else:
         raise ValueError(f"unknown candidate_strategy: {strategy}")
@@ -516,26 +542,24 @@ def fuzzy_match(
     )
 
 
-def _probe_queries(
-    queries_raw: DataFrame, query_col: str, sample: int = 20_000
-) -> tuple[bool, bool]:
-    """The :func:`_is_small` limit-probe of the raw queries, returning
-    term hashes instead of a constant: (at most ``sample`` rows, and
-    trimmed terms repeat ≥2× on average — the :func:`_dup_heavy` rule)
-    from one job that scans at most ``sample + 1`` rows."""
+#: rows a probe takes by default; a query side of at most this many
+#: rows is broadcast
+_PROBE_ROWS = 20_000
+
+
+def _probe(df: DataFrame, term_col: str, sample: int = _PROBE_ROWS) -> tuple[int, bool]:
+    """One narrow job that takes the trimmed-term hashes of at most
+    ``sample + 1`` rows, instead of a full count. Returns how many rows
+    it took (``<= sample`` means the relation has no more) and whether
+    those terms repeat ≥2× on average: the rule for running a stage
+    once per distinct term."""
     hashes = [
         row[0]
-        for row in queries_raw.limit(sample + 1)
-        .select(F.xxhash64(ws_trim(F.col(query_col))))
+        for row in df.limit(sample + 1)
+        .select(F.xxhash64(ws_trim(F.col(term_col))))
         .take(sample + 1)
     ]
-    return len(hashes) <= sample, len(hashes) >= 2 * max(len(set(hashes)), 1)
-
-
-def _is_small(df: DataFrame, threshold: int) -> bool:
-    # cheap limit-probe: scan at most threshold+1 rows instead of a
-    # full count
-    return len(df.limit(threshold + 1).select(F.lit(1)).take(threshold + 1)) <= threshold
+    return len(hashes), len(hashes) >= 2 * max(len(set(hashes)), 1)
 
 
 def map_ratio(matches: DataFrame) -> DataFrame:

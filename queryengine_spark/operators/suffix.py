@@ -112,7 +112,15 @@ def repeated_spans_sa(
     W-token span exactly (the sparse-table trick), so the final
     equality classes are W-window equality without a single extra
     doubling round. Output: (doc_id, pos, n_dup) with pos 0-based
-    and n_dup the total occurrence count of the span."""
+    and n_dup the total occurrence count of the span.
+
+    ``toks``: an already tokenized corpus, used instead of tokenizing
+    ``text_col`` (``df``, ``id_col`` and ``text_col`` are then unused).
+    Its columns are ``(doc_id, pos, tk)``, one row per token, and
+    ``pos`` must run 0..n-1 within each document with no gaps: the row
+    ``k`` ahead in ``pos`` order (``lead``) is read as position
+    ``pos + k``, and a span fits when ``pos + window - 1 <= max(pos)``.
+    This is the shape ``posexplode`` of a token array gives."""
     assert window >= 2, "window must be >= 2"
     if toks is None:
         toks = df.select(

@@ -11,29 +11,55 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import itertools
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from queryengine_spark.functions.text import ws_trim
 
-_LINES_SCHEMA = StructType(
-    [StructField("line_id", LongType(), False), StructField("term", StringType(), True)]
-)
+#: monotonically_increasing_id puts the partition index in bits 33 and
+#: up and the row's position within its partition in the low 33 bits
+_POS_BITS = 33
 
 
 def read_lines(spark: SparkSession, path: str) -> DataFrame:
     """Line scan with a deterministic input-order ``line_id``.
 
-    zipWithIndex assigns contiguous ids in file order (one pass to
-    size partitions, one to index) — the one place an RDD is justified:
-    Spark has no built-in row-order id for text sources, and the
-    reference's tie-breaks/output order depend on line order.
+    ``line_id`` is contiguous from 0 in file order: the reference's
+    tie-breaks and output order depend on line order, and Spark has no
+    built-in row-order id for text sources. The JVM scan assigns it
+    from ``monotonically_increasing_id()`` (partition index, position
+    in the partition); no row crosses into Python. A multi-partition
+    scan runs one small aggregate that counts each partition's rows,
+    and each row's partition offset then comes from a literal array
+    lookup: the same sizing pass zipWithIndex makes.
+
+    The offsets hold for the scan's partitioning at the time of this
+    call. A row outside the partition it was counted in (the file or
+    the split settings, ``spark.sql.files.*``, changed before the
+    frame ran) fails the query instead of getting a wrong id.
     """
-    rdd = spark.read.text(path).rdd.map(lambda r: r[0]).zipWithIndex()
-    return spark.createDataFrame(rdd.map(lambda t: (t[1], t[0])), _LINES_SCHEMA).select(
-        "line_id", ws_trim(F.col("term")).alias("term")
+    lines = spark.read.text(path).select(
+        F.monotonically_increasing_id().alias("mid"), F.col("value").alias("term")
     )
+    part = F.shiftrightunsigned(F.col("mid"), _POS_BITS)
+    pos = F.col("mid").bitwiseAND(F.lit((1 << _POS_BITS) - 1))
+    n_parts = lines.rdd.getNumPartitions()
+    if n_parts > 1:
+        counts = dict(lines.groupBy(part.alias("p")).count().collect())
+        sizes = [counts.get(p, 0) for p in range(n_parts)]
+    else:
+        sizes = [1 << _POS_BITS]  # one partition: the position is the id
+    offsets = [0, *itertools.accumulate(sizes[:-1])]
+    line_id = F.when(pos < _longs(sizes)[part], _longs(offsets)[part] + pos).otherwise(
+        F.raise_error(F.lit(f"read_lines({path}): the scan's partitioning changed"))
+    )
+    return lines.select(line_id.alias("line_id"), ws_trim(F.col("term")).alias("term"))
+
+
+def _longs(values: list[int]) -> Column:
+    return F.array(*map(F.lit, values)).cast("array<bigint>")
 
 
 def read_tsv(spark: SparkSession, path: str) -> DataFrame:

@@ -337,6 +337,23 @@ def test_oversubscribed_huffman_table_keeps_lut_size():
     assert table.lut[0] == (1, 7) and table.lut[0xFFFF] == (1, 8)
 
 
+def test_huffman_memos_stay_bounded(monkeypatch):
+    """More distinct DHT tables than the memo cap leave both Huffman
+    memos at or below the cap, and a table built after a reset still
+    decodes."""
+    from queryengine_spark.multimodal import jpeg
+
+    monkeypatch.setattr(jpeg, "_MEMO_MAX", 8)
+    monkeypatch.setattr(jpeg, "_CANONICAL_MEMO", {})
+    monkeypatch.setattr(jpeg, "_DECODE_TABLE_MEMO", {})
+    for v in range(3 * 8 + 1):
+        table = jpeg._build_decode_table([1] + [0] * 15, [v])
+        assert len(jpeg._CANONICAL_MEMO) <= 8
+        assert len(jpeg._DECODE_TABLE_MEMO) <= 8
+        assert table.lut[0] == (1, v)
+    assert jpeg._build_decode_table([1] + [0] * 15, [v]) is table
+
+
 # --- r5: 3-component YCbCr 4:4:4 -------------------------------------------
 
 
