@@ -10,10 +10,13 @@ Scale notes:
   result to all-pairs for any threshold > 0, since zero-overlap pairs
   can't pass); optional max_df stop-shingle cap bounds the hot-key
   blowup at corpus scale (documented approximation).
-- MinHash+LSH: shingle → k md5-derived min-hashes → banded bucket
-  join; only same-bucket pairs meet, turning O(n²) into
-  O(Σ bucket²). Hash = md5(seed ':' shingle), min taken
-  lexicographically on the hex — deterministic and engine-portable.
+- MinHash+LSH: k md5-derived min-hashes per document → banded
+  bucket join; only same-bucket pairs meet, turning O(n²) into
+  O(Σ bucket²). Hash = 32-bit slices of md5(seed ':' shingle); the
+  signature is one mapInArrow pass over the document partitions
+  (each distinct shingle hashed once per Arrow batch, no explode, no
+  shuffle), whose numeric min equals the lexicographic min on hex
+  the SQL oracles take — deterministic and engine-portable.
 - SimHash: 64-bit hex-string fingerprint (simhash64_relation); bit
   4q+i is the sign of the sum over tokens of ±1 by bit i of hex
   nibble q of md5(token). Near-dup pairs via banded Hamming search
@@ -30,11 +33,14 @@ Scale notes:
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from queryengine_spark.functions.numeric import fround
 from queryengine_spark.functions.similarity import cosine_similarity
@@ -149,35 +155,117 @@ def shingle_pair_counts(
     return shared.join(ca, "id_a").join(cb, "id_b")
 
 
+#: distinct shingles whose digests the MinHash kernel keeps per Arrow
+#: batch; past the cap the memo starts over. An entry is ~300 bytes at
+#: the 24-hash layout, so the cap bounds a Python worker's memo near
+#: 20 MB however long the documents of a batch are. Read on the driver
+#: when the plan is built.
+_SHINGLE_MEMO_MAX = 1 << 16
+
+
+def _minhash_kernel(n_hashes: int, shingle_n: int, memo_max: int):
+    """mapInArrow kernel over (id, lowered text) batches: one
+    (id, h0..h{k-1}) row per document with at least ``shingle_n``
+    characters. Each distinct shingle is md5-hashed once per batch
+    (memo capped at ``memo_max`` entries); a document's signature is
+    the numpy min over its shingles' big-endian uint32 digest slices,
+    written as 8-char lowercase hex."""
+    n_seeds = -(-n_hashes // 4)
+    width = 4 * n_seeds  # uint32 slices per shingle
+    salts = [f"{s}:".encode() for s in range(n_seeds)]
+    names = ["id", *[f"h{i}" for i in range(n_hashes)]]
+
+    def run(batches):
+        md5 = hashlib.md5
+        for batch in batches:
+            memo: dict[str, bytes] = {}
+            keep: list[int] = []
+            mins: list[np.ndarray] = []
+            for r, t in enumerate(batch.column(1).to_pylist()):
+                if t is None or len(t) < shingle_n:
+                    continue
+                digests = []
+                for sh in {t[i : i + shingle_n] for i in range(len(t) - shingle_n + 1)}:
+                    d = memo.get(sh)
+                    if d is None:
+                        if len(memo) >= memo_max:
+                            memo.clear()
+                        b = sh.encode("utf-8")
+                        d = memo[sh] = b"".join([md5(salt + b).digest() for salt in salts])
+                    digests.append(d)
+                words = np.frombuffer(b"".join(digests), dtype=">u4")
+                mins.append(words.reshape(len(digests), width).min(axis=0))
+                keep.append(r)
+            if not keep:
+                continue
+            m = len(keep)
+            ids = batch.column(0)
+            if m < batch.num_rows:
+                ids = ids.take(pa.array(keep, type=pa.int64()))
+            # column-major hex: hash i's m values are one contiguous run
+            # of 8-char strings, sliced into a string array without copies
+            hexed = pa.py_buffer(
+                np.ascontiguousarray(np.vstack(mins)[:, :n_hashes].T)
+                .astype(">u4")
+                .tobytes()
+                .hex()
+                .encode("ascii")
+            )
+            offsets = pa.py_buffer(np.arange(0, 8 * (m + 1), 8, dtype=np.int32))
+            cols = [
+                pa.StringArray.from_buffers(m, offsets, hexed.slice(8 * m * i, 8 * m))
+                for i in range(n_hashes)
+            ]
+            yield pa.RecordBatch.from_arrays([ids, *cols], names=names)
+
+    return run
+
+
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, n_hashes: int = 8, shingle_n: int = 3
 ) -> DataFrame:
-    """(id, h0..h{k-1}) MinHash signature: h_i = min over shingles of
-    an 8-hex-char (32-bit) slice of md5('<i//4>:' || shingle),
-    compared lexicographically on hex — portable across engines and
-    stable across partitionings.
+    """(id, h0..h{k-1}) MinHash signature: h_i = min over the distinct
+    character ``shingle_n``-grams of lower(text) of an 8-hex-char
+    (32-bit) slice of md5('<i//4>:' || shingle), as lowercase hex —
+    portable across engines (the DuckDB oracles compute the same min
+    of hex substrings) and stable across partitionings. A document
+    with NULL text or fewer than ``shingle_n`` characters has no row.
+    Ids are unique (a document key, as at every caller): each input
+    row yields its own signature row, with the id column's type.
 
     One salted md5 yields FOUR independent 32-bit hash functions
     (slices of a 128-bit digest), so k hashes cost ceil(k/4) md5
-    calls per shingle instead of k — md5 dominates the signature
-    stage (measured 9.5 s → ~4 s for the sf0.1 star-edge pipeline).
-    Each digest is projected once before the aggregate so the slices
-    never recompute it. 32 bits per hash keeps min-collision
-    probability negligible (shingle vocabularies ≪ 2^32)."""
-    sh = shingle_relation(df, id_col, text_col, shingle_n)
-    n_seeds = -(-n_hashes // 4)
-    proj = sh.select(
-        "id",
-        *[
-            F.md5(F.concat(F.lit(f"{s}:"), F.col("sh"))).alias(f"m{s}")
-            for s in range(n_seeds)
-        ],
+    calls per shingle instead of k. 32 bits per hash keeps
+    min-collision probability negligible (shingle vocabularies ≪
+    2^32).
+
+    The pass is one ``mapInArrow`` over the spread document
+    partitions: no shingle explode, no shuffle on id, no aggregate.
+    Lower-casing stays on the JVM (Spark's case folding exactly);
+    the n-grams are cut in Python over code points, as Spark's
+    ``substr`` cuts them. Each distinct shingle is hashed once per
+    Arrow batch through a memo capped at ``_SHINGLE_MEMO_MAX``
+    entries, and each hash's minimum is a numpy min over big-endian
+    uint32 slices: on fixed-width lowercase hex the lexicographic
+    min the oracles take is the numeric min. The explode → md5 →
+    string-min aggregate this replaces sorted every (document,
+    shingle) row twice (a string min cannot run in a hash
+    aggregate): on the 5,920-document ``dedup_components`` corpus,
+    898k rows for 19,595 distinct shingles. Measured there on 4
+    cores: the signature stage alone 3.1-3.5 → 0.8 s (median of 6
+    runs), and the process CPU of a star-edge + components pass
+    26.6 → 13.4 s (median of 10 runs)."""
+    id_field = df.select(F.col(id_col)).schema[0]
+    schema = StructType(
+        [StructField("id", id_field.dataType, id_field.nullable)]
+        + [StructField(f"h{i}", StringType()) for i in range(n_hashes)]
     )
-    aggs = [
-        F.min(F.substring(F.col(f"m{i // 4}"), (i % 4) * 8 + 1, 8)).alias(f"h{i}")
-        for i in range(n_hashes)
-    ]
-    return proj.groupBy("id").agg(*aggs)
+    docs = spread(df).select(
+        F.col(id_col).alias("id"), F.lower(F.col(text_col)).alias("text")
+    )
+    return docs.mapInArrow(
+        _minhash_kernel(n_hashes, shingle_n, _SHINGLE_MEMO_MAX), schema
+    )
 
 
 def _band_bucket_array(n_hashes: int, band_size: int):
@@ -587,7 +675,13 @@ def connected_components(
     Contract: vertex ids are UNIQUE and every edge endpoint is drawn
     from ``vertices`` (true for every caller — edges are produced by
     LSH/banding over the same corpus the vertices come from). The
-    self-loop formulation below relies on it.
+    self-loop formulation below relies on it, and checks it at no
+    extra job: the convergence probe counts the labels in the same
+    aggregate as their sum, and a round with more labels than there
+    are vertices has pulled in an endpoint outside ``vertices``
+    (ValueError). An input edge (a, a) adds no vertex, and a
+    component made only of non-vertices is never reached, so it is
+    left out of the output.
 
     Each round (1) takes the min label over the closed neighborhood
     N(v) ∪ {v} — the edge relation carries an explicit self-loop per
@@ -625,7 +719,8 @@ def connected_components(
         )
     ).alias("e")
     sym = (
-        edges.select(both_dirs)
+        edges.filter(~F.col(src_col).eqNullSafe(F.col(dst_col)))
+        .select(both_dirs)
         .select("e.src", "e.dst")
         .unionAll(
             vertices.select(F.col(id_col).alias("src"), F.col(id_col).alias("dst"))
@@ -634,19 +729,22 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
 
-    # the self-loops ARE the vertex set: one row per vertex, served
-    # from the pinned edge relation
+    # the self-loops ARE the vertex set (input self-loop edges were
+    # dropped above): one row per vertex, served from the pinned edge
+    # relation
     labels = sym.filter(F.col("src") == F.col("dst")).select(
         F.col("src").alias("id"), F.col("src").alias("component")
     )
 
-    def _label_sum(frame: DataFrame):
-        return frame.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
+    def _label_sum(frame: DataFrame) -> tuple:
+        row = frame.agg(
+            F.sum(F.col("component").cast("decimal(38,0)")).alias("s"),
+            F.count(F.lit(1)).alias("n"),
+        ).collect()[0]
+        return row["s"], row["n"]
 
     global LAST_CC_ROUNDS
-    prev_sum = _label_sum(labels)
+    prev_sum, n_vertices = _label_sum(labels)
     converged = False
     for LAST_CC_ROUNDS in range(1, max_iterations + 1):
         # min label over the closed neighborhood (self-loops make
@@ -675,7 +773,13 @@ def connected_components(
             )
             .localCheckpoint(eager=False)
         )
-        cur_sum = _label_sum(new_labels)
+        cur_sum, n_labels = _label_sum(new_labels)
+        if n_labels > n_vertices:
+            raise ValueError(
+                "connected_components: an edge endpoint is not in vertices "
+                f"({n_labels} labels for {n_vertices} vertices after round "
+                f"{LAST_CC_ROUNDS})"
+            )
         labels = new_labels
         if cur_sum == prev_sum:
             converged = True

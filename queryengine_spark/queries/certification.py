@@ -275,6 +275,28 @@ VOID: dict[str, int] = {
     # SequenceExample streams (context + multi-entry FeatureLists);
     # identical projected rows, new bytes and wire walk:
     "source_tfrecord_examples": 11,
+    # round 13: connected_components became one join + one aggregate
+    # per round over a self-looped edge relation, and the JPEG
+    # (Huffman lookup table), GIF and TIFF (LZW) decoders were
+    # rewritten. Later, minhash_signatures became one mapInArrow pass
+    # (no explode, no string-min aggregate) and connected_components
+    # gained its edge-endpoint check. Identical results, but a touched
+    # kernel in every query below (each reaches minhash_signatures or
+    # connected_components, or decodes JPEG/GIF/TIFF), so the
+    # re-certification is the VOID discipline:
+    "dedup_minhash_suite": 13,
+    "dedup_components_suite": 13,
+    "dedup_keep_canonical": 13,
+    "dedup_incremental": 13,
+    "pipeline_llm_prep": 13,
+    "pipeline_leakage_safe_split": 13,
+    "pipeline_cc_ingest": 13,
+    "graph_pagerank": 13,
+    "graph_triangles": 13,
+    "graph_bfs_hops": 13,
+    "multimodal_image_decode": 13,
+    "dedup_image_phash": 13,
+    "multimodal_media_suite": 13,
 }
 
 

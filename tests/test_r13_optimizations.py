@@ -8,12 +8,16 @@ build, and initial labels served off the pinned edge relation — and
 the star backend's per-round duplicate-subtree elimination (both
 small-star output legs from one explode over the join). Components
 must be bit-identical to a driver-independent union-find on random
-graphs, path graphs (high diameter) and edgeless graphs.
+graphs, path graphs (high diameter) and edgeless graphs. An edge that
+reaches an id outside the vertex set fails the call instead of adding
+that id to the output.
 """
 
 from __future__ import annotations
 
 import random
+
+import pytest
 
 from queryengine_spark.operators.dedup import (
     connected_components,
@@ -107,3 +111,27 @@ def test_cc_duplicate_edges_and_both_directions(spark):
     want = _union_find_components(n, edges)
     assert _labels(connected_components(v, e, max_iterations=20)) == want
     assert _labels(connected_components_star(v, e, max_iterations=20)) == want
+
+
+def test_cc_edge_to_a_non_vertex_raises(spark):
+    v, e = _graph(spark, 4, [(0, 1), (2, 9)])
+    with pytest.raises(ValueError, match="not in vertices"):
+        connected_components(v, e).collect()
+
+
+def test_cc_chain_of_two_non_vertices_raises(spark):
+    v, e = _graph(spark, 4, [(0, 1), (3, 8), (8, 9)])
+    with pytest.raises(ValueError, match="not in vertices"):
+        connected_components(v, e).collect()
+
+
+def test_cc_unreached_non_vertices_and_self_loops_are_dropped(spark):
+    # a component of non-vertices only, and self-loop edges on a
+    # vertex and on a non-vertex: no endpoint outside vertices is
+    # reached, so the labels are the in-contract ones
+    n = 6
+    v, e = _graph(spark, n, [(0, 1), (1, 1), (7, 7), (8, 9), (3, 4)])
+    assert _labels(connected_components(v, e)) == _union_find_components(
+        n, [(0, 1), (3, 4)]
+    )
+
