@@ -14,8 +14,10 @@ streaming.
 Design principles (100 TB first):
 - Declarative DataFrame/SQL plans so Catalyst handles pushdown,
   pruning, join selection, AQE skew handling.
-- JVM-side expressions everywhere; the ONE Python hot path is the
-  Arrow-batched partial_ratio pandas UDF (no built-in equivalent).
+- JVM-side expressions everywhere; the Python hot path of the match
+  is the Arrow-batched partial_ratio pandas UDF (no built-in
+  equivalent), and every per-row media/source decoder crosses into
+  Python through the one ``plans.map_rows`` helper.
 - No driver-side collect loops in any operator.
 """
 

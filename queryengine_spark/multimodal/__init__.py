@@ -1,12 +1,12 @@
 """Multimodal column plumbing: treat image/audio/video as opaque
 ``binary`` payload columns with typed metadata, processed by
-Arrow-batched ``mapInPandas`` feature extractors.
+Arrow-batched ``map_rows`` feature extractors (``queryengine_spark.plans``).
 
 Decode strategy (see ``_decode_dims``): payloads are routed by MAGIC
 BYTES through every in-repo from-scratch decoder — uncompressed
 24-bit BMP (``multimodal.bmp``), 8-bit RGBA PNG (``multimodal.png``:
 zlib + all five scanline filters), GIF87a/89a (``multimodal.gif``:
-own LZW), baseline TIFF in both byte orders (``multimodal.tiff``:
+shared LZW), baseline TIFF in both byte orders (``multimodal.tiff``:
 IFD walk + PackBits — r6), and DC-profile baseline JPEG
 (``multimodal.jpeg``: own canonical-Huffman entropy decoder) —
 yielding TRUE dimensions with no media libraries installed. Formats outside those profiles try the
@@ -19,9 +19,7 @@ swapping in PIL/librosa/ffmpeg is a one-function change.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -32,6 +30,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from queryengine_spark.plans import map_rows
 
 #: schema of the multimodal asset relation
 ASSET_SCHEMA = StructType(
@@ -132,74 +132,18 @@ def _decode_dims(payload: bytes) -> tuple[int, int] | None:
 
 def extract_features(assets: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary payload —
-    the multimodal hot path. Runs as mapInPandas so one Python worker
-    processes whole record batches (never row-at-a-time)."""
+    the multimodal hot path: one map_rows pass, so one Python worker
+    processes whole record batches."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            widths, heights, hashes = [], [], []
-            for payload in pdf["payload"]:
-                b = bytes(payload) if payload is not None else b""
-                dims = _decode_dims(b)
-                w, h = dims if dims is not None else _fake_decode(b)
-                widths.append(w)
-                heights.append(h)
-                hashes.append(hashlib.md5(b).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": pdf["n_bytes"],
-                    "content_hash": hashes,
-                    "width": pd.Series(widths, dtype="int32"),
-                    "height": pd.Series(heights, dtype="int32"),
-                }
-            )
+    def features(aid, media_type, n_bytes, payload):
+        b = payload or b""
+        dims = _decode_dims(b)
+        w, h = dims if dims is not None else _fake_decode(b)
+        return [(aid, media_type, n_bytes, hashlib.md5(b).hexdigest(), w, h)]
 
-    return assets.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def extract_features_arrow(assets: DataFrame) -> DataFrame:
-    """mapInArrow twin of :func:`extract_features`: consumes/produces
-    pyarrow RecordBatches directly — no pandas materialization of the
-    binary column, the lowest-overhead Python path for large payloads
-    (pandas wraps each binary cell in a Python bytes object; Arrow
-    keeps them in one contiguous buffer until accessed). Same output,
-    tested equivalent."""
-    import pyarrow as pa
-
-    def run(batches):
-        for batch in batches:
-            payloads = batch.column("payload")
-            widths, heights, hashes = [], [], []
-            for cell in payloads:
-                b = cell.as_py() if cell.is_valid else b""
-                b = b or b""
-                dims = _decode_dims(b)
-                w, h = dims if dims is not None else _fake_decode(b)
-                widths.append(w)
-                heights.append(h)
-                hashes.append(hashlib.md5(b).hexdigest())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("asset_id"),
-                    batch.column("media_type"),
-                    batch.column("n_bytes"),
-                    pa.array(hashes, type=pa.string()),
-                    pa.array(widths, type=pa.int32()),
-                    pa.array(heights, type=pa.int32()),
-                ],
-                names=[
-                    "asset_id",
-                    "media_type",
-                    "n_bytes",
-                    "content_hash",
-                    "width",
-                    "height",
-                ],
-            )
-
-    return assets.mapInArrow(run, FEATURE_SCHEMA)
+    return map_rows(
+        assets, FEATURE_SCHEMA, features, "asset_id", "media_type", "n_bytes", "payload"
+    )
 
 
 RESIZED_SCHEMA = StructType(
@@ -258,7 +202,7 @@ def _bmp_bytes(arr) -> bytes:
 
 
 def resize_images(assets: DataFrame, width: int, height: int) -> DataFrame:
-    """Batch image resize over binary payloads (mapInPandas): REAL
+    """Batch image resize over binary payloads (map_rows): REAL
     decode through the magic-byte dispatch, exact nearest-neighbor
     resize (multimodal/mediaops.py — the index-arithmetic kernel the
     oracle certifies), re-encoded as a real 24-bit BMP payload that
@@ -268,31 +212,17 @@ def resize_images(assets: DataFrame, width: int, height: int) -> DataFrame:
     PIL there), so the Arrow round-trip and output contract stay real
     for every input."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from queryengine_spark.multimodal.mediaops import resize_nn
+    from queryengine_spark.multimodal.mediaops import resize_nn
 
-        for pdf in batches:
-            out = []
-            for p in pdf["payload"]:
-                if p is None:
-                    out.append(None)
-                    continue
-                b = bytes(p)
-                rgb = _decode_rgb(b)
-                if rgb is None:  # opaque: deterministic fake
-                    out.append(hashlib.md5(b).digest())
-                    continue
-                out.append(_bmp_bytes(resize_nn(rgb, width, height)))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "payload": out,
-                    "width": pd.Series([width] * len(pdf), dtype="int32"),
-                    "height": pd.Series([height] * len(pdf), dtype="int32"),
-                }
-            )
+    def resize(aid, p):
+        if p is None:
+            return [(aid, None, width, height)]
+        rgb = _decode_rgb(p)
+        if rgb is None:  # opaque: deterministic fake
+            return [(aid, hashlib.md5(p).digest(), width, height)]
+        return [(aid, _bmp_bytes(resize_nn(rgb, width, height)), width, height)]
 
-    return assets.mapInPandas(run, RESIZED_SCHEMA)
+    return map_rows(assets, RESIZED_SCHEMA, resize, "asset_id", "payload")
 
 
 FRAME_SCHEMA = StructType(
@@ -306,7 +236,7 @@ FRAME_SCHEMA = StructType(
 
 def sample_frames(assets: DataFrame, every_n: int = 10, max_frames: int = 4) -> DataFrame:
     """Frame sampling over binary payloads: a 1→N row-expanding
-    mapInPandas (output rows ≠ input rows). REAL extraction (r6):
+    map_rows (output rows ≠ input rows). REAL extraction (r6):
     AVI/MJPEG containers yield their sampled '00dc' JPEG frame bytes
     (each a complete decodable image), animated GIFs yield each
     sampled frame re-encoded as a 24-bit BMP, still images yield
@@ -315,51 +245,32 @@ def sample_frames(assets: DataFrame, every_n: int = 10, max_frames: int = 4) -> 
     deterministic byte-slice fake (the documented opaque fallback),
     so the row-expansion contract holds for every input."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from queryengine_spark.multimodal.avi import parse_avi
-        from queryengine_spark.multimodal.gif import decode_gif_frames
+    from queryengine_spark.multimodal.avi import parse_avi
+    from queryengine_spark.multimodal.gif import decode_gif_frames
 
-        step = max(every_n, 1)
+    step = max(every_n, 1)
 
-        def media_frames(b: bytes) -> list[bytes] | None:
-            if b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-                parsed = parse_avi(b)
-                return None if parsed is None else parsed[4]
-            if b[:6] in (b"GIF87a", b"GIF89a"):
-                dec = decode_gif_frames(b)
-                if dec is None:
-                    return None
-                return [_bmp_bytes(rgb) for _x, _y, rgb, _d in dec[2]]
-            if _decode_rgb(b) is not None:  # still image: one frame
-                return [b]
-            return None
+    def media_frames(b: bytes) -> list[bytes] | None:
+        if b[:4] == b"RIFF" and b[8:12] == b"AVI ":
+            parsed = parse_avi(b)
+            return None if parsed is None else parsed[4]
+        if b[:6] in (b"GIF87a", b"GIF89a"):
+            dec = decode_gif_frames(b)
+            if dec is None:
+                return None
+            return [_bmp_bytes(rgb) for _x, _y, rgb, _d in dec[2]]
+        if _decode_rgb(b) is not None:  # still image: one frame
+            return [b]
+        return None
 
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for aid, p in zip(pdf["asset_id"], pdf["payload"]):
-                if p is None:
-                    continue
-                b = bytes(p)
-                media = media_frames(b)
-                if media is not None:
-                    picked = media[::step][:max_frames]
-                    for i, fb in enumerate(picked):
-                        ids.append(aid)
-                        idxs.append(i)
-                        frames.append(fb)
-                    continue
-                # opaque fallback: deterministic byte slices
-                n = min(max_frames, max(len(b) // step, 1))
-                for i in range(n):
-                    ids.append(aid)
-                    idxs.append(i)
-                    frames.append(b[i * every_n : i * every_n + every_n])
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame": frames if frames else pd.Series([], dtype=object),
-                }
-            )
+    def frames(aid, b):
+        if b is None:
+            return []
+        media = media_frames(b)
+        if media is not None:
+            return [(aid, i, fb) for i, fb in enumerate(media[::step][:max_frames])]
+        # opaque fallback: deterministic byte slices
+        n = min(max_frames, max(len(b) // step, 1))
+        return [(aid, i, b[i * every_n : i * every_n + every_n]) for i in range(n)]
 
-    return assets.mapInPandas(run, FRAME_SCHEMA)
+    return map_rows(assets, FRAME_SCHEMA, frames, "asset_id", "payload")

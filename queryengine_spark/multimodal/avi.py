@@ -26,10 +26,8 @@ Synthesis formulas (mirrored in the oracle):
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -47,6 +45,7 @@ from queryengine_spark.multimodal.jpeg import (
     block_dc,
     decode_jpeg_dc,
 )
+from queryengine_spark.plans import map_rows
 
 VID_NF_BASE, VID_NF_MOD = 2, 4  # 2..5 frames
 VID_FM = 17  # per-frame formula offset (the GIF anim pattern)
@@ -236,17 +235,7 @@ VIDEO_FRAME_SCHEMA = StructType(
 
 
 def synthesize_avi(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            a = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "asset_id": a,
-                    "payload": [make_avi(int(v)) for v in a],
-                }
-            )
-
-    return ids.mapInPandas(run, AVI_ASSET_SCHEMA)
+    return map_rows(ids, AVI_ASSET_SCHEMA, lambda a: [(a, make_avi(a))], id_col)
 
 
 def video_frame_stats(assets: DataFrame, stride: int = 2) -> DataFrame:
@@ -256,28 +245,25 @@ def video_frame_stats(assets: DataFrame, stride: int = 2) -> DataFrame:
     unsampled frames' bytes are walked but never entropy-decoded —
     the chunk index is what a video pipeline seeks with."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                parsed = parse_avi(bytes(payload)) if payload is not None else None
-                if parsed is None:
-                    continue
-                w, h, nf, fps, frames = parsed
-                for f, fb in enumerate(frames):
-                    if f % stride:
-                        continue
-                    img = decode_jpeg_dc(fb)
-                    if img is None or img.shape != (h, w):
-                        continue
-                    rows.append(
-                        (
-                            int(aid), f, nf, fps, w, h,
-                            int(img.astype(np.int64).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_FRAME_SCHEMA.fields]
-            )
+    return sampled_frame_stats(assets, parse_avi, stride)
 
-    return assets.mapInPandas(run, VIDEO_FRAME_SCHEMA)
+
+def sampled_frame_stats(assets: DataFrame, parse, stride: int) -> DataFrame:
+    """One VIDEO_FRAME_SCHEMA row per decodable sampled frame of every
+    container ``parse`` understands (it returns ``(w, h, n_frames,
+    fps, frame_payloads)`` or None) — shared by the AVI and MP4 legs."""
+
+    def sampled(aid, payload):
+        parsed = parse(payload) if payload is not None else None
+        if parsed is None:
+            return
+        w, h, nf, fps, frames = parsed
+        for f, fb in enumerate(frames):
+            if f % stride:
+                continue
+            img = decode_jpeg_dc(fb)
+            if img is None or img.shape != (h, w):
+                continue
+            yield aid, f, nf, fps, w, h, int(img.astype(np.int64).sum())
+
+    return map_rows(assets, VIDEO_FRAME_SCHEMA, sampled, "asset_id", "payload")

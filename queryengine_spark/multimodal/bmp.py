@@ -16,10 +16,8 @@ all exactly right, not just that a header parsed.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -28,6 +26,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from queryengine_spark.plans import map_rows
 
 #: deterministic synthesis parameters (mirrored in the oracle SQL —
 #: keep in sync with queries/multimodal.py::BMP_DECODE_SQL)
@@ -461,19 +461,8 @@ BMP_STATS_SCHEMA = StructType(
 
 
 def synthesize_bmp(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
-    """One BMP per input row, built worker-side (mapInPandas)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_ = [int(a) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids_, dtype="int64"),
-                    "payload": [make_bmp(a) for a in ids_],
-                }
-            )
-
-    return ids.mapInPandas(run, BMP_ASSET_SCHEMA)
+    """One BMP per input row, built worker-side."""
+    return map_rows(ids, BMP_ASSET_SCHEMA, lambda a: [(a, make_bmp(a))], id_col)
 
 
 def bmp_pixel_stats(assets: DataFrame) -> DataFrame:
@@ -481,27 +470,15 @@ def bmp_pixel_stats(assets: DataFrame) -> DataFrame:
     (Arrow-batched; stats are order-invariant ints, so the result is
     engine-portable). Undecodable payloads → NULL stats."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("asset_id", "width", "height", "n_px", "sum_r", "sum_g", "sum_b")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                out["asset_id"].append(int(aid))
-                img = decode_bmp(bytes(payload)) if payload is not None else None
-                if img is None:
-                    for k in ("width", "height", "n_px", "sum_r", "sum_g", "sum_b"):
-                        out[k].append(None)
-                    continue
-                h, w, _ = img.shape
-                s = img.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px"].append(w * h)
-                out["sum_r"].append(int(s[0]))
-                out["sum_g"].append(int(s[1]))
-                out["sum_b"].append(int(s[2]))
-            yield pd.DataFrame(out)
+    def stats(aid, payload):
+        img = decode_bmp(payload) if payload is not None else None
+        if img is None:
+            return [(aid,)]
+        h, w, _ = img.shape
+        r, g, b = (int(v) for v in img.reshape(-1, 3).astype(np.int64).sum(axis=0))
+        return [(aid, w, h, w * h, r, g, b)]
 
-    return assets.mapInPandas(run, BMP_STATS_SCHEMA)
+    return map_rows(assets, BMP_STATS_SCHEMA, stats, "asset_id", "payload")
 
 
 def synthesize_bmp_mixed(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
@@ -518,66 +495,5 @@ def synthesize_bmp_mixed(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
             return make_bmp8(a)
         return make_bmp4_rle(a) if a % 8 == 7 else make_bmp8_rle(a)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_ = [int(a) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids_, dtype="int64"),
-                    "payload": [_mk(a) for a in ids_],
-                }
-            )
+    return map_rows(ids, BMP_ASSET_SCHEMA, lambda a: [(a, _mk(a))], id_col)
 
-    return ids.mapInPandas(run, BMP_ASSET_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# WAV audio family — moved to ``multimodal/wav.py`` in round 10 (file
-# naming hygiene). Public names re-exported here so existing imports
-# (queries, mediaops, streaming, tests) keep working unchanged.
-# ---------------------------------------------------------------------------
-from queryengine_spark.multimodal.wav import (  # noqa: E402,F401
-    ADPCM_BLOCK_ALIGN,
-    IMA_INDEX_TABLE,
-    IMA_STEP_TABLE,
-    STEREO_OFF,
-    ALAW_A_MULT,
-    ALAW_I_MULT,
-    ULAW_A_MULT,
-    ULAW_BIAS,
-    ULAW_I_MULT,
-    WAV24_A_MULT,
-    WAV24_HALF,
-    WAV24_I_MULT,
-    WAV24_MOD,
-    WAV_A_MULT,
-    WAV_I_MULT,
-    WAV_N_MOD,
-    WAV_S_MOD,
-    WAV_STATS_SCHEMA,
-    _ima_encode,
-    _ima_step,
-    _sample,
-    _sample24,
-    _sample_st,
-    _alaw_byte,
-    _ulaw_byte,
-    _wav_container,
-    decode_adpcm_wav,
-    decode_pcm_wav,
-    make_pcm_wav,
-    make_pcm_wav24,
-    make_pcm_wav_alaw,
-    make_pcm_wav_f32,
-    make_pcm_wav_multi,
-    make_pcm_wav_stereo,
-    make_pcm_wav_ulaw,
-    make_wav_adpcm,
-    pack_int24,
-    synthesize_pcm_wav,
-    synthesize_wav_mixed,
-    alaw2linear,
-    ulaw2linear,
-    wav_audio_params,
-    wav_sample_stats,
-)

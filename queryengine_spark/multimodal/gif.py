@@ -1,6 +1,6 @@
 """Real GIF decode, no media libraries: GIF87a's pixel path is LZW
-(pure arithmetic — implemented here from the published algorithm,
-both directions) over palette indices, so the full pipeline runs for
+(pure arithmetic — the shared engine in ``multimodal/lzw.py``,
+both directions, under ``GIF_LZW``) over palette indices, so the full pipeline runs for
 real in this sandbox, completing the decoder set (BMP: struct+numpy,
 PNG: zlib+filters, WAV: RIFF walk, GIF: LZW). Only JPEG remains a
 documented stub (its entropy coding + DCT needs a real codec).
@@ -21,10 +21,8 @@ cannot cancel out.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -33,6 +31,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from queryengine_spark.multimodal.lzw import LzwRules, lzw_decode, lzw_encode
+from queryengine_spark.plans import map_rows
 
 #: deterministic synthesis parameters (mirrored in the oracle SQL —
 #: keep in sync with queries/addenda.py::MULTIMODAL_GIF_DECODE_SQL)
@@ -53,169 +54,8 @@ def palette_rgb(i: int) -> tuple[int, int, int]:
     return (PAL_RM * i) % 256, (PAL_GM * i + 1) % 256, (PAL_BM * i + 2) % 256
 
 
-# ------------------------------------------------------------------- LZW
-
-_MAX_CODE = 4096
-
-
-def lzw_encode(data: bytes, min_code_size: int = 8) -> bytes:
-    """GIF-variant LZW: variable code width starting at
-    min_code_size+1, CLEAR/EOI codes, LSB-first bit packing, table
-    reset at 4096 entries.
-
-    Code widths come from an explicit SIMULATION of the decoder's
-    table growth (the decoder adds one entry after every code it
-    reads except the first after a clear, and widens when its table
-    size reaches 2^width). Tracking the encoder's own ``next_code``
-    instead is the classic trap: the two counters drift by one at the
-    final data code, so a table that hits exactly 2^width on the last
-    add makes the decoder read EOI one bit wider than the encoder
-    wrote it — found by hypothesis (tests/test_codec_properties.py),
-    reproduced at min_code_size=2 with a 12-symbol input."""
-    clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
-
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    # simulated decoder state: table size and current code width
-    dec_len = eoi + 1
-    dec_width = min_code_size + 1
-    first_after_clear = True
-
-    def emit(code: int) -> None:
-        """Write ``code`` at the simulated decoder's width, then
-        advance the simulation exactly as the decoder will."""
-        nonlocal acc, nbits, dec_len, dec_width, first_after_clear
-        acc |= code << nbits
-        nbits += dec_width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-        if code == clear:
-            dec_len = eoi + 1
-            dec_width = min_code_size + 1
-            first_after_clear = True
-        elif code != eoi:
-            if first_after_clear:
-                first_after_clear = False
-            elif dec_len < _MAX_CODE:
-                dec_len += 1
-                if dec_len >= (1 << dec_width) and dec_width < 12:
-                    dec_width += 1
-
-    # dictionary keyed on (prefix code, next byte) int pairs — every
-    # table string is exactly (string of its prefix code) + byte, so
-    # this is the textbook allocation-free form of the same table
-    # (the former bytes-concat keys were the encode hot spot)
-    table: dict[tuple[int, int], int] = {}
-    next_code = eoi + 1
-    emit(clear)
-    cur = -1  # code of the current match; -1 = empty
-    for byte in data:
-        if cur < 0:
-            cur = byte
-            continue
-        nc = table.get((cur, byte))
-        if nc is not None:
-            cur = nc
-            continue
-        emit(cur)
-        if next_code < _MAX_CODE:
-            table[(cur, byte)] = next_code
-            next_code += 1
-        else:
-            emit(clear)
-            table.clear()
-            next_code = eoi + 1
-        cur = byte
-    if cur >= 0:
-        emit(cur)
-    emit(eoi)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-#: min_code_size → initial decoder table (singles + CLEAR/EOI slots);
-#: rebuilt per clear before, which showed up in the decode profile
-_BASE_TABLES: dict[int, list[bytes]] = {}
-
-
-def _base_table(min_code_size: int) -> list[bytes]:
-    t = _BASE_TABLES.get(min_code_size)
-    if t is None:
-        t = [bytes([i]) for i in range(1 << min_code_size)] + [b"", b""]
-        _BASE_TABLES[min_code_size] = t
-    return t
-
-
-def lzw_decode(data: bytes, min_code_size: int = 8) -> bytes | None:
-    """Inverse of :func:`lzw_encode` (handles the KwKwK case where a
-    code is referenced in the step that defines it)."""
-    clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
-    total_bits = len(data) * 8
-    pos = 0  # bit position (LSB-first)
-    bitbuf = 0  # unread bits, next bit = LSB
-    bitcnt = 0
-    bytepos = 0
-
-    def read(width: int) -> int | None:
-        # buffered LSB-first reader (the per-bit divmod loop was the
-        # decode hot spot — ~7 s at sf0.1); same truncation contract:
-        # None when fewer than ``width`` bits remain
-        nonlocal pos, bitbuf, bitcnt, bytepos
-        if pos + width > total_bits:
-            return None
-        while bitcnt < width:
-            bitbuf |= data[bytepos] << bitcnt
-            bytepos += 1
-            bitcnt += 8
-        val = bitbuf & ((1 << width) - 1)
-        bitbuf >>= width
-        bitcnt -= width
-        pos += width
-        return val
-
-    out = bytearray()
-    table: list[bytes] = []
-    width = min_code_size + 1
-    prev: bytes | None = None
-    base = _base_table(min_code_size)
-
-    def reset() -> None:
-        nonlocal table, width, prev
-        table = base.copy()
-        width = min_code_size + 1
-        prev = None
-
-    reset()
-    while True:
-        code = read(width)
-        if code is None:
-            return None  # truncated stream (no EOI)
-        if code == clear:
-            reset()
-            continue
-        if code == eoi:
-            return bytes(out)
-        if prev is None:
-            if code >= len(table):
-                return None
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-        elif code == len(table):
-            entry = prev + prev[:1]  # KwKwK
-        else:
-            return None
-        out += entry
-        if prev is not None and len(table) < _MAX_CODE:
-            table.append(prev + entry[:1])
-            if len(table) >= (1 << width) and width < 12:
-                width += 1
-        prev = entry
+#: GIF's LZW rules: LSB-first codes, widen at 2^w, reset at 4096
+GIF_LZW = LzwRules(msb_first=False, early_change=0, max_table=4096)
 
 
 # ------------------------------------------------------------------- GIF
@@ -229,7 +69,7 @@ def make_gif(asset_id: int) -> bytes:
     idx = bytes(
         pixel_index(asset_id, x, y) for y in range(h) for x in range(w)
     )
-    lzw = lzw_encode(idx, 8)
+    lzw = lzw_encode(idx, 8, GIF_LZW)
     blocks = bytearray()
     for i in range(0, len(lzw), 255):
         chunk = lzw[i : i + 255]
@@ -273,7 +113,7 @@ def make_gif_lct(asset_id: int) -> bytes:
     idx = bytes(
         pixel_index(asset_id, x, y) for y in range(h) for x in range(w)
     )
-    lzw = lzw_encode(idx, 8)
+    lzw = lzw_encode(idx, 8, GIF_LZW)
     blocks = bytearray()
     for i in range(0, len(lzw), 255):
         chunk = lzw[i : i + 255]
@@ -317,7 +157,7 @@ def make_gif_interlaced(asset_id: int) -> bytes:
         for y in range(h)
     ]
     idx = b"".join(rows[y] for y in interlace_order(h))
-    lzw = lzw_encode(idx, 8)
+    lzw = lzw_encode(idx, 8, GIF_LZW)
     blocks = bytearray()
     for i in range(0, len(lzw), 255):
         chunk = lzw[i : i + 255]
@@ -374,7 +214,7 @@ def make_gif_animated(asset_id: int) -> bytes:
         idx = bytes(
             anim_index(asset_id, f, x, y) for y in range(h) for x in range(w)
         )
-        lzw = lzw_encode(idx, 8)
+        lzw = lzw_encode(idx, 8, GIF_LZW)
         out += b","
         out += struct.pack("<HHHHB", 0, 0, w, h, 0)
         out += bytes([8])
@@ -462,7 +302,7 @@ def decode_gif_frames(
             lzw += b[pos + 1 : pos + 1 + blen]
             pos += 1 + blen
         pos += 1  # sub-block terminator
-        idx = lzw_decode(bytes(lzw), min_code)
+        idx = lzw_decode(bytes(lzw), min_code, GIF_LZW)
         if idx is None or len(idx) != w * h or w <= 0 or h <= 0:
             return None
         arr = np.frombuffer(idx, np.uint8).reshape(h, w)
@@ -531,7 +371,7 @@ def decode_gif(b: bytes) -> np.ndarray | None:
                 return None
             lzw += b[pos + 1 : pos + 1 + blen]
             pos += 1 + blen
-        idx = lzw_decode(bytes(lzw), min_code)
+        idx = lzw_decode(bytes(lzw), min_code, GIF_LZW)
         if idx is None or len(idx) != w * h or w <= 0 or h <= 0:
             return None
         arr = np.frombuffer(idx, np.uint8).reshape(h, w)
@@ -574,7 +414,6 @@ def synthesize_gif_mixed(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
     delays and a NETSCAPE loop extension — r6), odd → INTERLACED
     GIF87a (r5; same palette/pixels as the plain leg — the
     deinterlace permutation is pinned by hand-order tests)."""
-    import pandas as pd
 
     def _mk(a: int) -> bytes:
         if a % 2 == 1:
@@ -583,31 +422,11 @@ def synthesize_gif_mixed(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
             return make_gif(a)
         return make_gif_lct(a) if a % 8 == 2 else make_gif_animated(a)
 
-    def run(batches):
-        for pdf in batches:
-            ids_ = [int(a) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids_, dtype="int64"),
-                    "payload": [_mk(a) for a in ids_],
-                }
-            )
-
-    return ids.mapInPandas(run, GIF_ASSET_SCHEMA)
+    return map_rows(ids, GIF_ASSET_SCHEMA, lambda a: [(a, _mk(a))], id_col)
 
 
 def synthesize_gif(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_ = [int(a) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids_, dtype="int64"),
-                    "payload": [make_gif(a) for a in ids_],
-                }
-            )
-
-    return ids.mapInPandas(run, GIF_ASSET_SCHEMA)
+    return map_rows(ids, GIF_ASSET_SCHEMA, lambda a: [(a, make_gif(a))], id_col)
 
 
 def gif_pixel_stats(assets: DataFrame) -> DataFrame:
@@ -615,38 +434,18 @@ def gif_pixel_stats(assets: DataFrame) -> DataFrame:
     width/height from the screen descriptor, n_px the total decoded
     pixels across frames, channel sums across frames, the frame
     count, and the summed GCE delays (0 for still images)."""
-    cols = (
-        "width", "height", "n_px", "sum_r", "sum_g", "sum_b",
-        "n_frames", "total_delay_cs",
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("asset_id", *cols)}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                out["asset_id"].append(int(aid))
-                res = (
-                    decode_gif_frames(bytes(payload))
-                    if payload is not None
-                    else None
-                )
-                if res is None:
-                    for k in cols:
-                        out[k].append(None)
-                    continue
-                sw, sh, frames = res
-                s = np.zeros(3, dtype=np.int64)
-                n_px = 0
-                for _x0, _y0, img, _delay in frames:
-                    s += img.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                    n_px += img.shape[0] * img.shape[1]
-                out["width"].append(sw)
-                out["height"].append(sh)
-                out["n_px"].append(n_px)
-                for k, v in zip(("sum_r", "sum_g", "sum_b"), s):
-                    out[k].append(int(v))
-                out["n_frames"].append(len(frames))
-                out["total_delay_cs"].append(sum(f[3] for f in frames))
-            yield pd.DataFrame(out)
+    def stats(aid, payload):
+        res = decode_gif_frames(payload) if payload is not None else None
+        if res is None:
+            return [(aid,)]
+        sw, sh, frames = res
+        s = np.zeros(3, dtype=np.int64)
+        n_px = 0
+        for _x0, _y0, img, _delay in frames:
+            s += img.reshape(-1, 3).astype(np.int64).sum(axis=0)
+            n_px += img.shape[0] * img.shape[1]
+        r, g, b = (int(v) for v in s)
+        return [(aid, sw, sh, n_px, r, g, b, len(frames), sum(f[3] for f in frames))]
 
-    return assets.mapInPandas(run, GIF_STATS_SCHEMA)
+    return map_rows(assets, GIF_STATS_SCHEMA, stats, "asset_id", "payload")

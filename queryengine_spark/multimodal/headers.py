@@ -6,7 +6,7 @@ layout: this module sniffs magic bytes and struct-unpacks the
 dimension/rate fields for PNG, GIF, JPEG and RIFF/WAVE with only the
 standard library. That is the real first stage of any 100 TB media
 ingest (format routing + metadata extraction before the expensive
-decode), run as Arrow-batched ``mapInPandas`` so whole record batches
+decode), run as one Arrow-batched ``map_rows`` pass so whole record batches
 cross the Python boundary at once.
 
 The paired synthesizer builds *valid* minimal containers (correct
@@ -24,9 +24,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -36,6 +34,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from queryengine_spark.plans import map_rows
 
 # ---------------------------------------------------------------- synthesis
 
@@ -101,30 +101,15 @@ ASSET_SCHEMA = StructType(
 def synthesize_media(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
     """One valid media container per input row: PNG for even ids, WAV
     for odd ids, parameters = arithmetic on the id (see png_params /
-    wav_params). mapInPandas so payload bytes are built batch-at-a-time
+    wav_params). One map_rows pass, so payload bytes are built batch-at-a-time
     worker-side — the driver never sees them."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_, types, payloads = [], [], []
-            for aid in pdf[id_col]:
-                aid = int(aid)
-                if aid % 2 == 0:
-                    payloads.append(make_png(*png_params(aid)))
-                    types.append("image/png")
-                else:
-                    payloads.append(make_wav(*wav_params(aid)))
-                    types.append("audio/wav")
-                ids_.append(aid)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids_, dtype="int64"),
-                    "media_type": types,
-                    "payload": payloads,
-                }
-            )
+    def synth(aid):
+        if aid % 2 == 0:
+            return [(aid, "image/png", make_png(*png_params(aid)))]
+        return [(aid, "audio/wav", make_wav(*wav_params(aid)))]
 
-    return ids.mapInPandas(run, ASSET_SCHEMA)
+    return map_rows(ids, ASSET_SCHEMA, synth, id_col)
 
 
 # ---------------------------------------------------------------- parsing
@@ -231,21 +216,9 @@ def parse_media_headers(assets: DataFrame) -> DataFrame:
     is the cheap pre-pass that partitions a mixed media lake by format
     before expensive per-format decode stages."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, p in zip(pdf["asset_id"], pdf["payload"]):
-                b = bytes(p) if p is not None else b""
-                rows.append({"asset_id": int(aid), **parse_header(b), "n_bytes": len(b)})
-            out = pd.DataFrame(rows)
-            for c, dt in (
-                ("width", "Int32"),
-                ("height", "Int32"),
-                ("sample_rate", "Int32"),
-                ("channels", "Int32"),
-                ("duration_ms", "Int64"),
-            ):
-                out[c] = out[c].astype(dt)
-            yield out
+    def parse(aid, p):
+        b = p or b""
+        # parse_header's dict is in HEADER_SCHEMA order
+        return [(aid, *parse_header(b).values(), len(b))]
 
-    return assets.mapInPandas(run, HEADER_SCHEMA)
+    return map_rows(assets, HEADER_SCHEMA, parse, "asset_id", "payload")

@@ -57,10 +57,8 @@ through the generic encoder.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -69,6 +67,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from queryengine_spark.plans import map_rows
 
 #: deterministic synthesis parameters (mirrored in the oracle SQL —
 #: keep in sync with queries/addenda.py::MULTIMODAL_JPEG_DECODE_SQL).
@@ -2663,17 +2663,7 @@ JPEG_STATS_SCHEMA = StructType(
 
 
 def synthesize_jpeg(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_ = [int(a) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids_, dtype="int64"),
-                    "payload": [make_jpeg_dc(a) for a in ids_],
-                }
-            )
-
-    return ids.mapInPandas(run, JPEG_ASSET_SCHEMA)
+    return map_rows(ids, JPEG_ASSET_SCHEMA, lambda a: [(a, make_jpeg_dc(a))], id_col)
 
 
 JPEG_FULL_SCHEMA = StructType(
@@ -2747,17 +2737,7 @@ def synthesize_jpeg_mixed(ids: DataFrame, id_col: str = "asset_id") -> DataFrame
             return make_jpeg_420(a, dri=(a % 16 == 6))
         return make_jpeg_411(a, dri=(a % 16 == 14))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_ = [int(a) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids_, dtype="int64"),
-                    "payload": [_mk(a) for a in ids_],
-                }
-            )
-
-    return ids.mapInPandas(run, JPEG_ASSET_SCHEMA)
+    return map_rows(ids, JPEG_ASSET_SCHEMA, lambda a: [(a, _mk(a))], id_col)
 
 
 def jpeg_full_stats(assets: DataFrame) -> DataFrame:
@@ -2769,161 +2749,100 @@ def jpeg_full_stats(assets: DataFrame) -> DataFrame:
     payload: the 3-component AC paths derive coefficient AND pixel
     views from the same decoded grids (r7 ADVICE — the prog3/seq
     pixel twins used to re-run the full entropy decode)."""
-    pix_cols = ("width", "height", "n_px", "sum_lum", "min_lum", "max_lum")
-    co_cols = ("n_blocks", "sum_dc_dq", "sum_ac_dq", "sum_abs_ac_dq", "n_nonzero_ac")
-    ycc_cols = ("sum_cb", "sum_cr")
-    rgb_cols = ("sum_r", "sum_g", "sum_b", "sum_r_c", "sum_g_c", "sum_b_c")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def emit_rgb(out, w, h, planes, hv):
-            rgb = planes3_to_rgb(w, h, planes, hv)
-            rgb_c = planes3_to_rgb_centered(w, h, planes, hv)
-            if rgb is None or rgb_c is None:
-                for k in rgb_cols:
-                    out[k].append(None)
-                return
-            for cols, (r, g, bl) in (
-                (("sum_r", "sum_g", "sum_b"), rgb),
-                (("sum_r_c", "sum_g_c", "sum_b_c"), rgb_c),
-            ):
-                out[cols[0]].append(int(r.sum()))
-                out[cols[1]].append(int(g.sum()))
-                out[cols[2]].append(int(bl.sum()))
+    def rgb_sums(w, h, planes, hv):
+        rgb = planes3_to_rgb(w, h, planes, hv)
+        rgb_c = planes3_to_rgb_centered(w, h, planes, hv)
+        if rgb is None or rgb_c is None:
+            return (None,) * 6
+        return tuple(int(c.sum()) for c in (*rgb, *rgb_c))
 
-        for pdf in batches:
-            out = {
-                k: []
-                for k in ("asset_id", *pix_cols, *co_cols, *ycc_cols, *rgb_cols)
-            }
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                out["asset_id"].append(int(aid))
-                b = bytes(payload) if payload is not None else b""
-                ll = decode_jpeg_lossless(b)
-                if ll is not None:
-                    # r9: SOF3 lossless — exact samples, no blocks/
-                    # coefficients/chroma to report (the NULLs are the
-                    # honest answer, not a refusal: the stream has no
-                    # DCT domain)
-                    w, h, img, _prec = ll
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["n_px"].append(w * h)
-                    out["sum_lum"].append(int(img.sum()))
-                    out["min_lum"].append(int(img.min()))
-                    out["max_lum"].append(int(img.max()))
-                    for k in (*co_cols, *ycc_cols, *rgb_cols):
-                        out[k].append(None)
-                    continue
-                res = decode_jpeg_dc_planes_hv(b)
-                if res is not None and len(res[2]) == 3:
-                    # 3-component DC-only pixel path: 4:4:4 AND the
-                    # subsampled profiles (r6) — chroma stats are
-                    # exact in each plane's NATIVE resolution; RGB
-                    # sums at FULL resolution via the r8 integer
-                    # upsample + Rec.601 path
-                    w, h, comps3, hv3 = res
-                    y, cb, cr = (p.astype(np.int64) for p in comps3)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["n_px"].append(w * h)
-                    out["sum_lum"].append(int(y.sum()))
-                    out["min_lum"].append(int(y.min()))
-                    out["max_lum"].append(int(y.max()))
-                    out["sum_cb"].append(int(cb.sum()))
-                    out["sum_cr"].append(int(cr.sum()))
-                    emit_rgb(out, w, h, comps3, hv3)
-                    nblk = 0
-                    dcsum = 0
-                    for p in (y, cb, cr):
-                        ph, pw = p.shape
-                        nblk += ((ph + 7) // 8) * ((pw + 7) // 8)
-                        # each block is a constant plane, so its
-                        # top-left sample recovers the dequantized dc
-                        # exactly: dc_dq = (sample - 128) × 8
-                        dcsum += int((p[::8, ::8] - 128).sum()) * 8
-                    out["n_blocks"].append(nblk)
-                    out["sum_dc_dq"].append(dcsum)
-                    out["sum_ac_dq"].append(0)
-                    out["sum_abs_ac_dq"].append(0)
-                    out["n_nonzero_ac"].append(0)
-                    continue
-                co = decode_jpeg_coeffs(b)
-                multi = None
-                if co is None:
-                    # ONE progressive parse serves the single- AND
-                    # 3-component shapes (decode_jpeg_coeffs_prog
-                    # used to parse fully just to learn the count)
-                    prog = _decode_progressive(b)
-                    if prog is not None:
-                        comps, (w_, h_), grids, pw, wb, hb = prog
-                        if len(comps) == 1:
-                            co = (
-                                w_,
-                                h_,
-                                _dequant_grid(
-                                    grids[0], comps[0][0], pw[0], wb[0], hb[0]
-                                ),
-                            )
-                        else:
-                            multi = _multi3_from_prog(prog)
-                    else:
-                        multi = _multi3_from_seq(_decode_sequential_multi(b))
-                if multi is not None:
-                    # 3-component AC-bearing profiles: progressive
-                    # (r6) or SEQUENTIAL interleaved (r7 — the
-                    # dominant web shape). Exact coefficient stats
-                    # summed across components; luma stats on the
-                    # luma plane, chroma sums per native plane, RGB
-                    # sums at full resolution (r8)
-                    w, h, arrs, planes, hvm = multi
-                    allc = np.concatenate(arrs, axis=0)
-                    ac = np.delete(allc, 0, axis=1)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    y, cb, cr = (p.astype(np.int64) for p in planes)
-                    out["n_px"].append(int(y.size))
-                    out["sum_lum"].append(int(y.sum()))
-                    out["min_lum"].append(int(y.min()))
-                    out["max_lum"].append(int(y.max()))
-                    out["n_blocks"].append(int(allc.shape[0]))
-                    out["sum_dc_dq"].append(int(allc[:, 0].sum()))
-                    out["sum_ac_dq"].append(int(ac.sum()))
-                    out["sum_abs_ac_dq"].append(int(np.abs(ac).sum()))
-                    out["n_nonzero_ac"].append(int((ac != 0).sum()))
-                    out["sum_cb"].append(int(cb.sum()))
-                    out["sum_cr"].append(int(cr.sum()))
-                    emit_rgb(out, w, h, planes, hvm)
-                    continue
-                if co is None:
-                    for k in (*pix_cols, *co_cols, *ycc_cols, *rgb_cols):
-                        out[k].append(None)
-                    continue
-                w, h, coefs = co
-                out["width"].append(w)
-                out["height"].append(h)
-                # r7: the pixel profile runs the pinned fixed-point
-                # integer IDCT on EVERY single-component payload —
-                # AC-bearing scans included. On DC-only blocks it
-                # reproduces dc + 128 bit-exactly, so the legacy
-                # collapse profile is a strict special case.
-                bw, bh = (w + 7) // 8, (h + 7) // 8
-                px = idct8_fixed(coefs)
-                img = px.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3)
-                img = img.reshape(bh * 8, bw * 8)[:h, :w]
-                out["n_px"].append(w * h)
-                out["sum_lum"].append(int(img.sum()))
-                out["min_lum"].append(int(img.min()))
-                out["max_lum"].append(int(img.max()))
-                ac = np.delete(coefs, 0, axis=1)
-                out["n_blocks"].append(int(coefs.shape[0]))
-                out["sum_dc_dq"].append(int(coefs[:, 0].sum()))
-                out["sum_ac_dq"].append(int(ac.sum()))
-                out["sum_abs_ac_dq"].append(int(np.abs(ac).sum()))
-                out["n_nonzero_ac"].append(int((ac != 0).sum()))
-                out["sum_cb"].append(None)
-                out["sum_cr"].append(None)
-                for k in rgb_cols:
-                    out[k].append(None)
-            yield pd.DataFrame(out)
+    def stats(aid, payload):
+        b = payload or b""
+        ll = decode_jpeg_lossless(b)
+        if ll is not None:
+            # r9: SOF3 lossless — exact samples, no blocks/
+            # coefficients/chroma to report (the NULLs are the
+            # honest answer, not a refusal: the stream has no
+            # DCT domain)
+            w, h, img, _prec = ll
+            return [(aid, w, h, w * h, int(img.sum()), int(img.min()), int(img.max()))]
+        res = decode_jpeg_dc_planes_hv(b)
+        if res is not None and len(res[2]) == 3:
+            # 3-component DC-only pixel path: 4:4:4 AND the
+            # subsampled profiles (r6) — chroma stats are
+            # exact in each plane's NATIVE resolution; RGB
+            # sums at FULL resolution via the r8 integer
+            # upsample + Rec.601 path
+            w, h, comps3, hv3 = res
+            y, cb, cr = (p.astype(np.int64) for p in comps3)
+            nblk = 0
+            dcsum = 0
+            for p in (y, cb, cr):
+                ph, pw = p.shape
+                nblk += ((ph + 7) // 8) * ((pw + 7) // 8)
+                # each block is a constant plane, so its
+                # top-left sample recovers the dequantized dc
+                # exactly: dc_dq = (sample - 128) × 8
+                dcsum += int((p[::8, ::8] - 128).sum()) * 8
+            return [
+                (aid, w, h, w * h, int(y.sum()), int(y.min()), int(y.max()),
+                 nblk, dcsum, 0, 0, 0, int(cb.sum()), int(cr.sum()),
+                 *rgb_sums(w, h, comps3, hv3))
+            ]
+        co = decode_jpeg_coeffs(b)
+        multi = None
+        if co is None:
+            # ONE progressive parse serves the single- AND
+            # 3-component shapes (decode_jpeg_coeffs_prog
+            # used to parse fully just to learn the count)
+            prog = _decode_progressive(b)
+            if prog is not None:
+                comps, (w_, h_), grids, pw, wb, hb = prog
+                if len(comps) == 1:
+                    co = (
+                        w_,
+                        h_,
+                        _dequant_grid(grids[0], comps[0][0], pw[0], wb[0], hb[0]),
+                    )
+                else:
+                    multi = _multi3_from_prog(prog)
+            else:
+                multi = _multi3_from_seq(_decode_sequential_multi(b))
+        if multi is not None:
+            # 3-component AC-bearing profiles: progressive
+            # (r6) or SEQUENTIAL interleaved (r7 — the
+            # dominant web shape). Exact coefficient stats
+            # summed across components; luma stats on the
+            # luma plane, chroma sums per native plane, RGB
+            # sums at full resolution (r8)
+            w, h, arrs, planes, hvm = multi
+            allc = np.concatenate(arrs, axis=0)
+            ac = np.delete(allc, 0, axis=1)
+            y, cb, cr = (p.astype(np.int64) for p in planes)
+            return [
+                (aid, w, h, int(y.size), int(y.sum()), int(y.min()), int(y.max()),
+                 int(allc.shape[0]), int(allc[:, 0].sum()), int(ac.sum()),
+                 int(np.abs(ac).sum()), int((ac != 0).sum()),
+                 int(cb.sum()), int(cr.sum()), *rgb_sums(w, h, planes, hvm))
+            ]
+        if co is None:
+            return [(aid,)]
+        w, h, coefs = co
+        # r7: the pixel profile runs the pinned fixed-point
+        # integer IDCT on EVERY single-component payload —
+        # AC-bearing scans included. On DC-only blocks it
+        # reproduces dc + 128 bit-exactly, so the legacy
+        # collapse profile is a strict special case.
+        bw, bh = (w + 7) // 8, (h + 7) // 8
+        px = idct8_fixed(coefs)
+        img = px.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3)
+        img = img.reshape(bh * 8, bw * 8)[:h, :w]
+        ac = np.delete(coefs, 0, axis=1)
+        return [
+            (aid, w, h, w * h, int(img.sum()), int(img.min()), int(img.max()),
+             int(coefs.shape[0]), int(coefs[:, 0].sum()), int(ac.sum()),
+             int(np.abs(ac).sum()), int((ac != 0).sum()))
+        ]
 
-    return assets.mapInPandas(run, JPEG_FULL_SCHEMA)
+    return map_rows(assets, JPEG_FULL_SCHEMA, stats, "asset_id", "payload")

@@ -27,7 +27,7 @@ non-negative operands, where Spark ``div``, DuckDB ``//`` and Python
   zero crossings = #{i > win_start : sign(s[i-1]) ≠ sign(s[i])} with
   ``sign = (s < 0)`` — all within-window, no cross-window pairs.
 
-Scale: synthesis → decode → transform is one mapInPandas chain per
+Scale: synthesis → decode → transform is one map_rows chain per
 query (row-linear, zero shuffle, no driver state); outputs are small
 fixed-arity rows. At 100 TB the same chain runs unchanged — the only
 shuffle anywhere is the final oracle-ordering, which the driver adds.
@@ -35,10 +35,7 @@ shuffle anywhere is the final oracle-ordering, which the driver adds.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -47,6 +44,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from queryengine_spark.plans import map_rows
 
 #: resize target (thumbnail grid) — mirrored in the oracle SQL
 RZ_W, RZ_H = 8, 8
@@ -98,53 +97,22 @@ def image_ops_stats(assets: DataFrame) -> DataFrame:
     fixed-point-IDCT pixel path, grayscale replicated to RGB).
     Undecodable payloads are dropped, mirroring dhash_relation."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from queryengine_spark.multimodal.bmp import decode_bmp
-        from queryengine_spark.multimodal.gif import decode_gif
-        from queryengine_spark.multimodal.jpeg import decode_jpeg_rgb
-        from queryengine_spark.multimodal.png import decode_png
-        from queryengine_spark.multimodal.tiff import decode_tiff
+    from queryengine_spark.multimodal.phash import decode_image
 
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                b = bytes(payload)
-                arr = None
-                if b[:2] == b"BM":
-                    arr = decode_bmp(b)
-                elif b[:8] == b"\x89PNG\r\n\x1a\n":
-                    arr = decode_png(b)
-                elif b[:6] in (b"GIF87a", b"GIF89a"):
-                    arr = decode_gif(b)
-                elif b[:2] in (b"II", b"MM"):
-                    arr = decode_tiff(b)
-                elif b[:2] == b"\xff\xd8":
-                    # r8: color for 3-component payloads (integer
-                    # upsample + Rec.601), replicated gray otherwise
-                    arr = decode_jpeg_rgb(b)
-                if arr is None or arr.ndim != 3 or arr.shape[2] < 3:
-                    continue
-                rgb = arr[..., :3].astype(np.int64)
-                rz = resize_nn(rgb, RZ_W, RZ_H)
-                cr = center_crop(rgb)
-                rows.append(
-                    (
-                        int(aid),
-                        rgb.shape[1],
-                        rgb.shape[0],
-                        int(rz[..., 0].sum()),
-                        int(rz[..., 1].sum()),
-                        int(rz[..., 2].sum()),
-                        int(cr[..., 0].sum()),
-                        int(cr[..., 1].sum()),
-                        int(cr[..., 2].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_OPS_SCHEMA.fields]
-            )
+    def stats(aid, payload):
+        arr = decode_image(payload or b"")
+        if arr is None or arr.ndim != 3 or arr.shape[2] < 3:
+            return ()
+        rgb = arr[..., :3].astype(np.int64)
+        rz = resize_nn(rgb, RZ_W, RZ_H)
+        cr = center_crop(rgb)
+        return [
+            (aid, rgb.shape[1], rgb.shape[0],
+             *(int(rz[..., c].sum()) for c in range(3)),
+             *(int(cr[..., c].sum()) for c in range(3)))
+        ]
 
-    return assets.mapInPandas(run, IMAGE_OPS_SCHEMA)
+    return map_rows(assets, IMAGE_OPS_SCHEMA, stats, "asset_id", "payload")
 
 
 # --------------------------------------------------- frame sampling
@@ -171,40 +139,20 @@ def gif_frame_sample(ids: DataFrame, stride: int = FRAME_STRIDE) -> DataFrame:
     LZW-walk the stream anyway to reach frame f (GIF has no frame
     index), which is exactly what decode_gif_frames does."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from queryengine_spark.multimodal.gif import (
-            decode_gif_frames,
-            make_gif_animated,
-        )
+    from queryengine_spark.multimodal.gif import decode_gif_frames, make_gif_animated
 
-        for pdf in batches:
-            rows = []
-            for aid in pdf["asset_id"].astype("int64"):
-                a = int(aid)
-                dec = decode_gif_frames(make_gif_animated(a))
-                if dec is None:
-                    continue
-                _, _, frames = dec
-                for f, (_, _, rgb, delay) in enumerate(frames):
-                    if f % stride:
-                        continue
-                    c = rgb.astype(np.int64)
-                    rows.append(
-                        (
-                            a,
-                            f,
-                            int(delay),
-                            int(c.shape[0] * c.shape[1]),
-                            int(c[..., 0].sum()),
-                            int(c[..., 1].sum()),
-                            int(c[..., 2].sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FRAME_SAMPLE_SCHEMA.fields]
-            )
+    def frames(a):
+        dec = decode_gif_frames(make_gif_animated(a))
+        if dec is None:
+            return
+        for f, (_, _, rgb, delay) in enumerate(dec[2]):
+            if f % stride:
+                continue
+            c = rgb.astype(np.int64)
+            yield (a, f, int(delay), int(c.shape[0] * c.shape[1]),
+                   *(int(c[..., k].sum()) for k in range(3)))
 
-    return ids.select("asset_id").mapInPandas(run, FRAME_SAMPLE_SCHEMA)
+    return map_rows(ids, FRAME_SAMPLE_SCHEMA, frames, "asset_id")
 
 
 # ----------------------------------------------------- audio frames
@@ -221,46 +169,28 @@ AUDIO_FRAME_SCHEMA = StructType(
 
 
 def audio_frame_features(ids: DataFrame, win: int = AF_WIN) -> DataFrame:
-    """Synthesize mono 16-bit PCM WAVs (multimodal/bmp.py — the same
+    """Synthesize mono 16-bit PCM WAVs (multimodal/wav.py — the same
     RIFF writer the decode queries pin byte-by-byte), really decode
     through the RIFF chunk walk, then frame into non-overlapping
     ``win``-sample windows: one row per window with exact int64
     energy (Σ s²) and the zero-crossing count — the front half of any
     VAD / silence-trim / loudness-bucketing stage."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from queryengine_spark.multimodal.bmp import (
-            decode_pcm_wav,
-            make_pcm_wav,
-        )
+    from queryengine_spark.multimodal.wav import decode_pcm_wav, make_pcm_wav
 
-        for pdf in batches:
-            rows = []
-            for aid in pdf["asset_id"].astype("int64"):
-                a = int(aid)
-                dec = decode_pcm_wav(make_pcm_wav(a))
-                if dec is None:
-                    continue
-                _, s = dec
-                s = s.astype(np.int64)
-                neg = s < 0
-                for w0 in range(0, len(s), win):
-                    seg = s[w0 : w0 + win]
-                    nseg = neg[w0 : w0 + win]
-                    rows.append(
-                        (
-                            a,
-                            w0 // win,
-                            len(seg),
-                            int((seg * seg).sum()),
-                            int((nseg[1:] != nseg[:-1]).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_FRAME_SCHEMA.fields]
-            )
+    def windows(a):
+        dec = decode_pcm_wav(make_pcm_wav(a))
+        if dec is None:
+            return
+        s = dec[1].astype(np.int64)
+        neg = s < 0
+        for w0 in range(0, len(s), win):
+            seg = s[w0 : w0 + win]
+            nseg = neg[w0 : w0 + win]
+            yield (a, w0 // win, len(seg), int((seg * seg).sum()),
+                   int((nseg[1:] != nseg[:-1]).sum()))
 
-    return ids.select("asset_id").mapInPandas(run, AUDIO_FRAME_SCHEMA)
+    return map_rows(ids, AUDIO_FRAME_SCHEMA, windows, "asset_id")
 
 
 # ---------------------------------------------------------------- augment (r8)
@@ -307,51 +237,33 @@ def image_augment_stats(assets: DataFrame) -> DataFrame:
       rot270 : x' = y,     y' = w−1−x    (output h×w)
       fliplr : x' = w−1−x, y' = y
 
-    Row-linear mapInPandas, zero shuffle — the same scale shape as
+    Row-linear map_rows, zero shuffle — the same scale shape as
     every media transform."""
     from queryengine_spark.multimodal.tiff import decode_tiff
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(arr: np.ndarray, t: str) -> np.ndarray:
-            if t == "rot90":
-                return np.rot90(arr, k=-1)
-            if t == "rot180":
-                return np.rot90(arr, k=2)
-            if t == "rot270":
-                return np.rot90(arr, k=1)
-            return arr[:, ::-1]
+    def one(arr: np.ndarray, t: str) -> np.ndarray:
+        if t == "rot90":
+            return np.rot90(arr, k=-1)
+        if t == "rot180":
+            return np.rot90(arr, k=2)
+        if t == "rot270":
+            return np.rot90(arr, k=1)
+        return arr[:, ::-1]
 
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                arr = decode_tiff(bytes(payload) if payload is not None else b"")
-                if arr is None:
-                    continue
-                for t in AUG_TRANSFORMS:
-                    out = one(arr, t).astype(np.int64)
-                    oh, ow = out.shape[0], out.shape[1]
-                    wgt = (
-                        1
-                        + np.arange(ow, dtype=np.int64)[None, :]
-                        + 2 * np.arange(oh, dtype=np.int64)[:, None]
-                    )
-                    rows.append(
-                        (
-                            int(aid),
-                            t,
-                            ow,
-                            oh,
-                            int(oh * ow),
-                            int(out[..., 0].sum()),
-                            int(out[..., 1].sum()),
-                            int(out[..., 2].sum()),
-                            int((wgt * out[..., 0]).sum()),
-                            int((wgt * out[..., 1]).sum()),
-                            int((wgt * out[..., 2]).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUGMENT_SCHEMA.fields]
+    def augment(aid, payload):
+        arr = decode_tiff(payload or b"")
+        if arr is None:
+            return
+        for t in AUG_TRANSFORMS:
+            out = one(arr, t).astype(np.int64)
+            oh, ow = out.shape[0], out.shape[1]
+            wgt = (
+                1
+                + np.arange(ow, dtype=np.int64)[None, :]
+                + 2 * np.arange(oh, dtype=np.int64)[:, None]
             )
+            yield (aid, t, ow, oh, int(oh * ow),
+                   *(int(out[..., c].sum()) for c in range(3)),
+                   *(int((wgt * out[..., c]).sum()) for c in range(3)))
 
-    return assets.mapInPandas(run, AUGMENT_SCHEMA)
+    return map_rows(assets, AUGMENT_SCHEMA, augment, "asset_id", "payload")

@@ -47,21 +47,18 @@ multimodal pillar this repo adds beyond the reference.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from queryengine_spark.multimodal.avi import AVI_ASSET_SCHEMA, VIDEO_FRAME_SCHEMA
+from queryengine_spark.multimodal.avi import AVI_ASSET_SCHEMA, sampled_frame_stats
 from queryengine_spark.multimodal.jpeg import (
     JPEG_BH_MOD,
     JPEG_BW_MOD,
     _container,
     _encode_scan,
     block_dc,
-    decode_jpeg_dc,
 )
+from queryengine_spark.plans import map_rows
 
 MP4_NF_BASE, MP4_NF_MOD = 2, 5  # 2..6 frames
 MP4_FM = 29  # per-frame formula offset (distinct from avi.VID_FM)
@@ -895,17 +892,7 @@ def synthesize_mp4(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
             return make_mp4_fragmented(v)
         return make_mp4(v)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            a = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "asset_id": a,
-                    "payload": [_make(int(v)) for v in a],
-                }
-            )
-
-    return ids.mapInPandas(run, AVI_ASSET_SCHEMA)
+    return map_rows(ids, AVI_ASSET_SCHEMA, lambda a: [(a, _make(a))], id_col)
 
 
 def mp4_frame_stats(assets: DataFrame, stride: int = 2) -> DataFrame:
@@ -915,28 +902,4 @@ def mp4_frame_stats(assets: DataFrame, stride: int = 2) -> DataFrame:
     ``avi.video_frame_stats`` (same output schema, so the media
     suite folds both video legs on one padded shape)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                parsed = parse_mp4(bytes(payload)) if payload is not None else None
-                if parsed is None:
-                    continue
-                w, h, nf, fps, frames = parsed
-                for f, fb in enumerate(frames):
-                    if f % stride:
-                        continue
-                    img = decode_jpeg_dc(fb)
-                    if img is None or img.shape != (h, w):
-                        continue
-                    rows.append(
-                        (
-                            int(aid), f, nf, fps, w, h,
-                            int(img.astype(np.int64).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_FRAME_SCHEMA.fields]
-            )
-
-    return assets.mapInPandas(run, VIDEO_FRAME_SCHEMA)
+    return sampled_frame_stats(assets, parse_mp4, stride)

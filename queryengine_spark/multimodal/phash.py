@@ -32,19 +32,15 @@ pair is within Hamming distance 2 <= max_dist = 3, while unrelated
 images differ in ~32 bits — the same exact-by-pigeonhole banded
 search as text SimHash applies unchanged.
 
-Scale: synthesis → decode → hash is one mapInPandas chain (row-linear,
+Scale: synthesis → decode → hash is one map_rows chain (row-linear,
 zero shuffle); pair search is the shared banded equi-join
 (operators/dedup.py::banded_hamming64_pairs). No all-pairs anywhere.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -52,6 +48,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from queryengine_spark.plans import map_rows
 
 #: synthesis formula constants (mirrored in the oracle SQL)
 PH_W_MOD, PH_H_MOD = 13, 11  # w = 16 + gid % 13, h = 16 + gid % 11
@@ -262,17 +260,7 @@ PHASH_ASSET_SCHEMA = StructType(
 
 
 def synthesize_phash_assets(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            a = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "asset_id": a,
-                    "payload": [make_phash_asset(int(v)) for v in a],
-                }
-            )
-
-    return ids.mapInPandas(run, PHASH_ASSET_SCHEMA)
+    return map_rows(ids, PHASH_ASSET_SCHEMA, lambda a: [(a, make_phash_asset(a))], id_col)
 
 
 def dhash64(arr: np.ndarray) -> str:
@@ -305,43 +293,42 @@ PHASH_FP_SCHEMA = StructType(
 )
 
 
+def decode_image(b: bytes) -> np.ndarray | None:
+    """Magic-byte dispatch through the in-repo decoders (BMP / PNG /
+    GIF / TIFF / JPEG); None when nothing understands the payload."""
+    from queryengine_spark.multimodal.bmp import decode_bmp
+    from queryengine_spark.multimodal.gif import decode_gif
+    from queryengine_spark.multimodal.jpeg import decode_jpeg_rgb
+    from queryengine_spark.multimodal.png import decode_png
+    from queryengine_spark.multimodal.tiff import decode_tiff
+
+    if b[:2] == b"BM":
+        return decode_bmp(b)
+    if b[:8] == b"\x89PNG\r\n\x1a\n":
+        return decode_png(b)
+    if b[:6] in (b"GIF87a", b"GIF89a"):
+        return decode_gif(b)
+    if b[:2] in (b"II", b"MM"):
+        return decode_tiff(b)
+    if b[:2] == b"\xff\xd8":
+        # r8: 3-component payloads come back as REAL RGB (integer
+        # upsample + Rec.601); grayscale replicates
+        return decode_jpeg_rgb(b)
+    return None
+
+
 def dhash_relation(assets: DataFrame) -> DataFrame:
     """(id, sim): really decode each payload (magic-byte dispatch —
     BMP / PNG / GIF, anything the in-repo decoders understand) and
     fingerprint the pixels. Undecodable payloads are dropped (NULL
     would poison the band join)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from queryengine_spark.multimodal.bmp import decode_bmp
-        from queryengine_spark.multimodal.gif import decode_gif
-        from queryengine_spark.multimodal.jpeg import decode_jpeg_rgb
-        from queryengine_spark.multimodal.png import decode_png
-        from queryengine_spark.multimodal.tiff import decode_tiff
+    def fingerprint(aid, payload):
+        arr = decode_image(payload or b"")
+        if arr is None or arr.ndim != 3 or arr.shape[2] < 3:
+            return ()
+        return [(aid, dhash64(arr))]
 
-        for pdf in batches:
-            ids, fps = [], []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                b = bytes(payload)
-                arr = None
-                if b[:2] == b"BM":
-                    arr = decode_bmp(b)
-                elif b[:8] == b"\x89PNG\r\n\x1a\n":
-                    arr = decode_png(b)
-                elif b[:6] in (b"GIF87a", b"GIF89a"):
-                    arr = decode_gif(b)
-                elif b[:2] in (b"II", b"MM"):
-                    arr = decode_tiff(b)
-                elif b[:2] == b"\xff\xd8":
-                    # r8: 3-component payloads come back as REAL RGB
-                    # (integer upsample + Rec.601); grayscale
-                    # replicates — the phash JPEG family hashes color
-                    arr = decode_jpeg_rgb(b)
-                if arr is None or arr.ndim != 3 or arr.shape[2] < 3:
-                    continue
-                ids.append(int(aid))
-                fps.append(dhash64(arr))
-            yield pd.DataFrame({"id": pd.Series(ids, dtype="int64"), "sim": fps})
-
-    return assets.mapInPandas(run, PHASH_FP_SCHEMA)
+    return map_rows(assets, PHASH_FP_SCHEMA, fingerprint, "asset_id", "payload")
 
 
 def image_near_dup_pairs(

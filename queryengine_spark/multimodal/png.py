@@ -27,10 +27,8 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -39,6 +37,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from queryengine_spark.plans import map_rows
 
 #: deterministic synthesis parameters (mirrored in the oracle SQL —
 #: keep in sync with queries/addenda.py::MULTIMODAL_PNG_DECODE_SQL)
@@ -844,18 +844,7 @@ PNG_STATS_SCHEMA = StructType(
 
 def synthesize_png(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
     """One full-pixel PNG per input row, built worker-side."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_ = [int(a) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids_, dtype="int64"),
-                    "payload": [make_png_rgba(a) for a in ids_],
-                }
-            )
-
-    return ids.mapInPandas(run, PNG_ASSET_SCHEMA)
+    return map_rows(ids, PNG_ASSET_SCHEMA, lambda a: [(a, make_png_rgba(a))], id_col)
 
 
 def synthesize_png_mixed(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
@@ -895,17 +884,7 @@ def synthesize_png_mixed(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
             return make_png_gray1_adam7(a) if a % 32 == 25 else make_png_gray1(a)
         return make_png_gray(a)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_ = [int(a) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids_, dtype="int64"),
-                    "payload": [_mk(a) for a in ids_],
-                }
-            )
-
-    return ids.mapInPandas(run, PNG_ASSET_SCHEMA)
+    return map_rows(ids, PNG_ASSET_SCHEMA, lambda a: [(a, _mk(a))], id_col)
 
 
 def png_pixel_stats(assets: DataFrame) -> DataFrame:
@@ -921,45 +900,21 @@ def png_pixel_stats(assets: DataFrame) -> DataFrame:
     scatter) and not just the multiset of values. Undecodable →
     all NULL."""
 
-    cols = (
-        "width", "height", "n_px",
-        "sum_r", "sum_g", "sum_b", "sum_a", "sum_gray", "wsum",
-    )
+    def stats(aid, payload):
+        img = decode_png(payload) if payload is not None else None
+        if img is None:
+            return [(aid,)]
+        h, w = img.shape[:2]
+        first = (img if img.ndim == 2 else img[:, :, 0]).astype(np.int64)
+        weights = np.arange(1, h * w + 1, dtype=np.int64).reshape(h, w)
+        wsum = int((weights * first).sum())
+        if img.ndim == 2:
+            return [(aid, w, h, w * h, None, None, None, None, int(first.sum()), wsum)]
+        nchan = img.shape[2]
+        s = [int(v) for v in img.reshape(-1, nchan).astype(np.int64).sum(axis=0)]
+        if nchan == 2:  # r9: gray+alpha
+            return [(aid, w, h, w * h, None, None, None, s[1], s[0], wsum)]
+        sum_a = s[3] if nchan == 4 else None
+        return [(aid, w, h, w * h, s[0], s[1], s[2], sum_a, None, wsum)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("asset_id", *cols)}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                out["asset_id"].append(int(aid))
-                img = decode_png(bytes(payload)) if payload is not None else None
-                if img is None:
-                    for k in cols:
-                        out[k].append(None)
-                    continue
-                h, w = img.shape[:2]
-                first = (img if img.ndim == 2 else img[:, :, 0]).astype(np.int64)
-                weights = np.arange(1, h * w + 1, dtype=np.int64).reshape(h, w)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px"].append(w * h)
-                out["wsum"].append(int((weights * first).sum()))
-                if img.ndim == 2:
-                    for k in ("sum_r", "sum_g", "sum_b", "sum_a"):
-                        out[k].append(None)
-                    out["sum_gray"].append(int(first.sum()))
-                    continue
-                nchan = img.shape[2]
-                s = img.reshape(-1, nchan).astype(np.int64).sum(axis=0)
-                if nchan == 2:  # r9: gray+alpha
-                    for k in ("sum_r", "sum_g", "sum_b"):
-                        out[k].append(None)
-                    out["sum_gray"].append(int(s[0]))
-                    out["sum_a"].append(int(s[1]))
-                    continue
-                for k, v in zip(("sum_r", "sum_g", "sum_b"), s[:3]):
-                    out[k].append(int(v))
-                out["sum_a"].append(int(s[3]) if nchan == 4 else None)
-                out["sum_gray"].append(None)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(run, PNG_STATS_SCHEMA)
+    return map_rows(assets, PNG_STATS_SCHEMA, stats, "asset_id", "payload")

@@ -24,7 +24,7 @@ Same discipline as the BMP/PNG/GIF/JPEG/WAV codecs:
 
 r8: LZW decompression (TIFF 6.0 §13) — TIFF's most common
 historical codec, the top remaining gap on archival/scan corpora.
-Same table/reset machinery as the GIF engine (multimodal/gif.py)
+The shared LZW engine (``multimodal/lzw.py``) under ``TIFF_LZW``,
 with the two spec deltas: MSB-first bit packing and the
 EarlyChange code-width bump at table size 2^w − 1 (one code
 EARLIER than GIF; codes 9→10 bits when entry 510 is added — the
@@ -79,10 +79,8 @@ use w+16, h+16):
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -91,6 +89,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from queryengine_spark.multimodal.lzw import LzwRules, lzw_decode, lzw_encode
+from queryengine_spark.plans import map_rows
 
 #: synthesis formula constants (mirrored in the oracle SQL)
 TIF_W_MOD, TIF_H_MOD = 12, 9
@@ -166,151 +167,9 @@ def packbits_decode(data: bytes) -> bytes | None:
     return bytes(out)
 
 
-# ------------------------------------------------------------ LZW
-#
-# TIFF 6.0 §13 variant of the LZW engine proven in multimodal/gif.py:
-# fixed 256-symbol alphabet (Clear=256, EOI=257, first table entry
-# 258), MSB-first bit packing, and the EarlyChange width rule — the
-# decoder widens when its TABLE SIZE reaches 2^w − 1 (GIF widens at
-# 2^w), so codes go 9→10 bits when entry index 510 lands (spec: "add
-# code 510, switch to 10 bits"). The encoder SIMULATES the decoder's
-# table growth for widths (the counter-drift trap the GIF engine's
-# hypothesis test found — see lzw_encode's docstring in gif.py).
-
-_TIF_CLEAR, _TIF_EOI = 256, 257
-#: spec cap: the encoder must emit Clear before code 4094 is used
-_TIF_MAX_TABLE = 4094
-
-
-def lzw_tiff_encode(data: bytes) -> bytes:
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    # simulated decoder state
-    dec_len = 258
-    dec_width = 9
-    first_after_clear = True
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits, dec_len, dec_width, first_after_clear
-        acc = (acc << dec_width) | code
-        nbits += dec_width
-        while nbits >= 8:
-            out.append((acc >> (nbits - 8)) & 0xFF)
-            nbits -= 8
-        acc &= (1 << nbits) - 1
-        if code == _TIF_CLEAR:
-            dec_len = 258
-            dec_width = 9
-            first_after_clear = True
-        elif code != _TIF_EOI:
-            if first_after_clear:
-                first_after_clear = False
-            elif dec_len < _TIF_MAX_TABLE:
-                dec_len += 1
-                if dec_len >= (1 << dec_width) - 1 and dec_width < 12:
-                    dec_width += 1
-
-    # (prefix code, next byte) int keys — same table, no per-byte
-    # bytes allocation (the former concat keys were the encode hot
-    # spot; see gif.lzw_encode for the same rewrite)
-    table: dict[tuple[int, int], int] = {}
-    next_code = 258
-    emit(_TIF_CLEAR)
-    cur = -1
-    for byte in data:
-        if cur < 0:
-            cur = byte
-            continue
-        nc = table.get((cur, byte))
-        if nc is not None:
-            cur = nc
-            continue
-        emit(cur)
-        if next_code < _TIF_MAX_TABLE:
-            table[(cur, byte)] = next_code
-            next_code += 1
-        else:
-            emit(_TIF_CLEAR)
-            table.clear()
-            next_code = 258
-        cur = byte
-    if cur >= 0:
-        emit(cur)
-    emit(_TIF_EOI)
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
-
-
-# the 256 literal codes plus placeholders for CLEAR and EOI; each
-# decode works on its own copy
-_TIF_BASE_TABLE: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
-
-
-def lzw_tiff_decode(data: bytes) -> bytes | None:
-    """Inverse of :func:`lzw_tiff_encode` (KwKwK handled). None on a
-    truncated stream (no EOI) or an out-of-range code."""
-    pos = 0
-    total = len(data) * 8
-    bitbuf = 0  # unread bits, MSB-first
-    bitcnt = 0
-    bytepos = 0
-
-    def read(width: int) -> int | None:
-        # buffered MSB-first reader (per-bit divmod loop was the
-        # decode hot spot); same truncation contract
-        nonlocal pos, bitbuf, bitcnt, bytepos
-        if pos + width > total:
-            return None
-        while bitcnt < width:
-            bitbuf = (bitbuf << 8) | data[bytepos]
-            bytepos += 1
-            bitcnt += 8
-        bitcnt -= width
-        val = bitbuf >> bitcnt
-        bitbuf &= (1 << bitcnt) - 1
-        pos += width
-        return val
-
-    out = bytearray()
-    table: list[bytes] = []
-    width = 9
-    prev: bytes | None = None
-
-    def reset() -> None:
-        nonlocal table, width, prev
-        table = _TIF_BASE_TABLE.copy()
-        width = 9
-        prev = None
-
-    reset()
-    while True:
-        code = read(width)
-        if code is None:
-            return None
-        if code == _TIF_CLEAR:
-            reset()
-            continue
-        if code == _TIF_EOI:
-            return bytes(out)
-        if prev is None:
-            if code >= len(table):
-                return None
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-        elif code == len(table):
-            entry = prev + prev[:1]  # KwKwK
-        else:
-            return None
-        out += entry
-        if prev is not None and len(table) < _TIF_MAX_TABLE:
-            table.append(prev + entry[:1])
-            if len(table) >= (1 << width) - 1 and width < 12:
-                width += 1
-        prev = entry
+#: TIFF 6.0 §13 LZW rules: MSB-first codes, EarlyChange (widen one
+#: entry before 2^w), and the encoder emits Clear before code 4094
+TIFF_LZW = LzwRules(msb_first=True, early_change=1, max_table=4094)
 
 
 def hdiff_encode(row: bytes, spp: int) -> bytes:
@@ -643,27 +502,13 @@ def deep_bps(asset_id: int) -> int:
 
 
 def synthesize_tiff_deep(ids, id_col: str = "asset_id"):
-    """One deep-gray TIFF per input row (mapInPandas), depths cycled
+    """One deep-gray TIFF per input row (map_rows), depths cycled
     by deep_bps — the r11 corpus slot for the 1/4/16-bit decode
     paths (promised 'next rotation' when the codec landed; the
     rotation guard admitted it this round)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
-    def run(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            ids_ = [int(a) for a in pdf[id_col]]
-            yield _pd.DataFrame(
-                {
-                    "asset_id": _pd.Series(ids_, dtype="int64"),
-                    "payload": [
-                        make_tiff_gray_deep(a, deep_bps(a)) for a in ids_
-                    ],
-                }
-            )
-
-    return ids.mapInPandas(run, TIFF_ASSET_SCHEMA)
+    return map_rows(
+        ids, TIFF_ASSET_SCHEMA, lambda a: [(a, make_tiff_gray_deep(a, deep_bps(a)))], id_col
+    )
 
 
 def tiff_deep_stats(assets):
@@ -671,57 +516,20 @@ def tiff_deep_stats(assets):
     the RAW stored codes (post WhiteIsZero inversion — exactly what
     decode_tiff returns): certifies MSB-first sub-byte unpacking,
     per-row padding, 16-bit byte order, and the code-range
-    inversion against the formula oracle. Row-linear mapInPandas,
+    inversion against the formula oracle. Row-linear map_rows,
     zero shuffle."""
-    from collections.abc import Iterator as _It
 
-    import pandas as _pd
-
-    from pyspark.sql.types import (  # noqa: PLC0415
-        IntegerType as _I,
-        LongType as _L,
-        StructField as _F,
-        StructType as _S,
-    )
-
-    schema = _S(
-        [
-            _F("asset_id", _L()),
-            _F("bps", _I()),
-            _F("width", _I()),
-            _F("height", _I()),
-            _F("n_px", _L()),
-            _F("code_sum", _L()),
-            _F("corner_code", _L()),
+    def stats(aid, payload):
+        arr = decode_tiff(payload) if payload is not None else None
+        if arr is None:
+            return ()
+        v = arr[..., 0].astype(np.int64)
+        return [
+            (aid, deep_bps(aid), arr.shape[1], arr.shape[0], int(v.size),
+             int(v.sum()), int(v[-1, -1]))
         ]
-    )
 
-    def run(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                arr = (
-                    decode_tiff(bytes(payload))
-                    if payload is not None
-                    else None
-                )
-                if arr is None:
-                    continue
-                v = arr[..., 0].astype(np.int64)
-                rows.append(
-                    (
-                        int(aid),
-                        deep_bps(int(aid)),
-                        arr.shape[1],
-                        arr.shape[0],
-                        int(v.size),
-                        int(v.sum()),
-                        int(v[-1, -1]),
-                    )
-                )
-            yield _pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return assets.mapInPandas(run, schema)
+    return map_rows(assets, TIFF_DEEP_SCHEMA, stats, "asset_id", "payload")
 
 
 def make_tiff(asset_id: int) -> bytes:
@@ -733,13 +541,15 @@ def make_tiff(asset_id: int) -> bytes:
     row_starts = range(0, h, rps)
     if leg == 3:  # LZW grayscale BlackIsZero + Predictor 2, MM
         strips = [
-            lzw_tiff_encode(
+            lzw_encode(
                 b"".join(
                     hdiff_encode(
                         bytes(_pixel_gray3(a, x, y) for x in range(w)), 1
                     )
                     for y in range(y0, min(y0 + rps, h))
-                )
+                ),
+                8,
+                TIFF_LZW,
             )
             for y0 in row_starts
         ]
@@ -814,13 +624,15 @@ def make_tiff(asset_id: int) -> bytes:
             for tx in range(tpr):
                 raw = _tile_bytes(a, w2, h2, tx, ty, _pixel_gray10, 1)
                 tiles.append(
-                    lzw_tiff_encode(
+                    lzw_encode(
                         b"".join(
                             hdiff_encode(
                                 raw[r * TIF_TILE : (r + 1) * TIF_TILE], 1
                             )
                             for r in range(TIF_TILE)
-                        )
+                        ),
+                        8,
+                        TIFF_LZW,
                     )
                 )
         return _build_tiff_tiled(
@@ -1085,7 +897,7 @@ def decode_tiff(b: bytes) -> np.ndarray | None:
             if chunk is None:
                 return None
         elif comp == 5:
-            chunk = lzw_tiff_decode(chunk)
+            chunk = lzw_decode(chunk, 8, TIFF_LZW)
             if chunk is None:
                 return None
         elif comp in (8, 32946):  # Adobe deflate (+ legacy alias)
@@ -1214,43 +1026,33 @@ TIFF_STATS_SCHEMA = StructType(
     ]
 )
 
+TIFF_DEEP_SCHEMA = StructType(
+    [
+        StructField("asset_id", LongType()),
+        StructField("bps", IntegerType()),
+        StructField("width", IntegerType()),
+        StructField("height", IntegerType()),
+        StructField("n_px", LongType()),
+        StructField("code_sum", LongType()),
+        StructField("corner_code", LongType()),
+    ]
+)
+
 
 def synthesize_tiff(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            a = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "asset_id": a,
-                    "payload": [make_tiff(int(v)) for v in a],
-                }
-            )
-
-    return ids.mapInPandas(run, TIFF_ASSET_SCHEMA)
+    return map_rows(ids, TIFF_ASSET_SCHEMA, lambda a: [(a, make_tiff(a))], id_col)
 
 
 def tiff_pixel_stats(assets: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                arr = decode_tiff(bytes(payload))
-                if arr is None:
-                    continue
-                c = arr.astype(np.int64)
-                rows.append(
-                    (
-                        int(aid),
-                        c.shape[1],
-                        c.shape[0],
-                        int(c.shape[0] * c.shape[1]),
-                        int(c[..., 0].sum()),
-                        int(c[..., 1].sum()),
-                        int(c[..., 2].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TIFF_STATS_SCHEMA.fields]
-            )
+    def stats(aid, payload):
+        arr = decode_tiff(payload or b"")
+        if arr is None:
+            return ()
+        c = arr.astype(np.int64)
+        h, w = c.shape[:2]
+        return [
+            (aid, w, h, h * w, int(c[..., 0].sum()), int(c[..., 1].sum()),
+             int(c[..., 2].sum()))
+        ]
 
-    return assets.mapInPandas(run, TIFF_STATS_SCHEMA)
+    return map_rows(assets, TIFF_STATS_SCHEMA, stats, "asset_id", "payload")

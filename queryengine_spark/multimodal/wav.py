@@ -19,27 +19,13 @@ multimodal pillar this repo adds beyond the reference.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-# identical to bmp.BMP_ASSET_SCHEMA; defined locally (not imported)
-# so bmp's compatibility re-export of this module can never cycle
-BMP_ASSET_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("payload", BinaryType(), True),
-    ]
-)
+from queryengine_spark.multimodal.bmp import BMP_ASSET_SCHEMA
+from queryengine_spark.plans import map_rows
 
 # ---------------------------------------------------------------- WAV (audio)
 
@@ -482,17 +468,7 @@ WAV_STATS_SCHEMA = StructType(
 
 
 def synthesize_pcm_wav(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_ = [int(a) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids_, dtype="int64"),
-                    "payload": [make_pcm_wav(a) for a in ids_],
-                }
-            )
-
-    return ids.mapInPandas(run, BMP_ASSET_SCHEMA)
+    return map_rows(ids, BMP_ASSET_SCHEMA, lambda a: [(a, make_pcm_wav(a))], id_col)
 
 
 def synthesize_wav_mixed(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
@@ -516,39 +492,19 @@ def synthesize_wav_mixed(ids: DataFrame, id_col: str = "asset_id") -> DataFrame:
             return make_pcm_wav(a)
         return make_pcm_wav_multi(a, 2 if a % 8 == 2 else 6)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_ = [int(a) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids_, dtype="int64"),
-                    "payload": [_mk(a) for a in ids_],
-                }
-            )
-
-    return ids.mapInPandas(run, BMP_ASSET_SCHEMA)
+    return map_rows(ids, BMP_ASSET_SCHEMA, lambda a: [(a, _mk(a))], id_col)
 
 
 def wav_sample_stats(assets: DataFrame) -> DataFrame:
     """Decode every payload and aggregate exact integer amplitude
     stats (sum, sum of squares — the RMS numerator — and peak)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("asset_id", "sample_rate", "n_samples", "sum_amp", "sum_sq", "max_amp")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                out["asset_id"].append(int(aid))
-                dec = decode_pcm_wav(bytes(payload)) if payload is not None else None
-                if dec is None:
-                    for k in ("sample_rate", "n_samples", "sum_amp", "sum_sq", "max_amp"):
-                        out[k].append(None)
-                    continue
-                rate, s = dec
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(len(s))
-                out["sum_amp"].append(int(s.sum()))
-                out["sum_sq"].append(int((s * s).sum()))
-                out["max_amp"].append(int(np.abs(s).max()) if len(s) else None)
-            yield pd.DataFrame(out)
+    def stats(aid, payload):
+        dec = decode_pcm_wav(payload) if payload is not None else None
+        if dec is None:
+            return [(aid,)]
+        rate, s = dec
+        max_amp = int(np.abs(s).max()) if len(s) else None
+        return [(aid, rate, len(s), int(s.sum()), int((s * s).sum()), max_amp)]
 
-    return assets.mapInPandas(run, WAV_STATS_SCHEMA)
+    return map_rows(assets, WAV_STATS_SCHEMA, stats, "asset_id", "payload")

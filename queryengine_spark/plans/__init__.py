@@ -1,15 +1,18 @@
 """Plan-shaping utilities: fan-out before explode, bucketed
 co-located joins, and salted skew joins — the explicit shuffle-control
-toolkit for 100 TB plans (complementing what AQE does automatically).
+toolkit for 100 TB plans (complementing what AQE does automatically) —
+plus ``map_rows``, the one Arrow boundary every per-row decoder and
+synthesizer in ``multimodal/`` and ``sources/`` crosses.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
@@ -72,6 +75,37 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
         if est_splits >= target:
             return df
     return df.repartition(target)
+
+
+def map_rows(df: DataFrame, schema: StructType, fn: Callable, *cols: str) -> DataFrame:
+    """The one Python boundary for per-row kernels: a single
+    ``mapInArrow`` that calls ``fn(*values)`` once per input row, with
+    ``values`` read from ``cols`` as Python objects (NULL → None);
+    only those columns cross the boundary.
+    ``fn`` returns an iterable of zero or more output tuples in
+    ``schema`` order; a tuple shorter than the schema is NULL-padded.
+    Output columns are built with the schema's Arrow types, so a float
+    NaN stays NaN — a kernel that means NULL returns None."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    width = len(arrow_schema)
+    pad = (None,) * width
+
+    def run(batches):
+        for batch in batches:
+            rows = [
+                row if len(row) == width else (*row, *pad[len(row) :])
+                for values in zip(*(c.to_pylist() for c in batch.columns))
+                for row in fn(*values)
+            ]
+            columns = zip(*rows) if rows else [()] * width
+            arrays = [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)]
+            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+    run.__name__ = getattr(fn, "__name__", "map_rows")  # names the plan node
+    return df.select(*cols).mapInArrow(run, schema)
 
 
 def spread_by(df: DataFrame, *cols: str, partitions: int | None = None) -> DataFrame:

@@ -116,7 +116,7 @@ def multimodal_wav_decode(spark: SparkSession, sf: str) -> DataFrame:
     walk; the oracle recomputes the amplitude stats from each leg's
     formula (for µ-law it expands the BYTE formula with the same
     G.711 arithmetic in SQL)."""
-    from queryengine_spark.multimodal.bmp import (
+    from queryengine_spark.multimodal.wav import (
         synthesize_wav_mixed,
         wav_sample_stats,
     )
@@ -125,7 +125,7 @@ def multimodal_wav_decode(spark: SparkSession, sf: str) -> DataFrame:
     return wav_sample_stats(synthesize_wav_mixed(spread(ids)))
 
 
-from queryengine_spark.multimodal.bmp import (  # noqa: E402
+from queryengine_spark.multimodal.wav import (  # noqa: E402
     ALAW_A_MULT,
     ALAW_I_MULT,
     STEREO_OFF,

@@ -16,7 +16,7 @@ and the stored/deflate extraction paths, not just that a magic number
 matched.
 
 Scale shape: one shard is one input row; parsing and per-shard
-aggregation happen inside a single mapInPandas pass (row-linear, no
+aggregation happen inside a single map_rows pass (row-linear, no
 shuffle, no driver state). At 100 TB the shard relation is just a
 binary column — e.g. ``spark.read.format("binaryFile")`` over an
 object store — and this same pass fans members out of each shard on
@@ -38,9 +38,7 @@ import json
 import lzma
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -49,6 +47,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from queryengine_spark.plans import map_rows
 
 # ---------------------------------------------------------------------------
 # deterministic synthesis parameters — mirrored in the oracle SQL
@@ -626,17 +626,8 @@ STATS_SCHEMA = StructType(
 
 
 def synthesize_archives(ids: DataFrame, id_col: str = "shard_id") -> DataFrame:
-    """One archive per input row, built worker-side (mapInPandas)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid in pdf[id_col].astype("int64"):
-                fmt, payload = make_archive(int(sid))
-                rows.append((int(sid), fmt, payload))
-            yield pd.DataFrame(rows, columns=["shard_id", "fmt", "payload"])
-
-    return ids.mapInPandas(run, ARCHIVE_SCHEMA)
+    """One archive per input row, built worker-side (map_rows)."""
+    return map_rows(ids, ARCHIVE_SCHEMA, lambda sid: [(sid, *make_archive(sid))], id_col)
 
 
 def _name_hash(name: str) -> int:
@@ -647,29 +638,14 @@ def archive_members(shards: DataFrame) -> DataFrame:
     """Fan members out of each shard — the WebDataset sample relation
     downstream joins/decoders consume (sample_key = basename)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, fmt, payload in zip(
-                pdf["shard_id"].astype("int64"), pdf["fmt"], pdf["payload"]
-            ):
-                members = parse_archive(bytes(payload))
-                if members is None:
-                    continue  # invalid shard: contributes no members
-                for i, (name, data) in enumerate(members):
-                    stem, _, ext = name.rpartition(".")
-                    rows.append(
-                        (int(sid), fmt, i, name, stem, ext, len(data), data)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "shard_id", "fmt", "ordinal", "name", "sample_key",
-                    "ext", "size", "payload",
-                ],
-            )
+    def members(sid, fmt, payload):
+        # an invalid shard contributes no members
+        parsed = parse_archive(payload) if payload is not None else None
+        for i, (name, data) in enumerate(parsed or ()):
+            stem, _, ext = name.rpartition(".")
+            yield sid, fmt, i, name, stem, ext, len(data), data
 
-    return shards.mapInPandas(run, MEMBER_SCHEMA)
+    return map_rows(shards, MEMBER_SCHEMA, members, "shard_id", "fmt", "payload")
 
 
 def archive_shard_stats(shards: DataFrame) -> DataFrame:
@@ -680,28 +656,22 @@ def archive_shard_stats(shards: DataFrame) -> DataFrame:
     ORDER, which tar/zip both define), and a member-name md5 hash sum
     (certifies exact names incl. zero-padding and extensions)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, fmt, payload in zip(
-                pdf["shard_id"].astype("int64"), pdf["fmt"], pdf["payload"]
-            ):
-                members = parse_archive(bytes(payload))
-                if members is None:
-                    continue
-                keys = {n.rpartition(".")[0] for n, _ in members}
-                rows.append(
-                    (
-                        int(sid),
-                        fmt,
-                        len(members),
-                        len(keys),
-                        sum(len(d) for _, d in members),
-                        sum(sum(d) for _, d in members),
-                        sum((i + 1) * len(d) for i, (_, d) in enumerate(members)),
-                        sum(_name_hash(n) for n, _ in members),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in STATS_SCHEMA.fields])
+    def stats(sid, fmt, payload):
+        members = parse_archive(payload) if payload is not None else None
+        if members is None:
+            return ()
+        keys = {n.rpartition(".")[0] for n, _ in members}
+        return [
+            (
+                sid,
+                fmt,
+                len(members),
+                len(keys),
+                sum(len(d) for _, d in members),
+                sum(sum(d) for _, d in members),
+                sum((i + 1) * len(d) for i, (_, d) in enumerate(members)),
+                sum(_name_hash(n) for n, _ in members),
+            )
+        ]
 
-    return shards.mapInPandas(run, STATS_SCHEMA)
+    return map_rows(shards, STATS_SCHEMA, stats, "shard_id", "fmt", "payload")

@@ -49,9 +49,7 @@ from __future__ import annotations
 import json
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -60,6 +58,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from queryengine_spark.plans import map_rows
 
 AVRO_MAGIC = b"Obj\x01"
 #: decode-side sanity cap on declared element/record counts — a few
@@ -878,20 +878,9 @@ AVRO_READER_SCHEMA = _reader_schema()
 
 
 def synthesize_avro(ids: DataFrame, id_col: str = "shard_id") -> DataFrame:
-    """One OCF shard per input row, built worker-side (mapInPandas),
+    """One OCF shard per input row, built worker-side (map_rows),
     cycling the null / deflate / snappy codecs by shard id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_ = [int(a) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "shard_id": pd.Series(ids_, dtype="int64"),
-                    "payload": [make_avro_shard(a) for a in ids_],
-                }
-            )
-
-    return ids.mapInPandas(run, AVRO_ASSET_SCHEMA)
+    return map_rows(ids, AVRO_ASSET_SCHEMA, lambda a: [(a, make_avro_shard(a))], id_col)
 
 
 def avro_records(assets: DataFrame) -> DataFrame:
@@ -905,59 +894,46 @@ def avro_records(assets: DataFrame) -> DataFrame:
     through AVRO_READER_SCHEMA (r12) — alias rename, long→double
     promotion, and a defaulted reader-only ``extra`` field (−1 on
     even shards) — so spec Schema Resolution is oracle-certified
-    too. Row-linear mapInPandas, zero shuffle."""
+    too. Row-linear map_rows, zero shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                resolved = int(sid) % 2 == 1
-                recs = (
-                    parse_avro(
-                        bytes(payload),
-                        reader_schema=(
-                            AVRO_READER_SCHEMA if resolved else None
-                        ),
+    def records(sid, payload):
+        if payload is None:
+            return ()
+        resolved = sid % 2 == 1
+        recs = parse_avro(payload, reader_schema=AVRO_READER_SCHEMA if resolved else None)
+        if recs is None:
+            return ()
+        # a structurally valid OCF with a DIFFERENT schema
+        # parses fine but breaks these projections — treat
+        # the shape mismatch as a per-shard refusal (skip,
+        # no partial rows) instead of failing the task
+        rows = []
+        try:
+            for i, rec in enumerate(recs):
+                name = rec["title" if resolved else "name"].encode()
+                rows.append(
+                    (
+                        sid,
+                        i,
+                        int(rec["rid"]),
+                        len(name),
+                        sum(name),
+                        int(rec["score"] * 16),
+                        int(rec["flag"]),
+                        len(rec["tags"]),
+                        sum(sum(t.encode()) for t in rec["tags"]),
+                        len(rec["payload"]),
+                        sum(rec["payload"]),
+                        rec["opt"],
+                        AVRO_KINDS.index(rec["kind"]),
+                        sum(rec["fp"]),
+                        len(rec["m"]),
+                        sum(rec["m"].values()),
+                        rec.get("extra", -1),
                     )
-                    if payload is not None
-                    else None
                 )
-                if recs is None:
-                    continue
-                # a structurally valid OCF with a DIFFERENT schema
-                # parses fine but breaks these projections — treat
-                # the shape mismatch as a per-shard refusal (skip,
-                # no partial rows) instead of failing the task
-                shard_rows = []
-                try:
-                    for i, rec in enumerate(recs):
-                        name = rec["title" if resolved else "name"].encode()
-                        shard_rows.append(
-                            (
-                                int(sid),
-                                i,
-                                int(rec["rid"]),
-                                len(name),
-                                sum(name),
-                                int(rec["score"] * 16),
-                                int(rec["flag"]),
-                                len(rec["tags"]),
-                                sum(sum(t.encode()) for t in rec["tags"]),
-                                len(rec["payload"]),
-                                sum(rec["payload"]),
-                                rec["opt"],
-                                AVRO_KINDS.index(rec["kind"]),
-                                sum(rec["fp"]),
-                                len(rec["m"]),
-                                sum(rec["m"].values()),
-                                rec.get("extra", -1),
-                            )
-                        )
-                except (KeyError, ValueError, TypeError, AttributeError):
-                    continue
-                rows.extend(shard_rows)
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AVRO_REC_SCHEMA.fields]
-            )
+        except (KeyError, ValueError, TypeError, AttributeError):
+            return ()
+        return rows
 
-    return assets.mapInPandas(run, AVRO_REC_SCHEMA)
+    return map_rows(assets, AVRO_REC_SCHEMA, records, "shard_id", "payload")

@@ -71,9 +71,7 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -83,6 +81,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from queryengine_spark.plans import map_rows
 from queryengine_spark.sources.pdfcrypt import (
     aes128_cbc_encrypt,
     compute_key,
@@ -1707,24 +1706,13 @@ def make_pdf_any(doc_id: int) -> bytes:
 
 
 def synthesize_pdf(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """One PDF per input row, built worker-side (mapInPandas), in the
+    """One PDF per input row, built worker-side (map_rows), in the
     six-way layout split of make_pdf_any — classic, xref-stream /
     object-stream (with and without predictors), hybrid-reference,
     and both incremental-update chains. Final text state is
     identical across flavors, so the formula oracle certifies every
     walk."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_ = [int(a) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids_, dtype="int64"),
-                    "payload": [make_pdf_any(a) for a in ids_],
-                }
-            )
-
-    return ids.mapInPandas(run, PDF_ASSET_SCHEMA)
+    return map_rows(ids, PDF_ASSET_SCHEMA, lambda a: [(a, make_pdf_any(a))], id_col)
 
 
 def pdf_text_stats(assets: DataFrame) -> DataFrame:
@@ -1732,29 +1720,12 @@ def pdf_text_stats(assets: DataFrame) -> DataFrame:
     total extracted text length, and the exact byte-sum of the text —
     certifying the xref walk, stream decode, and the Tj/TJ
     concatenation semantics against the oracle's formula expansion.
-    Row-linear mapInPandas, zero shuffle."""
+    Row-linear map_rows, zero shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                doc = (
-                    parse_pdf_text(bytes(payload))
-                    if payload is not None
-                    else None
-                )
-                if doc is None:
-                    continue
-                for p, ops in enumerate(doc):
-                    text = b"".join(ops)
-                    rows.append(
-                        (
-                            int(did), p, len(doc), len(ops),
-                            len(text), sum(text),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PDF_STATS_SCHEMA.fields]
-            )
+    def pages(did, payload):
+        doc = parse_pdf_text(payload) if payload is not None else None
+        for p, ops in enumerate(doc or ()):
+            text = b"".join(ops)
+            yield did, p, len(doc), len(ops), len(text), sum(text)
 
-    return assets.mapInPandas(run, PDF_STATS_SCHEMA)
+    return map_rows(assets, PDF_STATS_SCHEMA, pages, "doc_id", "payload")

@@ -54,9 +54,7 @@ from __future__ import annotations
 
 import sqlite3
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -65,6 +63,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from queryengine_spark.plans import map_rows
 
 SQLITE_MAGIC = b"SQLite format 3\x00"
 
@@ -553,19 +553,8 @@ SQLITE_ROW_SCHEMA = StructType(
 
 
 def synthesize_sqlite(ids: DataFrame, id_col: str = "shard_id") -> DataFrame:
-    """One serialized SQLite database per input row (mapInPandas)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_ = [int(a) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "shard_id": pd.Series(ids_, dtype="int64"),
-                    "payload": [make_sqlite_any(a) for a in ids_],
-                }
-            )
-
-    return ids.mapInPandas(run, SQLITE_ASSET_SCHEMA)
+    """One serialized SQLite database per input row (map_rows)."""
+    return map_rows(ids, SQLITE_ASSET_SCHEMA, lambda a: [(a, make_sqlite_any(a))], id_col)
 
 
 def sqlite_rows(assets: DataFrame) -> DataFrame:
@@ -574,47 +563,26 @@ def sqlite_rows(assets: DataFrame) -> DataFrame:
     column comes back as score*32 — exactly representable):
     certifies the header, catalog walk, interior/leaf traversal,
     varints, every serial-type family, the rowid alias, and overflow
-    reassembly against the formula oracle. Row-linear mapInPandas,
+    reassembly against the formula oracle. Row-linear map_rows,
     zero shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                recs = (
-                    parse_sqlite_table(bytes(payload))
-                    if payload is not None
-                    else None
+    def table_rows(sid, payload):
+        recs = parse_sqlite_table(payload) if payload is not None else None
+        if recs is None:
+            return ()
+        # a valid database whose table carries a DIFFERENT
+        # column layout walks fine but breaks this 6-way
+        # unpack/typing — skip the shard like a parse
+        # refusal (no partial rows), don't fail the task
+        rows = []
+        try:
+            for rid, name, score, blob, opt, small in recs:
+                nb = name.encode()
+                rows.append(
+                    (sid, rid, len(nb), sum(nb), int(score * 32), len(blob), sum(blob), opt, small)
                 )
-                if recs is None:
-                    continue
-                # a valid database whose table carries a DIFFERENT
-                # column layout walks fine but breaks this 6-way
-                # unpack/typing — skip the shard like a parse
-                # refusal (no partial rows), don't fail the task
-                shard_rows = []
-                try:
-                    for rec in recs:
-                        rid, name, score, blob, opt, small = rec
-                        nb = name.encode()
-                        shard_rows.append(
-                            (
-                                int(sid),
-                                rid,
-                                len(nb),
-                                sum(nb),
-                                int(score * 32),
-                                len(blob),
-                                sum(blob),
-                                opt,
-                                small,
-                            )
-                        )
-                except (ValueError, TypeError, AttributeError):
-                    continue
-                rows.extend(shard_rows)
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in SQLITE_ROW_SCHEMA.fields]
-            )
+        except (ValueError, TypeError, AttributeError):
+            return ()
+        return rows
 
-    return assets.mapInPandas(run, SQLITE_ROW_SCHEMA)
+    return map_rows(assets, SQLITE_ROW_SCHEMA, table_rows, "shard_id", "payload")

@@ -58,7 +58,6 @@ import struct
 import zlib
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -67,6 +66,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from queryengine_spark.plans import map_rows
 
 #: per-shard inflate ceiling (gzip-bomb posture — a shard that
 #: expands past this refuses BEFORE the bytes materialize; matches
@@ -480,20 +481,9 @@ TFR_REC_SCHEMA = StructType(
 
 
 def synthesize_tfrecord(ids: DataFrame, id_col: str = "shard_id") -> DataFrame:
-    """One TFRecord shard per input row (mapInPandas); odd shards
+    """One TFRecord shard per input row (map_rows); odd shards
     gzip-compressed."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_ = [int(a) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "shard_id": pd.Series(ids_, dtype="int64"),
-                    "payload": [make_tfrecord_shard(a) for a in ids_],
-                }
-            )
-
-    return ids.mapInPandas(run, TFR_ASSET_SCHEMA)
+    return map_rows(ids, TFR_ASSET_SCHEMA, lambda a: [(a, make_tfrecord_shard(a))], id_col)
 
 
 def tfrecord_examples(assets: DataFrame) -> DataFrame:
@@ -502,65 +492,39 @@ def tfrecord_examples(assets: DataFrame) -> DataFrame:
     representable): certifies the CRC32C framing, the wire-format
     walk, the packed int64/float32 lists, negative-varint decode,
     and both compression flavors against the formula oracle.
-    Row-linear mapInPandas, zero shuffle."""
+    Row-linear map_rows, zero shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                is_seq = int(sid) % 4 == 2
-                recs = (
-                    parse_tfrecord(
-                        bytes(payload),
-                        record_parser=(
-                            parse_sequence_example
-                            if is_seq
-                            else parse_example
-                        ),
-                    )
-                    if payload is not None
-                    else None
+    def examples(sid, payload):
+        if payload is None:
+            return ()
+        is_seq = sid % 4 == 2
+        recs = parse_tfrecord(
+            payload, record_parser=parse_sequence_example if is_seq else parse_example
+        )
+        if recs is None:
+            return ()
+        # a valid TFRecord stream whose Examples carry a
+        # DIFFERENT feature set parses fine but breaks these
+        # projections — skip the shard like a parse refusal
+        # (no partial rows) rather than failing the task
+        rows = []
+        try:
+            for i, ex in enumerate(recs):
+                if is_seq:
+                    rid = ex["context"]["rid"][1][0]
+                    toks = [v for f in ex["lists"]["toks"] for v in f[1]]
+                    txt = ex["lists"]["txt"][0][1][0]
+                    w = ex["context"]["w"][1][0]
+                else:
+                    rid = ex["rid"][1][0]
+                    toks = ex["toks"][1]
+                    txt = ex["txt"][1][0]
+                    w = ex["w"][1][0]
+                rows.append(
+                    (sid, i, rid, len(toks), sum(toks), len(txt), sum(txt), int(round(w * 8)))
                 )
-                if recs is None:
-                    continue
-                # a valid TFRecord stream whose Examples carry a
-                # DIFFERENT feature set parses fine but breaks these
-                # projections — skip the shard like a parse refusal
-                # (no partial rows) rather than failing the task
-                shard_rows = []
-                try:
-                    for i, ex in enumerate(recs):
-                        if is_seq:
-                            rid = ex["context"]["rid"][1][0]
-                            toks = [
-                                v
-                                for f in ex["lists"]["toks"]
-                                for v in f[1]
-                            ]
-                            txt = ex["lists"]["txt"][0][1][0]
-                            w = ex["context"]["w"][1][0]
-                        else:
-                            rid = ex["rid"][1][0]
-                            toks = ex["toks"][1]
-                            txt = ex["txt"][1][0]
-                            w = ex["w"][1][0]
-                        shard_rows.append(
-                            (
-                                int(sid),
-                                i,
-                                rid,
-                                len(toks),
-                                sum(toks),
-                                len(txt),
-                                sum(txt),
-                                int(round(w * 8)),
-                            )
-                        )
-                except (KeyError, ValueError, TypeError, IndexError):
-                    continue
-                rows.extend(shard_rows)
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TFR_REC_SCHEMA.fields]
-            )
+        except (KeyError, ValueError, TypeError, IndexError):
+            return ()
+        return rows
 
-    return assets.mapInPandas(run, TFR_REC_SCHEMA)
+    return map_rows(assets, TFR_REC_SCHEMA, examples, "shard_id", "payload")

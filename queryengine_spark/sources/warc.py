@@ -73,9 +73,7 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -86,6 +84,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from queryengine_spark.plans import map_rows
 
 #: synthesis formula constants (mirrored in the oracle SQL)
 WARC_N_MOD = 6  # n_rec = 3 + shard % 6
@@ -656,17 +656,18 @@ WARC_RECORD_SCHEMA = StructType(
 
 
 def synthesize_warc(ids: DataFrame, id_col: str = "shard_id") -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            a = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "shard_id": a,
-                    "payload": [make_warc_shard(int(v)) for v in a],
-                }
-            )
+    return map_rows(ids, WARC_SHARD_SCHEMA, lambda a: [(a, make_warc_shard(a))], id_col)
 
-    return ids.mapInPandas(run, WARC_SHARD_SCHEMA)
+
+def _uri_hash(uri: str | None) -> int | None:
+    """Engine-portable md5-prefix hash of a target URI (None → None)."""
+    if uri is None:
+        return None
+    return int(hashlib.md5(uri.encode()).hexdigest()[:URI_HASH_HEX], 16)
+
+
+def _shard_fmt(b: bytes) -> str:
+    return "warc.gz" if b[:2] == b"\x1f\x8b" else "warc"
 
 
 def warc_record_stats(shards: DataFrame) -> DataFrame:
@@ -686,65 +687,36 @@ def warc_record_stats(shards: DataFrame) -> DataFrame:
     (contributes no row; the rest of the shard still parses — a
     crawler's bad capture must not poison its neighbors)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                b = bytes(payload)
-                fmt = "warc.gz" if b[:2] == b"\x1f\x8b" else "warc"
-                recs = parse_warc(b)
-                if recs is None:
-                    continue
-                for i, (headers, body) in enumerate(recs):
-                    uri = headers.get("warc-target-uri")
-                    uh = (
-                        int(hashlib.md5(uri.encode()).hexdigest()[:URI_HASH_HEX], 16)
-                        if uri is not None
-                        else None
-                    )
-                    status = nhdr = blen = bsum = None
-                    clen: int | None = len(body)
-                    psum: int | None = int(sum(body))
-                    mt = http_msgtype(headers)
-                    if mt is not None:
-                        parsed = parse_http_payload(body, mt)
-                        if parsed is None:
-                            continue  # claimed HTTP, malformed: no row
-                        status, hdrs, hbody = parsed
-                        nhdr = len(hdrs)
-                        blen = len(hbody)
-                        bsum = int(sum(hbody))
-                        if (
-                            "transfer-encoding" in hdrs
-                            or "content-encoding" in hdrs
-                        ):
-                            # r9: raw-layer byte accounting is only
-                            # reported for identity transfers — the
-                            # wire bytes of chunked/gzip bodies are a
-                            # transport artifact (and deliberately not
-                            # SQL-derivable); the DECODED view below
-                            # is the certified one
-                            clen = psum = None
-                    rows.append(
-                        (
-                            int(sid),
-                            i,
-                            fmt,
-                            headers["warc-type"],
-                            clen,
-                            psum,
-                            uh,
-                            status,
-                            nhdr,
-                            blen,
-                            bsum,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WARC_RECORD_SCHEMA.fields]
+    def records(sid, payload):
+        b = payload or b""
+        fmt = _shard_fmt(b)
+        for i, (headers, body) in enumerate(parse_warc(b) or ()):
+            status = nhdr = blen = bsum = None
+            clen: int | None = len(body)
+            psum: int | None = int(sum(body))
+            mt = http_msgtype(headers)
+            if mt is not None:
+                parsed = parse_http_payload(body, mt)
+                if parsed is None:
+                    continue  # claimed HTTP, malformed: no row
+                status, hdrs, hbody = parsed
+                nhdr = len(hdrs)
+                blen = len(hbody)
+                bsum = int(sum(hbody))
+                if "transfer-encoding" in hdrs or "content-encoding" in hdrs:
+                    # r9: raw-layer byte accounting is only
+                    # reported for identity transfers — the
+                    # wire bytes of chunked/gzip bodies are a
+                    # transport artifact (and deliberately not
+                    # SQL-derivable); the DECODED view below
+                    # is the certified one
+                    clen = psum = None
+            yield (
+                sid, i, fmt, headers["warc-type"], clen, psum,
+                _uri_hash(headers.get("warc-target-uri")), status, nhdr, blen, bsum,
             )
 
-    return shards.mapInPandas(run, WARC_RECORD_SCHEMA)
+    return map_rows(shards, WARC_RECORD_SCHEMA, records, "shard_id", "payload")
 
 
 WARC_CDX_SCHEMA = StructType(
@@ -780,53 +752,34 @@ def warc_cdx_records(shards: DataFrame) -> DataFrame:
     discipline). Zero shuffle."""
     import datetime
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                fmt = "warc.gz" if b[:2] == b"\x1f\x8b" else "warc"
-                recs = parse_warc_spans(b)
-                if recs is None:
-                    continue
-                for i, (off, ln, headers, body) in enumerate(recs):
-                    if headers.get("warc-type") != "response":
-                        continue
-                    if http_msgtype(headers) != "response":
-                        continue
-                    parsed = parse_http_payload(body, "response")
-                    if parsed is None:
-                        continue
-                    status, hdrs, _ = parsed
-                    uri = headers.get("warc-target-uri")
-                    key = surt(uri) if uri is not None else None
-                    if key is None:
-                        continue
-                    try:
-                        ts = datetime.datetime.strptime(
-                            headers["warc-date"], "%Y-%m-%dT%H:%M:%SZ"
-                        ).strftime("%Y%m%d%H%M%S")
-                    except ValueError:
-                        continue
-                    rows.append(
-                        (
-                            int(sid),
-                            i,
-                            fmt,
-                            key,
-                            ts,
-                            hdrs.get("content-type", "").split(";")[0],
-                            status,
-                            off,
-                            ln,
-                            hashlib.sha256(body.hex().encode()).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WARC_CDX_SCHEMA.fields]
+    def captures(sid, payload):
+        b = payload or b""
+        fmt = _shard_fmt(b)
+        for i, (off, ln, headers, body) in enumerate(parse_warc_spans(b) or ()):
+            if headers.get("warc-type") != "response":
+                continue
+            if http_msgtype(headers) != "response":
+                continue
+            parsed = parse_http_payload(body, "response")
+            if parsed is None:
+                continue
+            status, hdrs, _ = parsed
+            uri = headers.get("warc-target-uri")
+            key = surt(uri) if uri is not None else None
+            if key is None:
+                continue
+            try:
+                ts = datetime.datetime.strptime(
+                    headers["warc-date"], "%Y-%m-%dT%H:%M:%SZ"
+                ).strftime("%Y%m%d%H%M%S")
+            except ValueError:
+                continue
+            yield (
+                sid, i, fmt, key, ts, hdrs.get("content-type", "").split(";")[0],
+                status, off, ln, hashlib.sha256(body.hex().encode()).hexdigest(),
             )
 
-    return shards.mapInPandas(run, WARC_CDX_SCHEMA)
+    return map_rows(shards, WARC_CDX_SCHEMA, captures, "shard_id", "payload")
 
 
 WARC_LOOKUP_SCHEMA = StructType(
@@ -857,55 +810,36 @@ def warc_cdx_lookup(shards: DataFrame) -> DataFrame:
     slice is a ranged GET against the object store instead of a
     full-shard read. Zero shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                gz = b[:2] == b"\x1f\x8b"
-                fmt = "warc.gz" if gz else "warc"
-                spans = parse_warc_spans(b)
-                if spans is None:
+    def replays(sid, payload):
+        b = payload or b""
+        gz = b[:2] == b"\x1f\x8b"
+        fmt = _shard_fmt(b)
+        for i, (off, ln, hdrs0, _) in enumerate(parse_warc_spans(b) or ()):
+            if hdrs0.get("warc-type") != "response":
+                continue
+            # the ranged read: nothing below touches b again
+            sl = b[off : off + ln]
+            if gz:
+                members = gzip_members(sl)
+                if members is None or len(members) != 1:
                     continue
-                for i, (off, ln, hdrs0, _) in enumerate(spans):
-                    if hdrs0.get("warc-type") != "response":
-                        continue
-                    # the ranged read: nothing below touches b again
-                    sl = b[off : off + ln]
-                    if gz:
-                        members = gzip_members(sl)
-                        if members is None or len(members) != 1:
-                            continue
-                        raw = members[0]
-                    else:
-                        raw = sl
-                    rec = _parse_one_record(raw, 0)
-                    if rec is None or rec[2] != len(raw):
-                        continue
-                    headers, body, _ = rec
-                    if http_msgtype(headers) != "response":
-                        continue
-                    parsed = parse_http_payload(body, "response")
-                    if parsed is None:
-                        continue
-                    status, _, hbody = parsed
-                    uri = headers.get("warc-target-uri")
-                    uh = (
-                        int(
-                            hashlib.md5(uri.encode()).hexdigest()[:URI_HASH_HEX],
-                            16,
-                        )
-                        if uri is not None
-                        else None
-                    )
-                    rows.append(
-                        (int(sid), i, fmt, status, uh, len(hbody), sum(hbody))
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WARC_LOOKUP_SCHEMA.fields]
-            )
+                raw = members[0]
+            else:
+                raw = sl
+            rec = _parse_one_record(raw, 0)
+            if rec is None or rec[2] != len(raw):
+                continue
+            headers, body, _ = rec
+            if http_msgtype(headers) != "response":
+                continue
+            parsed = parse_http_payload(body, "response")
+            if parsed is None:
+                continue
+            status, _, hbody = parsed
+            uh = _uri_hash(headers.get("warc-target-uri"))
+            yield sid, i, fmt, status, uh, len(hbody), sum(hbody)
 
-    return shards.mapInPandas(run, WARC_LOOKUP_SCHEMA)
+    return map_rows(shards, WARC_LOOKUP_SCHEMA, replays, "shard_id", "payload")
 
 
 WARC_WET_SCHEMA = StructType(
@@ -930,47 +864,29 @@ def warc_wet_payloads(shards: DataFrame) -> DataFrame:
     extraction composes downstream (queries/curation2.py's regex
     chain / the streaming gate). Zero shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                fmt = "warc.gz" if b[:2] == b"\x1f\x8b" else "warc"
-                recs = parse_warc(b)
-                if recs is None:
-                    continue
-                for i, (headers, body) in enumerate(recs):
-                    if headers.get("warc-type") != "response":
-                        continue
-                    if http_msgtype(headers) != "response":
-                        continue
-                    parsed = parse_http_payload(body, "response")
-                    if parsed is None:
-                        continue
-                    status, hdrs, hbody = parsed
-                    if status != 200:
-                        continue
-                    if not hdrs.get("content-type", "").startswith("text/html"):
-                        continue
-                    try:
-                        html = hbody.decode("utf-8")
-                    except UnicodeDecodeError:
-                        continue
-                    uri = headers.get("warc-target-uri")
-                    uh = (
-                        int(
-                            hashlib.md5(uri.encode()).hexdigest()[:URI_HASH_HEX],
-                            16,
-                        )
-                        if uri is not None
-                        else None
-                    )
-                    rows.append((int(sid), i, fmt, uh, html))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WARC_WET_SCHEMA.fields]
-            )
+    def pages(sid, payload):
+        b = payload or b""
+        fmt = _shard_fmt(b)
+        for i, (headers, body) in enumerate(parse_warc(b) or ()):
+            if headers.get("warc-type") != "response":
+                continue
+            if http_msgtype(headers) != "response":
+                continue
+            parsed = parse_http_payload(body, "response")
+            if parsed is None:
+                continue
+            status, hdrs, hbody = parsed
+            if status != 200:
+                continue
+            if not hdrs.get("content-type", "").startswith("text/html"):
+                continue
+            try:
+                html = hbody.decode("utf-8")
+            except UnicodeDecodeError:
+                continue
+            yield sid, i, fmt, _uri_hash(headers.get("warc-target-uri")), html
 
-    return shards.mapInPandas(run, WARC_WET_SCHEMA)
+    return map_rows(shards, WARC_WET_SCHEMA, pages, "shard_id", "payload")
 
 
 # ---------------------------------------------------------------------------
@@ -1112,14 +1028,9 @@ def make_warc_shard_revisit(shard_id: int) -> bytes:
 def synthesize_warc_revisit(
     ids: DataFrame, id_col: str = "shard_id"
 ) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid in pdf[id_col].astype("int64"):
-                rows.append((int(sid), make_warc_shard_revisit(int(sid))))
-            yield pd.DataFrame(rows, columns=["shard_id", "payload"])
-
-    return ids.mapInPandas(run, WARC_SHARD_SCHEMA)
+    return map_rows(
+        ids, WARC_SHARD_SCHEMA, lambda a: [(a, make_warc_shard_revisit(a))], id_col
+    )
 
 
 WARC_REVISIT_SCHEMA = StructType(
@@ -1150,72 +1061,49 @@ def warc_revisit_stats(shards: DataFrame) -> DataFrame:
     the original body the archive did not re-store). A revisit whose
     reference does not resolve contributes no row (structural loss —
     caught by the oracle's row count). Zero shuffle: resolution is
-    within-shard, inside the same mapInPandas pass."""
+    within-shard, inside the same map_rows pass."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                fmt = "warc.gz" if b[:2] == b"\x1f\x8b" else "warc"
-                recs = parse_warc(b)
-                if recs is None:
+    def resolve(sid, payload):
+        b = payload or b""
+        fmt = _shard_fmt(b)
+        recs = parse_warc(b)
+        if recs is None:
+            return
+        originals: dict[str, tuple[int, str, int]] = {}
+        for i, (headers, body) in enumerate(recs):
+            if headers.get("warc-type") != "response":
+                continue
+            parsed = parse_http_payload(body, "response")
+            if parsed is None:
+                continue
+            _, _, hbody = parsed
+            dig = hashlib.sha256(hbody.hex().encode("ascii")).hexdigest()
+            originals[headers.get("warc-record-id", "")] = (i, dig, len(hbody))
+        for i, (headers, body) in enumerate(recs):
+            rt = headers.get("warc-type")
+            uh = _uri_hash(headers.get("warc-target-uri") or None)
+            if rt == "response":
+                rid = headers.get("warc-record-id", "")
+                if rid not in originals:
                     continue
-                originals: dict[str, tuple[int, str, int]] = {}
-                for i, (headers, body) in enumerate(recs):
-                    if headers.get("warc-type") != "response":
-                        continue
-                    parsed = parse_http_payload(body, "response")
-                    if parsed is None:
-                        continue
-                    _, _, hbody = parsed
-                    dig = hashlib.sha256(
-                        hbody.hex().encode("ascii")
-                    ).hexdigest()
-                    originals[headers.get("warc-record-id", "")] = (
-                        i, dig, len(hbody),
-                    )
-                for i, (headers, body) in enumerate(recs):
-                    rt = headers.get("warc-type")
-                    uri = headers.get("warc-target-uri")
-                    uh = (
-                        int(
-                            hashlib.md5(uri.encode()).hexdigest()[:URI_HASH_HEX],
-                            16,
-                        )
-                        if uri
-                        else None
-                    )
-                    if rt == "response":
-                        rid = headers.get("warc-record-id", "")
-                        if rid not in originals:
-                            continue
-                        _, dig, blen = originals[rid]
-                        rows.append(
-                            (int(sid), i, fmt, "response", uh, None,
-                             dig, None, blen, None)
-                        )
-                    elif rt == "revisit":
-                        if (
-                            headers.get("warc-profile") != REVISIT_PROFILE
-                            or "warc-refers-to" not in headers
-                        ):
-                            continue
-                        ref = originals.get(headers["warc-refers-to"])
-                        if ref is None:
-                            continue  # unresolvable reference
-                        ref_i, ref_dig, ref_len = ref
-                        claimed = headers.get("warc-payload-digest", "")
-                        claimed = claimed.split(":", 1)[-1]
-                        rows.append(
-                            (int(sid), i, fmt, "revisit", uh, ref_i,
-                             claimed, claimed == ref_dig, None, ref_len)
-                        )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WARC_REVISIT_SCHEMA.fields]
-            )
+                _, dig, blen = originals[rid]
+                yield sid, i, fmt, "response", uh, None, dig, None, blen, None
+            elif rt == "revisit":
+                if (
+                    headers.get("warc-profile") != REVISIT_PROFILE
+                    or "warc-refers-to" not in headers
+                ):
+                    continue
+                ref = originals.get(headers["warc-refers-to"])
+                if ref is None:
+                    continue  # unresolvable reference
+                ref_i, ref_dig, ref_len = ref
+                claimed = headers.get("warc-payload-digest", "")
+                claimed = claimed.split(":", 1)[-1]
+                yield (sid, i, fmt, "revisit", uh, ref_i,
+                       claimed, claimed == ref_dig, None, ref_len)
 
-    return shards.mapInPandas(run, WARC_REVISIT_SCHEMA)
+    return map_rows(shards, WARC_REVISIT_SCHEMA, resolve, "shard_id", "payload")
 
 
 # ---------------------------------------------------------------------------
@@ -1315,75 +1203,53 @@ def warc_wat_records(shards: DataFrame) -> DataFrame:
     oracle reconstructs the IDENTICAL strings from the synthesis
     formulas, so the driver hash certifies a byte-exact metadata
     producer, not just matching counts. Zero shuffle (chained
-    mapInPandas). With source_warc_records (ingest),
+    map_rows). With source_warc_records (ingest),
     text_html_extract's WET leg (text), source_warc_cdx (index) and
     this (metadata), the engine produces every CommonCrawl artifact
     type."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                fmt = "warc.gz" if b[:2] == b"\x1f\x8b" else "warc"
-                recs = parse_warc(b)
-                if recs is None:
+    def envelopes(sid, payload):
+        b = payload or b""
+        fmt = _shard_fmt(b)
+        for i, (headers, pay) in enumerate(parse_warc(b) or ()):
+            rtype = headers.get("warc-type")
+            uri = headers.get("warc-target-uri")
+            if rtype == "response":
+                if http_msgtype(headers) != "response":
                     continue
-                for i, (headers, pay) in enumerate(recs):
-                    rtype = headers.get("warc-type")
-                    uri = headers.get("warc-target-uri")
-                    js = None
-                    if rtype == "response":
-                        if http_msgtype(headers) != "response":
-                            continue
-                        parsed = parse_http_payload(pay, "response")
-                        if parsed is None:
-                            continue
-                        status, hh, body = parsed
-                        if "transfer-encoding" in hh:
-                            enc = "chunked"
-                        elif "content-encoding" in hh:
-                            enc = "gzip"
-                        else:
-                            enc = "identity"
-                        js = _wat_json(uri or "", status, enc, len(body))
-                    elif rtype == "request":
-                        if http_msgtype(headers) != "request":
-                            continue
-                        parsed = parse_http_payload(pay, "request")
-                        if parsed is None:
-                            continue
-                        _, _hh, body = parsed
-                        first = pay.split(b"\r\n", 1)[0].decode("latin-1")
-                        method, path = first.split(" ")[0], first.split(" ")[1]
-                        js = _wat_json_request(
-                            uri or "", method, path, len(body)
-                        )
-                    elif rtype in ("warcinfo", "metadata"):
-                        fields = _warc_fields(pay)
-                        if fields is None:
-                            continue
-                        meta_key = (
-                            "WARC-Info-Metadata"
-                            if rtype == "warcinfo"
-                            else "WARC-Metadata-Metadata"
-                        )
-                        js = _wat_json_fields(rtype, meta_key, uri, fields)
-                    else:
-                        continue  # revisit/other: no WAT envelope here
-                    uh = (
-                        int(
-                            hashlib.md5(uri.encode()).hexdigest()[
-                                :URI_HASH_HEX
-                            ],
-                            16,
-                        )
-                        if uri
-                        else None
-                    )
-                    rows.append((int(sid), i, fmt, rtype, uh, js, len(js)))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WAT_SCHEMA.fields]
-            )
+                parsed = parse_http_payload(pay, "response")
+                if parsed is None:
+                    continue
+                status, hh, body = parsed
+                if "transfer-encoding" in hh:
+                    enc = "chunked"
+                elif "content-encoding" in hh:
+                    enc = "gzip"
+                else:
+                    enc = "identity"
+                js = _wat_json(uri or "", status, enc, len(body))
+            elif rtype == "request":
+                if http_msgtype(headers) != "request":
+                    continue
+                parsed = parse_http_payload(pay, "request")
+                if parsed is None:
+                    continue
+                _, _hh, body = parsed
+                first = pay.split(b"\r\n", 1)[0].decode("latin-1")
+                method, path = first.split(" ")[0], first.split(" ")[1]
+                js = _wat_json_request(uri or "", method, path, len(body))
+            elif rtype in ("warcinfo", "metadata"):
+                fields = _warc_fields(pay)
+                if fields is None:
+                    continue
+                meta_key = (
+                    "WARC-Info-Metadata"
+                    if rtype == "warcinfo"
+                    else "WARC-Metadata-Metadata"
+                )
+                js = _wat_json_fields(rtype, meta_key, uri, fields)
+            else:
+                continue  # revisit/other: no WAT envelope here
+            yield sid, i, fmt, rtype, _uri_hash(uri or None), js, len(js)
 
-    return shards.mapInPandas(run, WAT_SCHEMA)
+    return map_rows(shards, WAT_SCHEMA, envelopes, "shard_id", "payload")

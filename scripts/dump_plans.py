@@ -36,10 +36,10 @@ AUDITED = [
     ("etl_apply_cdc", "single key Exchange; latest-seq reduction as WindowGroupLimit, not sort+filter"),
     ("pipeline_sequence_packing", "window cumsum + bounded explode + partial-agg groupBy; ZERO joins"),
     ("dedup_cross_source_overlap", "trigram inverted self-join after broadcast hot-set anti-join; per-source counts broadcast"),
-    ("multimodal_image_decode", "two chained MapInPandas; only exchange is the deliberate round-robin spread"),
+    ("multimodal_image_decode", "two chained MapInArrow; only exchange is the deliberate round-robin spread"),
     ("text_lm_surprise", "vocab count tables BroadcastHashJoin back onto the pair stream; final per-doc partial agg"),
     ("dedup_jaccard_prefix", "prefix equi-self-join + length filter, then exact verify equi-joins; no cartesian"),
-    ("multimodal_media_suite", "r7 fold: four media-transform legs unioned, each a MapInPandas chain; only exchanges are the deliberate round-robin spreads + the union"),
+    ("multimodal_media_suite", "r7 fold: four media-transform legs unioned, each a MapInArrow chain; only exchanges are the deliberate round-robin spreads + the union"),
     ("knn_filtered", "two pre-filter legs: (cell,key) and (cell,bin) probe equi-joins; range window check BEFORE cosine; no cartesian"),
     ("knn_sq8", "cell equi-join over 8-bit codes; integer encode/recon as pure Column transforms; WindowGroupLimit top-k"),
     ("pipeline_pack_sequences", "two-phase global prefix sum: range Exchange + per-partition window + broadcast offsets join; NO SinglePartition window"),
@@ -48,13 +48,13 @@ AUDITED = [
     ("text_chunk_rag", "split/slice/explode pure JVM; no UDF, no join"),
     ("knn_ann_suite", "three-leg union: brute ground truth (deliberate BNLJ) + bucket/cell equi-joins for LSH/IVF"),
     ("text_pii_pseudonymize", "pure-Column regex fold; zero Exchange"),
-    ("pipeline_cc_ingest", "r10 composite: ONE FlatMapGroupsInPandas shard assembly (localCheckpointed fan-in), zero-shuffle replay/extract MapInPandas, id-keyed minhash joins, range-Exchange prefix-sum packing; no cartesian"),
-    ("source_pdf_text", "r11: one deliberate spread Exchange of the narrow id relation, then two chained MapInPandas (synthesize, xref-walk + extract); zero joins"),
-    ("source_warc_wat", "r11: same fan-out-then-map shape — spread Exchange + two MapInPandas; the full-record-set WAT production stays row-linear"),
-    ("source_avro_records", "r11: spread Exchange + two chained MapInPandas (synthesize, container-walk + record fan-out); zero joins"),
+    ("pipeline_cc_ingest", "r10 composite: ONE FlatMapGroupsInPandas shard assembly (localCheckpointed fan-in), zero-shuffle replay/extract MapInArrow, id-keyed minhash joins, range-Exchange prefix-sum packing; no cartesian"),
+    ("source_pdf_text", "r11: one deliberate spread Exchange of the narrow id relation, then two chained MapInArrow (synthesize, xref-walk + extract); zero joins"),
+    ("source_warc_wat", "r11: same fan-out-then-map shape — spread Exchange + two MapInArrow; the full-record-set WAT production stays row-linear"),
+    ("source_avro_records", "r11: spread Exchange + two chained MapInArrow (synthesize, container-walk + record fan-out); zero joins"),
     ("pipeline_hard_negatives", "r11: broadcast anchors over the corpus scan; threshold split feeds WindowGroupLimit top-k + a broadcast positive-count join; the cross join is the documented bounded-anchor eval twin"),
-    ("source_sqlite_rows", "r11: spread Exchange + two chained MapInPandas (sqlite3 synthesis, from-scratch page walk); zero joins"),
-    ("source_tfrecord_examples", "r11: spread Exchange + two chained MapInPandas (framed synthesis, CRC32C + wire-format walk); zero joins"),
+    ("source_sqlite_rows", "r11: spread Exchange + two chained MapInArrow (sqlite3 synthesis, from-scratch page walk); zero joins"),
+    ("source_tfrecord_examples", "r11: spread Exchange + two chained MapInArrow (framed synthesis, CRC32C + wire-format walk); zero joins"),
 ]
 
 

@@ -9,27 +9,300 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from queryengine_spark.multimodal.gif import lzw_decode, lzw_encode
+from queryengine_spark.multimodal.gif import GIF_LZW
+from queryengine_spark.multimodal.lzw import lzw_decode, lzw_encode
 from queryengine_spark.multimodal.png import _filter_row, _unfilter_row
+from queryengine_spark.multimodal.tiff import TIFF_LZW
+
+#: both LZW variants the shared engine serves
+LZW_VARIANTS = st.sampled_from([GIF_LZW, TIFF_LZW])
 
 
 @settings(max_examples=200, deadline=None)
-@given(st.binary(min_size=0, max_size=2000))
-def test_lzw_roundtrip_any_bytes(data):
-    assert lzw_decode(lzw_encode(data, 8), 8) == data
+@given(LZW_VARIANTS, st.binary(min_size=0, max_size=2000))
+def test_lzw_roundtrip_any_bytes(rules, data):
+    assert lzw_decode(lzw_encode(data, 8, rules), 8, rules) == data
 
 
 @settings(max_examples=100, deadline=None)
 @given(
+    LZW_VARIANTS,
     st.integers(min_value=0, max_value=3),
     st.binary(min_size=0, max_size=500),
 )
-def test_lzw_roundtrip_small_alphabet(mcs_shift, raw):
+def test_lzw_roundtrip_small_alphabet(rules, mcs_shift, raw):
     # min_code_size 2..5 over a clamped alphabet (valid GIF inputs:
     # every index < 2^min_code_size)
     mcs = 2 + mcs_shift
     data = bytes(b % (1 << mcs) for b in raw)
-    assert lzw_decode(lzw_encode(data, mcs), mcs) == data
+    assert lzw_decode(lzw_encode(data, mcs, rules), mcs, rules) == data
+
+
+# ---------------------------------------------------------------------------
+# Parity oracle: the two per-format LZW engines the shared one replaced
+# (GIF's lzw_encode/lzw_decode and TIFF's lzw_tiff_encode/
+# lzw_tiff_decode), copied verbatim so the shared engine is pinned
+# byte-for-byte against both on arbitrary inputs.
+
+
+def _old_gif_encode(data: bytes, min_code_size: int = 8) -> bytes:
+    clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
+    out = bytearray()
+    acc = 0
+    nbits = 0
+    dec_len = eoi + 1
+    dec_width = min_code_size + 1
+    first_after_clear = True
+
+    def emit(code: int) -> None:
+        nonlocal acc, nbits, dec_len, dec_width, first_after_clear
+        acc |= code << nbits
+        nbits += dec_width
+        while nbits >= 8:
+            out.append(acc & 0xFF)
+            acc >>= 8
+            nbits -= 8
+        if code == clear:
+            dec_len = eoi + 1
+            dec_width = min_code_size + 1
+            first_after_clear = True
+        elif code != eoi:
+            if first_after_clear:
+                first_after_clear = False
+            elif dec_len < 4096:
+                dec_len += 1
+                if dec_len >= (1 << dec_width) and dec_width < 12:
+                    dec_width += 1
+
+    table: dict[tuple[int, int], int] = {}
+    next_code = eoi + 1
+    emit(clear)
+    cur = -1
+    for byte in data:
+        if cur < 0:
+            cur = byte
+            continue
+        nc = table.get((cur, byte))
+        if nc is not None:
+            cur = nc
+            continue
+        emit(cur)
+        if next_code < 4096:
+            table[(cur, byte)] = next_code
+            next_code += 1
+        else:
+            emit(clear)
+            table.clear()
+            next_code = eoi + 1
+        cur = byte
+    if cur >= 0:
+        emit(cur)
+    emit(eoi)
+    if nbits:
+        out.append(acc & 0xFF)
+    return bytes(out)
+
+
+def _old_gif_decode(data: bytes, min_code_size: int = 8) -> bytes | None:
+    clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
+    total_bits = len(data) * 8
+    pos = 0
+    bitbuf = 0
+    bitcnt = 0
+    bytepos = 0
+
+    def read(width: int) -> int | None:
+        nonlocal pos, bitbuf, bitcnt, bytepos
+        if pos + width > total_bits:
+            return None
+        while bitcnt < width:
+            bitbuf |= data[bytepos] << bitcnt
+            bytepos += 1
+            bitcnt += 8
+        val = bitbuf & ((1 << width) - 1)
+        bitbuf >>= width
+        bitcnt -= width
+        pos += width
+        return val
+
+    out = bytearray()
+    table: list[bytes] = []
+    width = min_code_size + 1
+    prev: bytes | None = None
+    base = [bytes([i]) for i in range(1 << min_code_size)] + [b"", b""]
+
+    def reset() -> None:
+        nonlocal table, width, prev
+        table = base.copy()
+        width = min_code_size + 1
+        prev = None
+
+    reset()
+    while True:
+        code = read(width)
+        if code is None:
+            return None
+        if code == clear:
+            reset()
+            continue
+        if code == eoi:
+            return bytes(out)
+        if prev is None:
+            if code >= len(table):
+                return None
+            entry = table[code]
+        elif code < len(table):
+            entry = table[code]
+        elif code == len(table):
+            entry = prev + prev[:1]
+        else:
+            return None
+        out += entry
+        if prev is not None and len(table) < 4096:
+            table.append(prev + entry[:1])
+            if len(table) >= (1 << width) and width < 12:
+                width += 1
+        prev = entry
+
+
+def _old_tiff_encode(data: bytes) -> bytes:
+    out = bytearray()
+    acc = 0
+    nbits = 0
+    dec_len = 258
+    dec_width = 9
+    first_after_clear = True
+
+    def emit(code: int) -> None:
+        nonlocal acc, nbits, dec_len, dec_width, first_after_clear
+        acc = (acc << dec_width) | code
+        nbits += dec_width
+        while nbits >= 8:
+            out.append((acc >> (nbits - 8)) & 0xFF)
+            nbits -= 8
+        acc &= (1 << nbits) - 1
+        if code == 256:
+            dec_len = 258
+            dec_width = 9
+            first_after_clear = True
+        elif code != 257:
+            if first_after_clear:
+                first_after_clear = False
+            elif dec_len < 4094:
+                dec_len += 1
+                if dec_len >= (1 << dec_width) - 1 and dec_width < 12:
+                    dec_width += 1
+
+    table: dict[tuple[int, int], int] = {}
+    next_code = 258
+    emit(256)
+    cur = -1
+    for byte in data:
+        if cur < 0:
+            cur = byte
+            continue
+        nc = table.get((cur, byte))
+        if nc is not None:
+            cur = nc
+            continue
+        emit(cur)
+        if next_code < 4094:
+            table[(cur, byte)] = next_code
+            next_code += 1
+        else:
+            emit(256)
+            table.clear()
+            next_code = 258
+        cur = byte
+    if cur >= 0:
+        emit(cur)
+    emit(257)
+    if nbits:
+        out.append((acc << (8 - nbits)) & 0xFF)
+    return bytes(out)
+
+
+def _old_tiff_decode(data: bytes) -> bytes | None:
+    pos = 0
+    total = len(data) * 8
+    bitbuf = 0
+    bitcnt = 0
+    bytepos = 0
+
+    def read(width: int) -> int | None:
+        nonlocal pos, bitbuf, bitcnt, bytepos
+        if pos + width > total:
+            return None
+        while bitcnt < width:
+            bitbuf = (bitbuf << 8) | data[bytepos]
+            bytepos += 1
+            bitcnt += 8
+        bitcnt -= width
+        val = bitbuf >> bitcnt
+        bitbuf &= (1 << bitcnt) - 1
+        pos += width
+        return val
+
+    out = bytearray()
+    table: list[bytes] = []
+    width = 9
+    prev: bytes | None = None
+    base = [bytes([i]) for i in range(256)] + [b"", b""]
+
+    def reset() -> None:
+        nonlocal table, width, prev
+        table = base.copy()
+        width = 9
+        prev = None
+
+    reset()
+    while True:
+        code = read(width)
+        if code is None:
+            return None
+        if code == 256:
+            reset()
+            continue
+        if code == 257:
+            return bytes(out)
+        if prev is None:
+            if code >= len(table):
+                return None
+            entry = table[code]
+        elif code < len(table):
+            entry = table[code]
+        elif code == len(table):
+            entry = prev + prev[:1]
+        else:
+            return None
+        out += entry
+        if prev is not None and len(table) < 4094:
+            table.append(prev + entry[:1])
+            if len(table) >= (1 << width) - 1 and width < 12:
+                width += 1
+        prev = entry
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.integers(min_value=0, max_value=6),
+    st.binary(min_size=0, max_size=3000),
+    st.binary(min_size=0, max_size=64),
+)
+def test_lzw_shared_engine_matches_per_format_engines(mcs_shift, raw, junk):
+    """Byte-identical encodes and identical decodes (incl. None on
+    truncated or junk streams) against the replaced GIF and TIFF
+    engines."""
+    mcs = 2 + mcs_shift
+    gif_data = bytes(b % (1 << mcs) for b in raw)
+    enc = lzw_encode(gif_data, mcs, GIF_LZW)
+    assert enc == _old_gif_encode(gif_data, mcs)
+    for stream in (enc, enc[: len(enc) // 2], junk):
+        assert lzw_decode(stream, mcs, GIF_LZW) == _old_gif_decode(stream, mcs)
+    enc = lzw_encode(raw, 8, TIFF_LZW)
+    assert enc == _old_tiff_encode(raw)
+    for stream in (enc, enc[: len(enc) // 2], junk):
+        assert lzw_decode(stream, 8, TIFF_LZW) == _old_tiff_decode(stream)
 
 
 @settings(max_examples=200, deadline=None)
@@ -101,7 +374,7 @@ def test_bmp8_palette_roundtrip(w, h, data):
 def test_wav24_roundtrip(samples):
     """Random int24 samples survive pack → container → RIFF walk →
     sign extension, including odd byte counts (word-alignment pad)."""
-    from queryengine_spark.multimodal.bmp import (
+    from queryengine_spark.multimodal.wav import (
         _wav_container,
         decode_pcm_wav,
         pack_int24,
@@ -144,7 +417,7 @@ def test_bmp8_hand_vector():
 def test_wav24_hand_vector():
     """Hand-packed 24-bit samples: +1 = 01 00 00, -1 = FF FF FF,
     -8388608 = 00 00 80 (sign bit), 8388607 = FF FF 7F."""
-    from queryengine_spark.multimodal.bmp import _wav_container, decode_pcm_wav
+    from queryengine_spark.multimodal.wav import _wav_container, decode_pcm_wav
 
     data = bytes(
         [0x01, 0x00, 0x00, 0xFF, 0xFF, 0xFF, 0x00, 0x00, 0x80, 0xFF, 0xFF, 0x7F]
@@ -170,7 +443,7 @@ def test_wav_stereo_interleave_hand_vector():
     flat stream; blockAlign/byteRate declare 2 channels."""
     import struct
 
-    from queryengine_spark.multimodal.bmp import decode_pcm_wav
+    from queryengine_spark.multimodal.wav import decode_pcm_wav
 
     data = struct.pack("<hhhh", 100, -200, 300, -32768)
     fmt = struct.pack("<HHIIHH", 1, 2, 8000, 8000 * 4, 4, 16)
@@ -184,7 +457,7 @@ def test_wav_stereo_interleave_hand_vector():
 
 
 def test_wav_stereo_formula_assets():
-    from queryengine_spark.multimodal.bmp import (
+    from queryengine_spark.multimodal.wav import (
         _sample_st,
         decode_pcm_wav,
         make_pcm_wav_stereo,
@@ -207,7 +480,7 @@ def test_wav_multichannel_formula_assets():
     """r6: the channel gate widened from {1,2} to 1..8 — six-channel
     (5.1) frames decode to the interleaved flat stream with channel
     c's formula offset c·STEREO_OFF."""
-    from queryengine_spark.multimodal.bmp import (
+    from queryengine_spark.multimodal.wav import (
         _sample_st,
         decode_pcm_wav,
         make_pcm_wav_multi,
@@ -231,7 +504,7 @@ def test_wav_channel_count_limits():
     practical range (9+)."""
     import struct
 
-    from queryengine_spark.multimodal.bmp import decode_pcm_wav
+    from queryengine_spark.multimodal.wav import decode_pcm_wav
 
     def wav_with_channels(nch):
         fmt = struct.pack("<HHIIHH", 1, nch, 8000, 8000 * 2 * max(nch, 1), 2 * max(nch, 1), 16)
@@ -317,7 +590,7 @@ def test_bmp_rle8_refusals():
 def test_ulaw_endpoint_pins():
     """G.711 canonical endpoints: 0xFF is +0, 0x7F is −0, 0x00 is
     −32124, 0x80 is +32124."""
-    from queryengine_spark.multimodal.bmp import ulaw2linear
+    from queryengine_spark.multimodal.wav import ulaw2linear
 
     assert ulaw2linear(0xFF) == 0
     assert ulaw2linear(0x7F) == 0
@@ -328,7 +601,7 @@ def test_ulaw_endpoint_pins():
 def test_ulaw_all_bytes_vs_independent_formulation():
     """All 256 codes vs the algebraic variant 4·(2m+33)·2^e − 132 and
     the sign-symmetry property decode(u) == −decode(u ^ 0x80)."""
-    from queryengine_spark.multimodal.bmp import ulaw2linear
+    from queryengine_spark.multimodal.wav import ulaw2linear
 
     for u in range(256):
         c = ~u & 0xFF
@@ -341,7 +614,7 @@ def test_ulaw_all_bytes_vs_independent_formulation():
 def test_ulaw_wav_decode_matches_table():
     import numpy as np
 
-    from queryengine_spark.multimodal.bmp import (
+    from queryengine_spark.multimodal.wav import (
         _wav_container,
         decode_pcm_wav,
         ulaw2linear,
@@ -357,7 +630,7 @@ def test_alaw_endpoint_pins():
     """G.711 A-law canonical endpoints (r11): 0xD5 is +8 (the A-law
     'zero' — A-law has no true 0), 0x55 is −8, 0xAA is +32256,
     0x2A is −32256; sign bit SET means POSITIVE."""
-    from queryengine_spark.multimodal.bmp import alaw2linear
+    from queryengine_spark.multimodal.wav import alaw2linear
 
     assert alaw2linear(0xD5) == 8
     assert alaw2linear(0x55) == -8
@@ -369,7 +642,7 @@ def test_alaw_all_bytes_vs_independent_formulation():
     """All 256 codes vs the algebraic variant and the sign-symmetry
     property decode(a) == −decode(a ^ 0x80); magnitudes are even,
     in [8, 32256], and monotone within a sign."""
-    from queryengine_spark.multimodal.bmp import alaw2linear
+    from queryengine_spark.multimodal.wav import alaw2linear
 
     for a in range(256):
         v = a ^ 0x55
@@ -383,7 +656,7 @@ def test_alaw_all_bytes_vs_independent_formulation():
 def test_alaw_wav_decode_matches_table():
     import numpy as np  # noqa: F401
 
-    from queryengine_spark.multimodal.bmp import (
+    from queryengine_spark.multimodal.wav import (
         _wav_container,
         alaw2linear,
         decode_pcm_wav,
@@ -398,7 +671,7 @@ def test_alaw_wav_decode_matches_table():
 def test_alaw_corpus_slot_roundtrip():
     """The %16==11 mixed-corpus leg: synthesized A-law WAV decodes to
     the byte formula expanded through alaw2linear."""
-    from queryengine_spark.multimodal.bmp import (
+    from queryengine_spark.multimodal.wav import (
         _alaw_byte,
         alaw2linear,
         decode_pcm_wav,
@@ -419,7 +692,7 @@ def test_float_wav_renders_and_clamps():
     tiny negatives floor DOWN: −1/65536 → −1)."""
     import struct
 
-    from queryengine_spark.multimodal.bmp import _wav_container, decode_pcm_wav
+    from queryengine_spark.multimodal.wav import _wav_container, decode_pcm_wav
 
     fs = [0.0, 0.5, -0.5, 1.5, -2.0, -1.0 / 65536.0]
     data = b"".join(struct.pack("<f", f) for f in fs)
@@ -431,7 +704,7 @@ def test_float_wav_renders_and_clamps():
 def test_wav_format_bits_gates():
     """Format/bits mismatches refuse: µ-law must be 8-bit, float
     32-bit, PCM 16/24; unknown format tags refuse outright."""
-    from queryengine_spark.multimodal.bmp import _wav_container, decode_pcm_wav
+    from queryengine_spark.multimodal.wav import _wav_container, decode_pcm_wav
 
     assert decode_pcm_wav(_wav_container(8000, 16, b"\0\0", fmt_tag=7)) is None
     assert decode_pcm_wav(_wav_container(8000, 16, b"\0\0", fmt_tag=3)) is None
@@ -454,7 +727,7 @@ def test_adpcm_hand_vector():
 
     import numpy as np
 
-    from queryengine_spark.multimodal.bmp import decode_adpcm_wav
+    from queryengine_spark.multimodal.wav import decode_adpcm_wav
 
     balign = 5  # 4-byte header + 1 nibble byte -> spb = 3
     block = struct.pack("<hBB", 100, 4, 0) + bytes([0x93])
@@ -482,7 +755,7 @@ def test_adpcm_clamping_hand_vector():
     32767 - 61436 = -28669 (in range); idx stays 88."""
     import struct
 
-    from queryengine_spark.multimodal.bmp import decode_adpcm_wav
+    from queryengine_spark.multimodal.wav import decode_adpcm_wav
 
     block = struct.pack("<hBB", 32000, 88, 0) + bytes([0xF7])
     fmt = struct.pack("<HHIIHHHH", 0x11, 1, 8000, 8000, 5, 4, 2, 3)
@@ -501,7 +774,7 @@ def test_adpcm_clamping_hand_vector():
 def test_adpcm_synthesis_roundtrip_tracks_source():
     import numpy as np
 
-    from queryengine_spark.multimodal.bmp import (
+    from queryengine_spark.multimodal.wav import (
         ADPCM_BLOCK_ALIGN,
         _sample,
         decode_adpcm_wav,
@@ -527,7 +800,7 @@ def test_adpcm_synthesis_roundtrip_tracks_source():
 def test_adpcm_refusals():
     import struct
 
-    from queryengine_spark.multimodal.bmp import (
+    from queryengine_spark.multimodal.wav import (
         decode_adpcm_wav,
         decode_pcm_wav,
         make_wav_adpcm,

@@ -587,7 +587,7 @@ class TestBmpDecode:
 
 class TestWavDecode:
     def test_roundtrip_matches_formula(self):
-        from queryengine_spark.multimodal.bmp import (
+        from queryengine_spark.multimodal.wav import (
             _sample,
             decode_pcm_wav,
             make_pcm_wav,
@@ -603,7 +603,7 @@ class TestWavDecode:
     def test_unknown_chunks_are_skipped(self):
         import struct
 
-        from queryengine_spark.multimodal.bmp import decode_pcm_wav, make_pcm_wav
+        from queryengine_spark.multimodal.wav import decode_pcm_wav, make_pcm_wav
 
         b = make_pcm_wav(9)
         # splice a LIST chunk (odd size → word-aligned skip) between fmt and data
@@ -620,7 +620,7 @@ class TestWavDecode:
         import random
         import struct
 
-        from queryengine_spark.multimodal.bmp import decode_pcm_wav, make_pcm_wav
+        from queryengine_spark.multimodal.wav import decode_pcm_wav, make_pcm_wav
 
         rng = random.Random(8)
         for p in (b"", b"RIFF", b"RIFFxxxxWAVE", bytes(rng.randrange(256) for _ in range(64))):

@@ -190,7 +190,7 @@ def test_audio_zero_crossing_hand_vector():
 
 
 def test_audio_frame_features_against_formula(spark):
-    from queryengine_spark.multimodal.bmp import _sample, wav_audio_params
+    from queryengine_spark.multimodal.wav import _sample, wav_audio_params
 
     ids = spark.createDataFrame([(i,) for i in range(5)], "asset_id long")
     rows = audio_frame_features(ids, win=AF_WIN).collect()
@@ -214,7 +214,7 @@ def test_audio_frame_features_against_formula(spark):
 
 
 def test_mediaops_plans_are_single_map_chains(spark, sf_dir):
-    """All three media ops must stay row-linear mapInPandas chains:
+    """All three media ops must stay row-linear map_rows chains:
     the only allowed exchange is the deliberate round-robin spread()
     that parallelizes synthesis of single-file inputs — no
     required-distribution shuffle, no join (the 100 TB shape: the
@@ -229,7 +229,7 @@ def test_mediaops_plans_are_single_map_chains(spark, sf_dir):
         plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         assert "ENSURE_REQUIREMENTS" not in plan, fn.__name__
         assert "Join" not in plan, fn.__name__
-        assert "MapInPandas" in plan, fn.__name__
+        assert "MapInArrow" in plan, fn.__name__
 
 
 # ----------------------------------------------------------- augment (r8)

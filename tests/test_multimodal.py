@@ -1,5 +1,5 @@
 """Multimodal binary-column plumbing: Arrow round-trips of binary
-payloads through mapInPandas, deterministic fake decode, and the
+payloads through map_rows (mapInArrow), deterministic fake decode, and the
 1→N frame-sampling shape."""
 
 from __future__ import annotations
@@ -60,9 +60,7 @@ def test_sample_frames_expands_rows(spark):
 
 def test_extract_features_real_bmp_dims(spark):
     """A BMP payload must take the REAL decode path: true container
-    dimensions (bmp_params), not the md5-derived fake — in both the
-    pandas and Arrow extractors."""
-    from queryengine_spark.multimodal import extract_features_arrow
+    dimensions (bmp_params), not the md5-derived fake."""
     from queryengine_spark.multimodal.bmp import bmp_params, make_bmp
 
     ids = [5, 16, 123]
@@ -70,31 +68,17 @@ def test_extract_features_real_bmp_dims(spark):
         [(i, "image/bmp", make_bmp(i), len(make_bmp(i))) for i in ids],
         ["asset_id", "media_type", "payload", "n_bytes"],
     )
-    for extractor in (extract_features, extract_features_arrow):
-        got = {r["asset_id"]: (r["width"], r["height"]) for r in extractor(df).collect()}
-        assert got == {i: bmp_params(i) for i in ids}
-
-
-def test_map_in_arrow_features_equal_pandas(spark, sf_dir):
-    """The mapInArrow extractor must produce exactly the mapInPandas
-    extractor's rows (same fake decode, same hashing)."""
-    from queryengine_spark.multimodal import extract_features, extract_features_arrow
-    from queryengine_spark.queries.multimodal import _assets
-
-    a = _assets(spark, sf_dir)
-    lhs = sorted(map(tuple, extract_features(a).collect()))
-    rhs = sorted(map(tuple, extract_features_arrow(a).collect()))
-    assert lhs == rhs and len(lhs) > 0
+    got = {r["asset_id"]: (r["width"], r["height"]) for r in extract_features(df).collect()}
+    assert got == {i: bmp_params(i) for i in ids}
 
 
 def test_extract_features_magic_byte_routing_all_formats(spark):
     """Every in-repo decoder is reachable from extract_features via
     magic-byte dispatch: PNG/GIF/JPEG payloads report their TRUE
-    synthesis dimensions (not the md5 fake), in both the pandas and
-    Arrow extractors; an opaque text payload still takes the fake."""
+    synthesis dimensions (not the md5 fake); an opaque text payload
+    still takes the fake."""
     import hashlib
 
-    from queryengine_spark.multimodal import extract_features_arrow
     from queryengine_spark.multimodal.gif import gif_params, make_gif
     from queryengine_spark.multimodal.jpeg import jpeg_params, make_jpeg_dc
     from queryengine_spark.multimodal.png import make_png_rgba, png_rgba_params
@@ -121,12 +105,11 @@ def test_extract_features_magic_byte_routing_all_formats(spark):
         5: tiff_params(5),
         6: tiff_params(7),
     }
-    for extractor in (extract_features, extract_features_arrow):
-        got = {
-            r["asset_id"]: (r["width"], r["height"])
-            for r in extractor(df).collect()
-        }
-        assert got == want
+    got = {
+        r["asset_id"]: (r["width"], r["height"])
+        for r in extract_features(df).collect()
+    }
+    assert got == want
 
 
 def test_resize_images_real_path(spark):

@@ -110,4 +110,4 @@ def test_video_query_plan(spark, sf_dir):
     )
     assert "ENSURE_REQUIREMENTS" not in plan
     assert "Join" not in plan
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan

@@ -13,24 +13,24 @@ import numpy as np
 
 from queryengine_spark.multimodal.gif import (
     decode_gif,
+    GIF_LZW,
     gif_params,
-    lzw_decode,
-    lzw_encode,
     make_gif,
     palette_rgb,
     pixel_index,
 )
+from queryengine_spark.multimodal.lzw import lzw_decode, lzw_encode
 
 
 def test_lzw_hand_vectors():
     # min_code_size=2 -> clear=4, eoi=5, 3-bit codes, LSB-first.
     # [0,0,0]  -> codes 4,0,6,5  -> value 4+0·8+6·64+5·512 = 2948
     #          -> bytes 0x84, 0x0B
-    assert lzw_decode(bytes([0x84, 0x0B]), 2) == bytes([0, 0, 0])
+    assert lzw_decode(bytes([0x84, 0x0B]), 2, GIF_LZW) == bytes([0, 0, 0])
     # [1,1,1,1] -> codes 4,1,6,1,5 (6 is referenced in the step that
     # defines it: the KwKwK case) -> 4+1·8+6·64+1·512+5·4096 = 21388
     #           -> bytes 0x8C, 0x53
-    assert lzw_decode(bytes([0x8C, 0x53]), 2) == bytes([1, 1, 1, 1])
+    assert lzw_decode(bytes([0x8C, 0x53]), 2, GIF_LZW) == bytes([1, 1, 1, 1])
 
 
 def test_lzw_roundtrip_stress():
@@ -43,14 +43,14 @@ def test_lzw_roundtrip_stress():
         bytes(range(256)) * 40,
     ]
     for data in cases:
-        assert lzw_decode(lzw_encode(data, 8), 8) == data
+        assert lzw_decode(lzw_encode(data, 8, GIF_LZW), 8, GIF_LZW) == data
     for data in cases[:3]:
-        assert lzw_decode(lzw_encode(data, 2), 2) == data
+        assert lzw_decode(lzw_encode(data, 2, GIF_LZW), 2, GIF_LZW) == data
 
 
 def test_lzw_truncated_stream_is_none():
-    enc = lzw_encode(bytes(range(100)), 8)
-    assert lzw_decode(enc[: len(enc) // 2], 8) is None
+    enc = lzw_encode(bytes(range(100)), 8, GIF_LZW)
+    assert lzw_decode(enc[: len(enc) // 2], 8, GIF_LZW) is None
 
 
 def test_synthesized_assets_decode_to_formula():
@@ -158,11 +158,8 @@ def test_interlaced_decode_restores_row_order():
 
     import numpy as np
 
-    from queryengine_spark.multimodal.gif import (
-        decode_gif,
-        interlace_order,
-        lzw_encode,
-    )
+    from queryengine_spark.multimodal.gif import GIF_LZW, decode_gif, interlace_order
+    from queryengine_spark.multimodal.lzw import lzw_encode
 
     h = 8
     order = interlace_order(h)
@@ -170,7 +167,7 @@ def test_interlaced_decode_restores_row_order():
     # display row y holds index value y; stored in interlace order
     idx = bytes(order)  # one pixel per row, rows stored per pass
     pal = b"".join(bytes((i, (2 * i) % 256, (3 * i) % 256)) for i in range(256))
-    lzw = lzw_encode(idx, 8)
+    lzw = lzw_encode(idx, 8, GIF_LZW)
     blocks = bytes([len(lzw)]) + lzw + b"\x00"
     g = (
         b"GIF87a"
@@ -240,14 +237,12 @@ def test_gce_applies_to_next_image_only():
     state resets after each image)."""
     import struct
 
-    from queryengine_spark.multimodal.gif import (
-        decode_gif_frames,
-        lzw_encode,
-    )
+    from queryengine_spark.multimodal.gif import GIF_LZW, decode_gif_frames
+    from queryengine_spark.multimodal.lzw import lzw_encode
 
     pal = bytes(6)  # 2-entry black palette
     idx = bytes([0, 1, 1, 0])
-    lzw = lzw_encode(idx, 2)
+    lzw = lzw_encode(idx, 2, GIF_LZW)
     img = (
         b","
         + struct.pack("<HHHHB", 0, 0, 2, 2, 0)

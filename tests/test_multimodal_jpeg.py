@@ -317,7 +317,7 @@ def test_dri_coeffs_path_resets_predictor():
 def test_truncated_sof_returns_none():
     """A SOF declaring 3 components but truncated mid-component-list
     must return None, not raise (r5 ADVICE: one corrupt payload must
-    not fail the whole mapInPandas batch)."""
+    not fail the whole map_rows batch)."""
     from queryengine_spark.multimodal.jpeg import _parse_segments_multi
 
     bad_sof = _seg(0xC0, struct.pack(">BHHB", 8, 8, 8, 3) + bytes([1, 0x11, 0]))

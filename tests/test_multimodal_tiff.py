@@ -272,7 +272,7 @@ def test_tiff_query_plan_shuffle_free(spark, sf_dir):
     # the only exchange is the deliberate round-robin spread()
     assert "ENSURE_REQUIREMENTS" not in plan
     assert "Join" not in plan
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 # ------------------------------------------------------------ LZW (r8)
@@ -285,11 +285,11 @@ def test_tiff_query_plan_shuffle_free(spark, sf_dir):
 # reader instead of bytes concatenation), so an encoder/decoder bug
 # pair in the engine cannot cancel.
 
+from queryengine_spark.multimodal.lzw import lzw_decode, lzw_encode  # noqa: E402
 from queryengine_spark.multimodal.tiff import (  # noqa: E402
+    TIFF_LZW,
     hdiff_decode,
     hdiff_encode,
-    lzw_tiff_decode,
-    lzw_tiff_encode,
 )
 
 
@@ -297,21 +297,22 @@ def test_lzw_hand_pinned_vector():
     """encode(07 07 07 08) emits codes 256,7,258,8,257 at 9 bits:
     100000000|000000111|100000010|000001000|100000001 + 3 pad zeros
     = 80 01 E0 40 88 08 (computed by hand, MSB-first)."""
-    enc = lzw_tiff_encode(b"\x07\x07\x07\x08")
+    enc = lzw_encode(b"\x07\x07\x07\x08", 8, TIFF_LZW)
     assert enc == bytes.fromhex("8001E0408808")
-    assert lzw_tiff_decode(enc) == b"\x07\x07\x07\x08"
+    assert lzw_decode(enc, 8, TIFF_LZW) == b"\x07\x07\x07\x08"
 
 
 def test_lzw_empty_and_single():
-    assert lzw_tiff_decode(lzw_tiff_encode(b"")) == b""
-    assert lzw_tiff_decode(lzw_tiff_encode(b"\x00")) == b"\x00"
-    assert lzw_tiff_decode(lzw_tiff_encode(b"\xff" * 9)) == b"\xff" * 9
+    assert lzw_decode(lzw_encode(b"", 8, TIFF_LZW), 8, TIFF_LZW) == b""
+    assert lzw_decode(lzw_encode(b"\x00", 8, TIFF_LZW), 8, TIFF_LZW) == b"\x00"
+    nines = b"\xff" * 9
+    assert lzw_decode(lzw_encode(nines, 8, TIFF_LZW), 8, TIFF_LZW) == nines
 
 
 def test_lzw_truncation_refused():
-    enc = lzw_tiff_encode(b"abcabcabc")
-    assert lzw_tiff_decode(enc[:-2]) is None  # EOI cut off
-    assert lzw_tiff_decode(b"") is None
+    enc = lzw_encode(b"abcabcabc", 8, TIFF_LZW)
+    assert lzw_decode(enc[:-2], 8, TIFF_LZW) is None  # EOI cut off
+    assert lzw_decode(b"", 8, TIFF_LZW) is None
 
 
 def _independent_lzw_decode(data: bytes) -> bytes | None:
@@ -396,8 +397,8 @@ def _independent_lzw_decode(data: bytes) -> bytes | None:
     ],
 )
 def test_lzw_independent_decoder_agrees(data):
-    enc = lzw_tiff_encode(data)
-    assert lzw_tiff_decode(enc) == data
+    enc = lzw_encode(data, 8, TIFF_LZW)
+    assert lzw_decode(enc, 8, TIFF_LZW) == data
     assert _independent_lzw_decode(enc) == data
 
 
@@ -406,16 +407,16 @@ def test_lzw_width12_and_table_reset():
     10/11/12-bit widths and past the 4094 cap (encoder must emit
     Clear) — both decoders must track every transition."""
     data = bytes((i * i + 7 * i) % 251 for i in range(60000))
-    enc = lzw_tiff_encode(data)
+    enc = lzw_encode(data, 8, TIFF_LZW)
     assert len(enc) < len(data) * 13 // 8  # ≤ 12 bits per byte emitted
-    assert lzw_tiff_decode(enc) == data
+    assert lzw_decode(enc, 8, TIFF_LZW) == data
     assert _independent_lzw_decode(enc) == data
 
 
 @settings(max_examples=250, deadline=None)
 @given(st.binary(max_size=900))
 def test_lzw_roundtrip_property(data):
-    assert lzw_tiff_decode(lzw_tiff_encode(data)) == data
+    assert lzw_decode(lzw_encode(data, 8, TIFF_LZW), 8, TIFF_LZW) == data
 
 
 @settings(max_examples=120, deadline=None)
@@ -458,7 +459,7 @@ def test_lzw_predictor_tag_is_honored():
     from queryengine_spark.multimodal.tiff import _build_tiff
 
     row = bytes([10, 13, 16, 19])  # stored bytes
-    strips = [lzw_tiff_encode(row)]
+    strips = [lzw_encode(row, 8, TIFF_LZW)]
     kw = dict(big_endian=False, w=4, h=1, spp=1, photometric=1,
               compression=5, strips=strips)
     plain = decode_tiff(_build_tiff(predictor=1, **kw))
@@ -844,7 +845,7 @@ def test_deep_gray_refusals():
 
 def test_deep_corpus_query_plan_no_shuffle(spark):
     """The r11 deep-gray corpus slot: spread fan-out + two
-    MapInPandas, stats match the direct decode."""
+    MapInArrow, stats match the direct decode."""
     from pyspark.sql import functions as F
 
     from queryengine_spark.multimodal.tiff import (

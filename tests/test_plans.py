@@ -6,6 +6,8 @@ does."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from queryengine_spark.queries import all_queries
@@ -393,7 +395,7 @@ def test_cross_source_overlap_no_cartesian(spark, sf_dir):
 
 
 def test_png_decode_no_shuffle_before_stats(spark, sf_dir):
-    # synthesize → decode are chained mapInPandas stages: the only
+    # synthesize → decode are chained map_rows stages: the only
     # allowed exchange is the deliberate round-robin spread() that
     # parallelizes synthesis — no hash/range shuffle, no join
     plan = _plan(spark, sf_dir, "multimodal_png_decode")
@@ -581,3 +583,151 @@ def test_cc_ingest_no_cartesian_and_single_warc_chain(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert plan.count("FlatMapGroupsInPandas") <= 1
+
+
+# --------------------------------------------------------- map_rows
+
+
+def _map_rows_schema():
+    from pyspark.sql.types import (
+        BinaryType,
+        IntegerType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    return StructType(
+        [
+            StructField("id", LongType()),
+            StructField("k", IntegerType()),
+            StructField("tag", StringType()),
+            StructField("blob", BinaryType()),
+        ]
+    )
+
+
+def _make_fan():
+    """Kernel with id % 3 output rows per input row: 0, 1 or 2; the
+    second row is a short tuple (NULL-filled); a NULL string cell
+    passes through. Built in a closure so it ships to the Python
+    workers by value."""
+
+    def fan(i, s):
+        out = []
+        for k in range(i % 3):
+            if k == 0:
+                out.append((i, k, s, None if s is None else s.encode()))
+            else:
+                out.append((i, k))
+        return out
+
+    return fan
+
+
+_fan = _make_fan()
+
+
+def _map_rows_input(spark, n):
+    return spark.createDataFrame(
+        [(i, None if i % 5 == 0 else f"s{i}") for i in range(n)], "id long, s string"
+    )
+
+
+def _expected_fan(n):
+    return sorted(
+        row + (None,) * (4 - len(row))
+        for i in range(n)
+        for row in _fan(i, None if i % 5 == 0 else f"s{i}")
+    )
+
+
+def test_map_rows_zero_one_many_rows_and_null_fill(spark):
+    from queryengine_spark.plans import map_rows
+
+    df = map_rows(_map_rows_input(spark, 30), _map_rows_schema(), _make_fan(), "id", "s")
+    got = sorted(tuple(r) for r in df.collect())
+    assert got == _expected_fan(30)
+    # a NULL input cell reached the kernel as None and came back NULL
+    assert (5, 0, None, None) in got
+    # id % 3 == 0 rows vanished; short tuples padded with NULLs
+    assert not any(r[0] % 3 == 0 for r in got)
+    assert (2, 1, None, None) in got and (4, 0, "s4", b"s4") in got
+
+
+def test_map_rows_schema_is_the_declared_schema(spark):
+    from queryengine_spark.plans import map_rows
+
+    schema = _map_rows_schema()
+    df = map_rows(_map_rows_input(spark, 4), schema, _make_fan(), "id", "s")
+    assert df.schema == schema
+
+
+def test_map_rows_empty_input(spark):
+    from queryengine_spark.plans import map_rows
+
+    empty = _map_rows_input(spark, 10).filter("id < 0")
+    df = map_rows(empty, _map_rows_schema(), _make_fan(), "id", "s")
+    assert df.collect() == []
+
+
+def test_map_rows_across_many_small_batches(spark):
+    from queryengine_spark.plans import map_rows
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        # one partition of 40 rows → 14 Arrow batches
+        one = _map_rows_input(spark, 40).coalesce(1)
+        df = map_rows(one, _map_rows_schema(), _make_fan(), "id", "s")
+        assert sorted(tuple(r) for r in df.collect()) == _expected_fan(40)
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_map_rows_plan_is_one_python_map_no_exchange(spark):
+    from queryengine_spark.plans import map_rows
+
+    df = map_rows(_map_rows_input(spark, 20), _map_rows_schema(), _make_fan(), "id", "s")
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    python_nodes = re.findall(
+        r"MapInArrow|MapInPandas|ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas",
+        plan,
+    )
+    assert python_nodes == ["MapInArrow"]
+    assert "Exchange" not in plan
+
+
+# Every per-row decoder and synthesizer in multimodal/ and sources/
+# crosses into Python through map_rows; a hand-written batch loop is
+# allowed only where the kernel is not per-row.
+_BOUNDARY_CALLS = {"mapInPandas", "mapInArrow", "applyInPandas"}
+_BOUNDARY_ALLOWLIST = {("footers", "parquet_footer_profile")}
+
+
+def test_multimodal_and_sources_cross_python_only_through_map_rows():
+    import ast
+    import pathlib
+
+    import queryengine_spark
+
+    root = pathlib.Path(queryengine_spark.__file__).parent
+    offenders = []
+    for pkg in ("multimodal", "sources"):
+        for path in sorted((root / pkg).glob("*.py")):
+            tree = ast.parse(path.read_text())
+            for top in tree.body:
+                for node in ast.walk(top):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr in _BOUNDARY_CALLS
+                    ):
+                        owner = getattr(top, "name", "<module>")
+                        if (path.stem, owner) not in _BOUNDARY_ALLOWLIST:
+                            offenders.append(f"{pkg}/{path.name}::{owner} {node.func.attr}")
+    assert offenders == []

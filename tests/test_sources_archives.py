@@ -260,7 +260,7 @@ def test_spark_stats_match_python_reference(spark):
 
 def test_stats_plan_no_shuffle(spark):
     """One shard = one row: synthesis, parsing and per-shard stats all
-    happen in mapInPandas passes — the plan must contain no Exchange."""
+    happen in map_rows passes — the plan must contain no Exchange."""
     ids = spark.range(0, 4).select(F.col("id").alias("shard_id"))
     plan = (
         archive_shard_stats(synthesize_archives(ids))
