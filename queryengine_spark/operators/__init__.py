@@ -1,5 +1,4 @@
 from queryengine_spark.operators.fuzzy_join import (
-    FuzzyMatchResult,
     candidates_cross,
     candidates_inverted,
     fuzzy_match,
@@ -11,7 +10,6 @@ from queryengine_spark.operators.fuzzy_join import (
 from queryengine_spark.operators.topk import grouped_topk
 
 __all__ = [
-    "FuzzyMatchResult",
     "candidates_cross",
     "candidates_inverted",
     "fuzzy_match",

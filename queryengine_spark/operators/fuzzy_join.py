@@ -2,28 +2,37 @@
 engine's entire query semantics (/root/reference/src/heurFuzz.py,
 SURVEY.md §2-§4), re-expressed as a declarative Spark plan:
 
-  one probe per side (bounded take of raw term hashes)
-  prepare_terms  →  [distinct query terms, when queries repeat]
-                 →  candidate generation (cross | inverted-index)
-                 →  per-query heuristic top-K (window group-limit)
-                 →  partial_ratio refine (Arrow pandas UDF, once per row)
-                 →  per-query argmax with reference tie-breaks
-                 →  left join back + 'NA' fill
+  one probe per side   (bounded take of raw term hashes)
+  prepare_terms        (one scan and one trim per side)
+  → term_dictionary    (one row per distinct term, for a side whose
+                        terms repeat; the other side stays as rows)
+  → candidate generation (cross | inverted index)
+  → per-query heuristic top-K (term-level prune, window group-limit)
+  → partial_ratio refine (Arrow pandas UDF, once per row)
+  → per-query argmax with reference tie-breaks
+  → left join back to the query rows + 'NA' fill
 
 Building the plan runs at most one probe job per input side. The
 query probe sizes the query side and measures its term repetition;
 the reference probe picks the strategy and the reference-side term
-dedup.
+granularity.
 
-The four middle stages depend only on the query TERM (no order they
-use reads q_id). So when query terms repeat ≥2× on average (the rule
-the ref side's term dedup uses) they run once per distinct trimmed
-term, and the winners fan back out to every query row in the final
-left join. Otherwise they run once per query row: on distinct queries
-the aggregation saves nothing and its extra shuffle stage cost 13% of
-rows/s (100 queries × 12,000 refs, 4 cores). Where a stage runs per
-distinct term, the terms are made distinct first and each term's
-bigram array is built after that, once.
+A term dictionary holds, per distinct trimmed term, its smallest id,
+its row count, its byte length and its bigram array, built once after
+the aggregation. Coverage and length distance depend only on the two
+TERMS, and no order of top-K, refine or the argmax reads q_id, so:
+- when query terms repeat ≥2× on average, candidate generation and
+  those three stages run once per entry of the query dictionary, and
+  the winners fan back out to every query row in the final left join.
+  Otherwise they run once per query row: on distinct queries the
+  aggregation saves nothing and its extra shuffle stage cost 13% of
+  rows/s (100 queries × 12,000 refs, 4 cores);
+- when reference terms repeat by the same rule, the inverted index
+  joins the two dictionaries, prunes the top-K at term granularity
+  and fans out to reference ids only for the pairs that survive.
+Every branch reads the same (id, term) columns of a prepared side,
+so where ``spread`` repartitions a side (single-split inputs) the
+adaptive plan reuses that one exchange instead of scanning again.
 
 Reference semantics preserved (cites into /root/reference/):
 - coverage = (# query-bigram positions whose bigram occurs in the
@@ -58,8 +67,6 @@ collected to the driver but the probes' bounded term-hash samples.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -67,7 +74,6 @@ from queryengine_spark.config import FuzzyConfig
 from queryengine_spark.functions.similarity import partial_ratio_udf
 from queryengine_spark.functions.text import byte_bigrams, ws_trim
 from queryengine_spark.plans import spread
-
 
 def prepare_terms(
     df: DataFrame,
@@ -95,7 +101,7 @@ def prepare_terms(
     if id_col is None:
         # monotonically_increasing_id is re-evaluated per plan branch;
         # the prepared relation is consumed by several subtrees
-        # (bigram index, attribute table, final left join), and a
+        # (term dictionary, join back, final left join), and a
         # nondeterministic upstream (e.g. a distinct) could hand each
         # branch different ids. Materialize the id assignment ONCE so
         # every branch sees the same ids.
@@ -105,7 +111,9 @@ def prepare_terms(
         & (F.octet_length(F.col(f"{p}_term")) <= buffer_size)
     )
     # single-file inputs arrive as one partition; the downstream
-    # bigram explode / candidate join must run cluster-wide
+    # bigram explode / candidate join must run cluster-wide. The
+    # exchange carries (id, term): every branch that reads both
+    # columns reuses it, so the input is scanned and trimmed once
     out = spread(out)
     return out.select(f"{p}_id", f"{p}_term", *_term_columns(p))
 
@@ -119,8 +127,38 @@ def _term_columns(p: str) -> list[Column]:
     ]
 
 
-def _with_lendiff(cands: DataFrame) -> DataFrame:
-    return cands.withColumn("lendiff", F.abs(F.col("q_len") - F.col("r_len")))
+def term_dictionary(prepared: DataFrame, p: str) -> DataFrame:
+    """One row per distinct ``{p}_term`` of a prepared relation:
+    (``{p}_id``, ``{p}_term``, ``{p}_len``, ``{p}_bigrams``,
+    ``{p}_cnt``), where ``{p}_id`` is the smallest id holding the term
+    and ``{p}_cnt`` how many rows hold it. Every distinct-term
+    relation of the join is built here; a relation that already is a
+    dictionary (it has ``{p}_cnt``) is returned as it is.
+
+    The representative id must be deterministic: dropDuplicates may
+    keep a different row in each branch that reads the relation. The
+    aggregate reads (id, term), the columns the row branches read, so
+    it shares their exchange instead of scanning the input again. The
+    term columns are derived after the aggregation, once per term:
+    carrying the bigram array through it (``first``) turns the hash
+    aggregate into a sort aggregate and shuffles the arrays."""
+    if f"{p}_cnt" in prepared.columns:
+        return prepared
+    return (
+        prepared.groupBy(f"{p}_term")
+        .agg(F.min(f"{p}_id").alias(f"{p}_id"), F.count(f"{p}_id").alias(f"{p}_cnt"))
+        .select(f"{p}_id", f"{p}_term", *_term_columns(p), f"{p}_cnt")
+    )
+
+
+def _scores(hits: Column, q_len: Column, r_len: Column) -> list[Column]:
+    # coverage (bigram hits over the query's len - 1 bigrams) and
+    # length distance: one definition for every candidate relation and
+    # the term-level prune, so a tie in one is a tie in the others
+    return [
+        (hits / (q_len - 1)).cast("double").alias("cov"),
+        F.abs(q_len - r_len).alias("lendiff"),
+    ]
 
 
 def candidates_cross(queries: DataFrame, refs: DataFrame) -> DataFrame:
@@ -133,19 +171,15 @@ def candidates_cross(queries: DataFrame, refs: DataFrame) -> DataFrame:
     anywhere in the ref bigram list (set semantics via array_contains),
     normalized by the query's bigram count.
     """
-    joined = queries.crossJoin(refs)
     hits = F.aggregate(
         F.col("q_bigrams"),
         F.lit(0),
         lambda acc, b: acc
         + F.when(F.array_contains(F.col("r_bigrams"), b), 1).otherwise(0),
     )
-    cov = hits / F.size(F.col("q_bigrams"))
-    return _with_lendiff(
-        joined.select(
-            "q_id", "q_term", "q_len", "r_id", "r_term", "r_len",
-            cov.cast("double").alias("cov"),
-        )
+    return queries.crossJoin(refs).select(
+        "q_id", "q_term", "q_len", "r_id", "r_term", "r_len",
+        *_scores(hits, F.col("q_len"), F.col("r_len")),
     )
 
 
@@ -160,25 +194,27 @@ def candidates_inverted(
     (SURVEY §4.3) — the 100 TB path.
 
     Plan shape:
-      q side: explode bigrams, pre-aggregate to (q_id, bg, mult) —
+      q side: explode bigrams, pre-aggregate to (q_key, bg, mult) —
         multiplicity preserves the reference's per-position counting;
       r side: explode array_distinct(bigrams) — set semantics == the
         reference's break-on-first-hit (src/heurFuzz.py:43);
-      equi-join on the 2-byte key, then groupBy(q_id, r_id) summing
-      multiplicities (partial aggregation happens map-side), then
-      join back the narrow q/r attribute tables.
+      equi-join on the 2-byte key, then groupBy(q_key, r_key) summing
+        multiplicities (partial aggregation happens map-side), then
+        one join back to the query and the reference relations.
 
     ``dedup_terms``: coverage and length-distance are pure functions
     of the TERM STRINGS, so on duplicate-heavy vocabularies (the
     reference keeps duplicate lines — SURVEY §1.3 — and real
     vocabularies are Zipfian) the index join + aggregation can run
-    once per DISTINCT (q_term, r_term) pair and fan the (id, term)
-    maps back out afterwards. The id-level result — including the
-    r_id tie-break granularity of the downstream top-K — is
-    identical; only the join/agg volume shrinks (e.g. the driver
-    part-name corpus: 64 distinct names over 20k rows → the
-    aggregation shrinks ~300×). ``None`` probes a bounded sample of
-    the ref side and enables dedup when terms repeat ≥2× on average.
+    over the two term dictionaries, keyed by term, and the join back
+    fans each term pair out to every row holding its terms. The
+    id-level result — including the r_id tie-break granularity of the
+    downstream top-K — is identical; only the join/agg volume shrinks
+    (e.g. the driver part-name corpus: 64 distinct names over 20k rows
+    → the aggregation shrinks ~300×). ``None`` probes a bounded sample
+    of the ref side and enables dedup when terms repeat ≥2× on average.
+    Without it, the index is keyed by ``q_id`` and ``r_id`` of the
+    relations as given, which may be rows or a query dictionary.
 
     Pairs sharing no bigram never appear (cov would be 0) — see module
     docstring for the divergence contract.
@@ -188,44 +224,7 @@ def candidates_inverted(
     hits = _inverted_hits(
         queries, refs, stop_bigram_df_ratio, broadcast_queries, dedup_terms
     )
-    if dedup_terms:
-        return _fan_out_terms(hits, queries, refs)
-    q_attrs = queries.select("q_id", "q_term", "q_len", F.size("q_bigrams").alias("q_nbg"))
-    r_attrs = refs.select("r_id", "r_term", "r_len")
-    out = (
-        hits.join(q_attrs, hits["q_key"] == q_attrs["q_id"])
-        .join(r_attrs, hits["r_key"] == r_attrs["r_id"])
-        .select(
-            "q_id", "q_term", "q_len", "r_id", "r_term", "r_len",
-            (F.col("hits") / F.col("q_nbg")).cast("double").alias("cov"),
-        )
-    )
-    return _with_lendiff(out)
-
-
-def _fan_out_terms(hits: DataFrame, queries: DataFrame, refs: DataFrame) -> DataFrame:
-    """Fan distinct-term (q_key, r_key, hits) rows back out to id
-    granularity — the ONE definition shared by the full-candidate and
-    pruned-top-K paths (the prune's tie-group equality argument needs
-    cov computed by the identical expression in both).
-
-    The deduped hits relation is tiny — AQE would coalesce it to ~1
-    partition and the row-multiplying fan-out would run on one core;
-    explicit repartition (which AQE respects) keeps it cluster-wide.
-    The attribute joins are plain hash joins on the term string."""
-    n = hits.sparkSession.sparkContext.defaultParallelism
-    hits = hits.repartition(n, "q_key", "r_key")
-    q_attrs = queries.select("q_id", "q_term", "q_len", F.size("q_bigrams").alias("q_nbg"))
-    r_attrs = refs.select("r_id", "r_term", "r_len")
-    out = (
-        hits.join(q_attrs, hits["q_key"] == q_attrs["q_term"])
-        .join(r_attrs, hits["r_key"] == r_attrs["r_term"])
-        .select(
-            "q_id", "q_term", "q_len", "r_id", "r_term", "r_len",
-            (F.col("hits") / F.col("q_nbg")).cast("double").alias("cov"),
-        )
-    )
-    return _with_lendiff(out)
+    return _join_back(hits, queries, refs, dedup_terms)
 
 
 def _inverted_hits(
@@ -233,44 +232,46 @@ def _inverted_hits(
     refs: DataFrame,
     stop_bigram_df_ratio: float | None,
     broadcast_queries: bool | None,
-    dedup_terms: bool,
+    by_term: bool,
 ) -> DataFrame:
-    """(q_key, r_key, hits) — the inverted-index join + aggregation at
-    id granularity, or at distinct-TERM granularity when dedup_terms
-    (see candidates_inverted docstring). The distinct-term sides build
-    each term's bigram array once, after the distinct: carrying the
-    per-row arrays through it would shuffle them and turn the hash
-    aggregate into a sort aggregate."""
-    q_side = (
-        _term_keys(queries, "q")
-        if dedup_terms
-        else queries.select(F.col("q_id").alias("q_key"), "q_bigrams")
-    )
-    r_side = (
-        _term_keys(refs, "r")
-        if dedup_terms
-        else refs.select(F.col("r_id").alias("r_key"), "r_bigrams")
-    )
+    """(q_key, r_key, r_cnt, hits) — the inverted-index join +
+    aggregation, keyed by id, or by term over both sides' term
+    dictionaries when ``by_term`` (see candidates_inverted docstring).
+    ``r_cnt`` is how many reference rows the r_key stands for."""
+    key = "term" if by_term else "id"
+    q_side = term_dictionary(queries, "q") if by_term else queries
+    r_side = term_dictionary(refs, "r") if by_term else refs
+    rows = F.col("r_cnt") if by_term else F.lit(1).cast("long")
 
+    # This branch must read the prepared (id, term) exchange exactly as
+    # the other readers of the query side do, or it scans the input
+    # again: mult counts q_id, not 1, and explode_outer (the same rows:
+    # every term has a bigram) adds no size(q_bigrams) > 0 filter that
+    # the optimizer would push down into the scan.
     q_bi = (
-        q_side.select("q_key", F.explode("q_bigrams").alias("bg"))
+        q_side.select(
+            F.col(f"q_{key}").alias("q_key"), "q_id", F.explode_outer("q_bigrams").alias("bg")
+        )
         .groupBy("q_key", "bg")
-        .agg(F.count(F.lit(1)).alias("mult"))
+        .agg(F.count("q_id").alias("mult"))
     )
-    r_bi = r_side.select("r_key", F.explode(F.array_distinct("r_bigrams")).alias("bg"))
+    r_bi = r_side.select(
+        F.col(f"r_{key}").alias("r_key"),
+        rows.alias("r_cnt"),
+        F.explode(F.array_distinct("r_bigrams")).alias("bg"),
+    )
 
     if stop_bigram_df_ratio is not None:
         # Hot-key guard: drop bigrams occurring in more than the given
         # fraction of refs *for candidate generation only* (recall is
         # then carried by the query's rarer bigrams). Document
-        # frequency is always counted over ref ROWS (not distinct
-        # terms) so the guard's semantics don't depend on dedup_terms.
-        n_refs = refs.count()
+        # frequency is always counted over ref ROWS (r_cnt of them per
+        # index entry) so the guard's semantics don't depend on by_term.
+        n_refs = r_side.agg(F.sum(rows)).first()[0] or 0
         cap = max(int(n_refs * stop_bigram_df_ratio), 1)
         hot = (
-            refs.select("r_id", F.explode(F.array_distinct("r_bigrams")).alias("bg"))
-            .groupBy("bg")
-            .agg(F.count(F.lit(1)).alias("df"))
+            r_bi.groupBy("bg")
+            .agg(F.sum("r_cnt").alias("df"))
             .filter(F.col("df") > cap)
             .select("bg")
         )
@@ -282,27 +283,41 @@ def _inverted_hits(
     # ref side stream map-side against a broadcast of it when small,
     # avoiding the shuffle of the exploded ref index entirely.
     # Callers that already know the query-side size pass the hint;
-    # otherwise probe the NARROW prepared relation (limit-probe) — not
-    # q_bi, whose groupBy would execute a whole shuffle job just to
-    # decide the hint.
+    # otherwise probe the NARROW relation the caller passed (limit-
+    # probe) — not q_bi, whose groupBy would execute a whole shuffle
+    # job just to decide the hint.
     if broadcast_queries is None:
         broadcast_queries = _probe(queries, "q_term")[0] <= _PROBE_ROWS
     if broadcast_queries:
         q_bi = F.broadcast(q_bi)
     return (
         q_bi.join(r_bi, "bg")
-        .groupBy("q_key", "r_key")
+        .groupBy("q_key", "r_key", "r_cnt")
         .agg(F.sum("mult").alias("hits"))
     )
 
 
-def _term_keys(prepared: DataFrame, p: str) -> DataFrame:
-    # ({p}_key, {p}_bigrams) per distinct term of a prepared relation
-    _, bigrams = _term_columns(p)
+def _join_back(hits: DataFrame, queries: DataFrame, refs: DataFrame, by_term: bool) -> DataFrame:
+    """Join (q_key, r_key, hits) back to the query and the reference
+    relations — the one fan-out of term-keyed hits to ids, shared by
+    the full-candidate and the pruned top-K paths.
+
+    Term-keyed hits are tiny — AQE would coalesce them to ~1 partition
+    and the row-multiplying fan-out would run on one core; an explicit
+    repartition (which AQE respects) keeps it cluster-wide."""
+    key = "term" if by_term else "id"
+    if by_term:
+        n = hits.sparkSession.sparkContext.defaultParallelism
+        hits = hits.repartition(n, "q_key", "r_key")
+    q = queries.select("q_id", "q_term", "q_len")
+    r = refs.select("r_id", "r_term", "r_len")
     return (
-        prepared.select(f"{p}_term")
-        .distinct()
-        .select(F.col(f"{p}_term").alias(f"{p}_key"), bigrams)
+        hits.join(q, hits["q_key"] == q[f"q_{key}"])
+        .join(r, hits["r_key"] == r[f"r_{key}"])
+        .select(
+            "q_id", "q_term", "q_len", "r_id", "r_term", "r_len",
+            *_scores(F.col("hits"), F.col("q_len"), F.col("r_len")),
+        )
     )
 
 
@@ -318,22 +333,27 @@ def topk_candidates_inverted(
     """Per-query top-K candidates straight from the inverted index,
     PRUNING at term granularity before any id fan-out.
 
-    With term dedup active, every id-level candidate of one
-    (q_term, r_term) pair shares (cov, lendiff), so per q_term the
+    With term dedup active, the index joins the query and the
+    reference term dictionaries, and every id-level candidate of one
+    (q_term, r_term) pair shares (cov, lendiff). So per q_term the
     id-level top-K can only draw from r_terms whose strictly-better
-    (cov, lendiff) groups hold fewer than K ids: keep r_terms with
-    before(group) < K (before = running id-count minus the current
-    tie-group — the default window RANGE frame includes peers, which
-    is exactly the tie-group sum), fan out only those, then run the
-    exact id-level window top-K on the pruned relation. Result is
-    IDENTICAL to topk_candidates(candidates_inverted(...), k) — the
-    boundary tie-group fans out whole, so the final r_id tie-break
-    sees every id it would have seen — but the fan-out shrinks from
-    |pairs| to ≈ |q_terms|·(K + boundary ties) rows.
+    (cov, lendiff) groups hold fewer than K ids, counted by the
+    dictionary's ``r_cnt``: keep r_terms with before(group) < K
+    (before = running id-count minus the current tie-group — the
+    default window RANGE frame includes peers, which is exactly the
+    tie-group sum), fan out only those, then run the exact id-level
+    window top-K on the pruned relation. Result is IDENTICAL to
+    topk_candidates(candidates_inverted(...), k) — the boundary
+    tie-group fans out whole, so the final r_id tie-break sees every
+    id it would have seen — but the fan-out shrinks from |pairs| to
+    ≈ |q_terms|·(K + boundary ties) rows. Without dedup it is that
+    single id-level window.
 
-    ``lendiff_asc`` selects the ranking's lendiff direction: False =
-    the reference's T1 top-K order (cov↓, lendiff↓, r_id↓ — SURVEY
-    §2.3 Q1); True = the best-match order (cov↓, lendiff↑, r_id↑).
+    ``queries`` may be prepared rows or the query term dictionary; the
+    top-K is per ``q_id`` of what is given. ``lendiff_asc`` selects the
+    ranking's lendiff direction: False = the reference's T1 top-K
+    order (cov↓, lendiff↓, r_id↓ — SURVEY §2.3 Q1); True = the
+    best-match order (cov↓, lendiff↑, r_id↑).
     """
     order = _best_match_order() if lendiff_asc else None
     if dedup_terms is None:
@@ -345,28 +365,11 @@ def topk_candidates_inverted(
         return topk_candidates(cands, k, order)
 
     hits = _inverted_hits(
-        queries, refs, stop_bigram_df_ratio, broadcast_queries, dedup_terms=True
+        queries, refs, stop_bigram_df_ratio, broadcast_queries, by_term=True
     )
-    q_len, q_bigrams = _term_columns("q")
-    r_len, _ = _term_columns("r")
-    q_terms = (
-        queries.select("q_term")
-        .distinct()
-        .select("q_term", q_len, F.size(q_bigrams).alias("q_nbg"))
-    )
-    r_terms = (
-        refs.groupBy("r_term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select("r_term", "cnt", r_len)
-    )
-    term_cands = (
-        hits.join(q_terms, hits["q_key"] == q_terms["q_term"])
-        .join(r_terms, hits["r_key"] == r_terms["r_term"])
-        .select(
-            "q_key", "r_key", "cnt", "hits",
-            (F.col("hits") / F.col("q_nbg")).cast("double").alias("cov"),
-            F.abs(F.col("q_len") - F.col("r_len")).alias("lendiff"),
-        )
+    pairs = hits.select(
+        "q_key", "r_key", "r_cnt", "hits",
+        *_scores(F.col("hits"), F.octet_length("q_key"), F.octet_length("r_key")),
     )
     ld = F.col("lendiff").asc() if lendiff_asc else F.col("lendiff").desc()
     # default frame = RANGE UNBOUNDED PRECEDING..CURRENT ROW, which
@@ -374,28 +377,12 @@ def topk_candidates_inverted(
     w_cum = Window.partitionBy("q_key").orderBy(F.col("cov").desc(), ld)
     w_grp = Window.partitionBy("q_key", "cov", "lendiff")
     kept = (
-        term_cands.withColumn("__cum", F.sum("cnt").over(w_cum))
-        .withColumn("__grp", F.sum("cnt").over(w_grp))
+        pairs.withColumn("__cum", F.sum("r_cnt").over(w_cum))
+        .withColumn("__grp", F.sum("r_cnt").over(w_grp))
         .filter(F.col("__cum") - F.col("__grp") < F.lit(k))
         .select("q_key", "r_key", "hits")
     )
-    return topk_candidates(_fan_out_terms(kept, queries, refs), k, order)
-
-
-def _distinct_terms(prepared: DataFrame) -> DataFrame:
-    """One row per distinct ``q_term`` of a prepared query relation,
-    represented by its smallest ``q_id``. The representative must be
-    deterministic: dropDuplicates may keep a different row in each
-    plan branch that reads the relation, and the id-level
-    ``q_key = q_id`` join would then lose rows. The term columns are
-    derived again after the aggregation: carrying the bigram array
-    through it (``first``) turns the hash aggregate into a sort
-    aggregate and shuffles the arrays."""
-    return (
-        prepared.groupBy("q_term")
-        .agg(F.min("q_id").alias("q_id"))
-        .select("q_id", "q_term", *_term_columns("q"))
-    )
+    return topk_candidates(_join_back(kept, queries, refs, by_term=True), k, order)
 
 
 def _topk_order() -> list[Column]:
@@ -463,12 +450,6 @@ def select_best(scored: DataFrame) -> DataFrame:
     )
 
 
-@dataclass
-class FuzzyMatchResult:
-    #: (q_id, query, match, score) — match is 'NA' when unmatched
-    matches: DataFrame
-
-
 def fuzzy_match(
     queries_raw: DataFrame,
     refs_raw: DataFrame,
@@ -485,29 +466,35 @@ def fuzzy_match(
     the 2..buffer-byte contract) appears exactly once; unmatched
     queries carry match='NA', score=0 (reference R3).
 
-    Building the plan runs at most one probe job per side, each a
-    bounded take of trimmed-term hashes from the RAW input
-    (:func:`_probe`), so no probe runs the prepared subtrees:
+    An unknown ``candidate_strategy`` raises ``ValueError`` before any
+    job runs. Building the plan then runs at most one probe job per
+    side, each a bounded take of trimmed-term hashes from the RAW
+    input (:func:`_probe`), so no probe runs the prepared subtrees:
     - the query probe sizes the query side for the broadcast hint and
-      picks the query granularity. Candidate generation, top-K,
-      refine and the argmax run once per distinct trimmed query term
-      when query terms repeat ≥2× on average, and once per query row
-      otherwise. The result is the same either way, because none of
-      those stages' orders reads q_id;
+      picks the query granularity: the query term dictionary when
+      query terms repeat ≥2× on average, the query rows otherwise.
+      Candidate generation, top-K, refine and the argmax run once per
+      entry of what it picks; from the dictionary, the final left join
+      is the one fan-out to the query rows. The result is the same
+      either way, because none of those stages' orders reads q_id;
     - the reference probe, skipped when the strategy is ``cross``,
       picks ``auto``'s strategy and, by the same ≥2× rule, whether
-      the inverted path joins candidates per distinct reference term.
+      the inverted path joins the reference term dictionary (built
+      once, inside :func:`topk_candidates_inverted`) and fans out to
+      reference ids after the term-level prune.
 
     Refine scores each top-K row with ``partial_ratio`` once.
     """
     cfg = config or FuzzyConfig()
+    strategy = cfg.candidate_strategy
+    if strategy not in ("auto", "cross", "inverted"):
+        raise ValueError(f"unknown candidate_strategy: {strategy}")
     q = prepare_terms(queries_raw, query_col, query_id, "q", cfg.buffer_size)
     r = prepare_terms(refs_raw, ref_col, ref_id, "r", cfg.buffer_size)
     n_q, repeated_q = _probe(queries_raw, query_col)
     key = "q_term" if repeated_q else "q_id"
-    terms = _distinct_terms(q) if repeated_q else q
+    terms = term_dictionary(q, "q") if repeated_q else q
 
-    strategy = cfg.candidate_strategy
     if strategy != "cross":
         n_r, repeated_r = _probe(
             refs_raw, ref_col, max(_PROBE_ROWS, cfg.auto_cross_threshold)
@@ -519,14 +506,12 @@ def fuzzy_match(
 
     if strategy == "cross":
         topk = topk_candidates(candidates_cross(terms, r), cfg.top_k)
-    elif strategy == "inverted":
+    else:
         # top-K prunes at term granularity before the id fan-out
         topk = topk_candidates_inverted(
             terms, r, cfg.top_k, cfg.stop_bigram_df_ratio,
             broadcast_queries=n_q <= _PROBE_ROWS, dedup_terms=repeated_r,
         )
-    else:
-        raise ValueError(f"unknown candidate_strategy: {strategy}")
     scored = refine_candidates(topk, cfg.score_cutoff)
     best = select_best(scored)
 

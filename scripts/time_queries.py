@@ -23,13 +23,24 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_runs = int(os.environ.get("SPARK_GRAFT_RUNS", "3"))
 
+    from queryengine_spark.session import get_spark
+
+    spark = get_spark("queryengine-ab")
+    try:
+        _time(spark, names, sf_dir, n_runs)
+    finally:
+        # end the JVM and its Python workers before this process exits,
+        # not while the next timing process starts
+        spark.stop()
+    return 0
+
+
+def _time(spark, names: list[str], sf_dir: str, n_runs: int) -> None:
     from pyspark.sql import functions as F
 
     from queryengine_spark.functions.similarity import cosine_similarity
     from queryengine_spark.queries import all_queries
-    from queryengine_spark.session import get_spark
 
-    spark = get_spark("queryengine-ab")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
 
@@ -56,7 +67,6 @@ def main() -> int:
             f"{name}\tmin {best:.3f}s\truns {' '.join(f'{r:.3f}' for r in runs)}",
             flush=True,
         )
-    return 0
 
 
 if __name__ == "__main__":

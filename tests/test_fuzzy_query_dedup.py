@@ -68,18 +68,19 @@ def _analyzed(df) -> str:
     return df._jdf.queryExecution().analyzed().toString()
 
 
-@pytest.mark.parametrize("strategy", ["cross", "inverted"])
-@pytest.mark.parametrize("ref_copies", [1, 3], ids=["refs_distinct", "refs_repeated"])
-@pytest.mark.parametrize("seed", [3, 11])
-def test_repeated_queries_match_simulator(spark, monkeypatch, strategy, ref_copies, seed):
-    """Row-by-row parity with the simulator, on both candidate
-    strategies and both ref-side paths (refs repeated 3× take the
-    distinct-term candidate join), and refine sees at most
-    (distinct query terms × K) rows, one group per trimmed term."""
-    queries = _zipf_queries(seed, 120)
+def _distinct_queries() -> list[str]:
+    """Every base term once plus three padded or plain repeats, so the
+    probe's ≥2× rule fails and the per-row plan runs over a few
+    duplicate terms."""
+    out = BASE_TERMS + ["  widget", "gadget\t ", "steel bolt"]
+    random.Random(5).shuffle(out)
+    return out
+
+
+def _check_parity(spark, monkeypatch, queries, strategy, ref_copies, units):
+    """Row-by-row parity with the simulator; refine sees at most
+    ``units`` × K rows, and every trimmed query term among them."""
     refs = REFS * ref_copies
-    n_terms = len({t.strip() for t in queries})
-    assert n_terms < len(queries) // 2  # the probe's ≥2× rule holds
     # the inverted strategy never sees zero-coverage pairs, so it equals
     # the simulator only where every query has K refs sharing a bigram
     assert all(_bigram_neighbours(t, refs) >= TOP_K for t in queries)
@@ -103,9 +104,33 @@ def test_repeated_queries_match_simulator(spark, monkeypatch, strategy, ref_copi
     got = [(r["query"], r["match"]) for r in sorted(got_rows, key=lambda r: r["q_id"])]
     assert got == simulate_reference(queries, refs, TOP_K, CUTOFF)
     ((n_refined, refined_terms),) = refined
-    assert 0 < n_refined <= n_terms * TOP_K
+    assert 0 < n_refined <= units * TOP_K
     # padded repeats collapse into one term; case variants stay apart
     assert refined_terms == {t.strip() for t in queries}
+
+
+@pytest.mark.parametrize("strategy", ["cross", "inverted"])
+@pytest.mark.parametrize("ref_copies", [1, 3], ids=["refs_distinct", "refs_repeated"])
+@pytest.mark.parametrize("seed", [3, 11])
+def test_repeated_queries_match_simulator(spark, monkeypatch, strategy, ref_copies, seed):
+    """Parity on both candidate strategies and both ref-side paths
+    (refs repeated 3× take the distinct-term candidate join), with
+    refine run once per distinct trimmed query term."""
+    queries = _zipf_queries(seed, 120)
+    n_terms = len({t.strip() for t in queries})
+    assert n_terms < len(queries) // 2  # the probe's ≥2× rule holds
+    _check_parity(spark, monkeypatch, queries, strategy, ref_copies, n_terms)
+
+
+@pytest.mark.parametrize("strategy", ["cross", "inverted"])
+@pytest.mark.parametrize("ref_copies", [1, 3], ids=["refs_distinct", "refs_repeated"])
+def test_distinct_queries_match_simulator(spark, monkeypatch, strategy, ref_copies):
+    """The same parity on the per-row query plan, so all four cases
+    (queries repeated or not × refs repeated or not) are checked row
+    by row; refine runs at most once per query row."""
+    queries = _distinct_queries()
+    assert len({t.strip() for t in queries}) > len(queries) // 2  # the ≥2× rule fails
+    _check_parity(spark, monkeypatch, queries, strategy, ref_copies, len(queries))
 
 
 def test_distinct_queries_keep_the_per_row_plan(spark):

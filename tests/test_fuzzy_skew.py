@@ -93,6 +93,25 @@ def test_guard_collapses_candidates_keeps_recall(spark, skew_data):
     assert recall >= 0.95, f"guard recall {recall:.3f}"
 
 
+def test_guard_counts_reference_rows_on_the_term_path(spark, skew_data):
+    """With the even references held by four rows each, the guard's
+    document frequency counts rows on the distinct-term path too (at
+    this ratio, counting terms would drop 5 bigrams where counting
+    rows drops 17), so both paths give the same candidates."""
+    queries, _ = skew_data
+    copies = [(k * N_REFS + i, t) for k in range(1, 4) for i, t in _ref_terms() if i % 2 == 0]
+    refs = spark.createDataFrame(_ref_terms() + copies, ["id", "term"])
+    q = prepare_terms(queries, "term", "id", "q")
+    r = prepare_terms(refs, "term", "id", "r")
+    cols = ["q_id", "r_id", "cov", "lendiff"]
+    by_path = [
+        {tuple(row) for row in candidates_inverted(q, r, 0.05, True, dedup).select(*cols).collect()}
+        for dedup in (False, True)
+    ]
+    assert by_path[0] == by_path[1]
+    assert 0 < len(by_path[0]) < N_QUERIES * 2500 / 10
+
+
 def test_salted_join_identical_on_hot_key(spark, skew_data):
     queries, refs = skew_data
     q = prepare_terms(queries, "term", "id", "q")
