@@ -7,8 +7,9 @@ BYTES through every in-repo from-scratch decoder — uncompressed
 24-bit BMP (``multimodal.bmp``), 8-bit RGBA PNG (``multimodal.png``:
 zlib + all five scanline filters), GIF87a/89a (``multimodal.gif``:
 shared LZW), baseline TIFF in both byte orders (``multimodal.tiff``:
-IFD walk + PackBits — r6), and DC-profile baseline JPEG
-(``multimodal.jpeg``: own canonical-Huffman entropy decoder) —
+IFD walk + PackBits — r6), and JPEG (``multimodal.jpeg``: own
+canonical-Huffman entropy decoder; DC-profile streams first, then
+the full AC / progressive pixel path) —
 yielding TRUE dimensions with no media libraries installed. Formats outside those profiles try the
 PIL-shaped ``_decode_image`` hook, then fall back to a deterministic
 fake derived from the payload bytes, so schema, partitioning, batch
@@ -88,9 +89,11 @@ def _decode_dims(payload: bytes) -> tuple[int, int] | None:
     true (width, height) with no media libraries; then the PIL-shaped
     hook for formats that need external libs; ``None`` → genuinely
     opaque payload (caller falls back to the deterministic fake).
-    A decoder returning None for a sniffed-but-malformed (or
-    out-of-profile, e.g. AC-bearing JPEG) container also falls
-    through to the hook/fake rather than failing the batch."""
+    A JPEG outside the DC profiles (AC-bearing, subsampled with AC,
+    progressive) decodes through ``jpeg.decode_jpeg_rgb``. A decoder
+    returning None for a sniffed-but-malformed (or out-of-profile)
+    container falls through to the hook/fake rather than failing the
+    batch."""
     arr = None
     if payload[:2] == b"BM":
         from queryengine_spark.multimodal.bmp import decode_bmp
@@ -112,6 +115,7 @@ def _decode_dims(payload: bytes) -> tuple[int, int] | None:
         from queryengine_spark.multimodal.jpeg import (
             decode_jpeg_dc,
             decode_jpeg_dc_planes,
+            decode_jpeg_rgb,
         )
 
         arr = decode_jpeg_dc(payload)
@@ -121,6 +125,9 @@ def _decode_dims(payload: bytes) -> tuple[int, int] | None:
             res = decode_jpeg_dc_planes(payload)
             if res is not None:
                 return int(res[0]), int(res[1])
+            # AC-bearing, subsampled-with-AC and progressive streams
+            # decode through the full pixel path
+            arr = decode_jpeg_rgb(payload)
     if arr is not None:
         # (h, w) grayscale or (h, w, channels): shape[1] is width
         return int(arr.shape[1]), int(arr.shape[0])
@@ -180,9 +187,13 @@ def _decode_rgb(payload: bytes):
 
         arr = decode_tiff(payload)
     elif payload[:2] == b"\xff\xd8":
-        from queryengine_spark.multimodal.jpeg import decode_jpeg_dc
+        from queryengine_spark.multimodal.jpeg import decode_jpeg_dc, decode_jpeg_rgb
 
         arr = decode_jpeg_dc(payload)
+        if arr is None:
+            # AC-bearing, subsampled and progressive streams: the full
+            # pixel path
+            arr = decode_jpeg_rgb(payload)
     if arr is None:
         return None
     if arr.ndim == 2:  # grayscale (gray-8 JPEG/PNG; 16-bit scaled down)

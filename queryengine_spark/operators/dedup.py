@@ -29,6 +29,14 @@ Scale notes:
   buckets (bucket equi-self-join, operators/knn.py) with cosine as
   the refine residual; the all-pairs variant is the small-N oracle
   twin that measures its recall.
+- connected components (near-dup pairs → clusters): one exact
+  union-find per ``src`` partition of the symmetric edge relation
+  (a mapInArrow over an AQE-sized repartition) contracts each
+  partition's components to stars; when every component closes
+  inside one partition (every small graph) that is the answer, and
+  otherwise min-label propagation with pointer jumping runs over
+  the contracted stars only. The large-star/small-star variant
+  (O(log² n) rounds) stays as the suite leg.
 """
 
 from __future__ import annotations
@@ -38,9 +46,10 @@ import hashlib
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import ByteType, StringType, StructField, StructType
 
 from queryengine_spark.functions.numeric import fround
 from queryengine_spark.functions.similarity import cosine_similarity
@@ -50,7 +59,8 @@ from queryengine_spark.plans import spread
 _HEX_HIGH = ("8", "9", "a", "b", "c", "d", "e", "f")
 
 #: rounds the most recent connected-components call took to converge
-#: (either backend) — measurement hook for the backend A/B
+#: (either backend; a contraction that leaves nothing to propagate
+#: counts as one) — measurement hook for the backend A/B
 #: (scripts/ab_cc_backend.py, docs/SCALE.md); not part of any result.
 LAST_CC_ROUNDS = 0
 
@@ -660,6 +670,72 @@ def banded_hamming64_pairs(
     )
 
 
+def _min_roots(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Exact union-find over dense indices 0..n-1 joined by the edges
+    (a[i], b[i]), vectorised: each node's root is the smallest index
+    of its component. Every pass hooks each edge's larger root onto
+    the smaller one and compresses the pointers to roots; pointers
+    only decrease, so there are no cycles, and each pass removes at
+    least one root until no edge crosses two components."""
+    parent = np.arange(n)
+    while a.size:
+        a, b = parent[a], parent[b]
+        cross = a != b
+        a, b = a[cross], b[cross]
+        np.minimum.at(parent, np.maximum(a, b), np.minimum(a, b))
+        while True:
+            nxt = parent[parent]
+            if np.array_equal(nxt, parent):
+                break
+            parent = nxt
+    return parent
+
+
+def _local_components(batches):
+    """mapInArrow kernel over one ``src`` partition of the symmetric,
+    self-looped edge relation: one union-find over every row of the
+    partition, then one (u, root, kind) row per id u the partition
+    mentions, where root is the min id of u's local component.
+
+    ``kind`` is 1 when u is a vertex (its self-loop row is here), 0
+    when u is a ``src`` here without a self-loop (an edge endpoint
+    outside ``vertices``), and NULL when u is only a ``dst`` here. A
+    local component whose ids are all ``src`` here holds every edge
+    of its ids, so it is a whole component and is final: it is left
+    out when it has no vertex. Rows with a NULL endpoint give one
+    all-NULL row."""
+    batches = list(batches)
+    if not batches:
+        return
+    table = pa.Table.from_batches(batches)
+    valid = table.filter(pc.and_(
+        pc.is_valid(table.column(0)), pc.is_valid(table.column(1))))
+    src = valid.column(0).to_numpy()
+    ids, idx = np.unique(np.concatenate([src, valid.column(1).to_numpy()]),
+                         return_inverse=True)
+    s, d = idx[: len(src)], idx[len(src):]
+    loop = s == d
+    is_src = np.zeros(len(ids), bool)
+    is_src[s] = True
+    is_vertex = np.zeros(len(ids), bool)
+    is_vertex[s[loop]] = True
+    root = _min_roots(len(ids), s[~loop], d[~loop])
+    closed = np.ones(len(ids), bool)
+    closed[root[~is_src]] = False
+    has_vertex = np.zeros(len(ids), bool)
+    has_vertex[root[is_vertex]] = True
+    keep = ~(closed & ~has_vertex)[root]
+    kind = pa.array(is_vertex[keep].astype(np.int8), mask=~is_src[keep])
+    names = ["u", "root", "kind"]
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(ids[keep]), pa.array(ids[root[keep]]), kind], names=names)
+    if valid.num_rows < table.num_rows:
+        id_type = table.schema.field(0).type
+        yield pa.RecordBatch.from_arrays(
+            [pa.nulls(1, id_type), pa.nulls(1, id_type), pa.nulls(1, pa.int8())],
+            names=names)
+
+
 def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
@@ -668,49 +744,59 @@ def connected_components(
     dst_col: str = "id_b",
     max_iterations: int = 20,
 ) -> DataFrame:
-    """Connected components by min-label propagation with POINTER
-    JUMPING — turns near-dup candidate PAIRS into dedup CLUSTERS (the
-    final step of fuzzy dedup: keep one doc per component).
+    """Connected components by local contraction, then min-label
+    propagation with pointer jumping over what is left — turns
+    near-dup candidate PAIRS into dedup CLUSTERS (the final step of
+    fuzzy dedup: keep one doc per component). Returns (id, component)
+    with component = min id in the component.
 
     Contract: vertex ids are UNIQUE and every edge endpoint is drawn
     from ``vertices`` (true for every caller — edges are produced by
-    LSH/banding over the same corpus the vertices come from). The
-    self-loop formulation below relies on it, and checks it at no
-    extra job: the convergence probe counts the labels in the same
-    aggregate as their sum, and a round with more labels than there
-    are vertices has pulled in an endpoint outside ``vertices``
-    (ValueError). An input edge (a, a) adds no vertex, and a
-    component made only of non-vertices is never reached, so it is
-    left out of the output.
+    LSH/banding over the same corpus the vertices come from). An edge
+    between a vertex and an id outside ``vertices`` (or NULL) raises
+    ValueError. An input edge (a, a) adds no vertex, and a component
+    made only of non-vertices is left out of the output.
 
-    Each round (1) takes the min label over the closed neighborhood
-    N(v) ∪ {v} — the edge relation carries an explicit self-loop per
-    vertex, so one join + one aggregate replaces the old
-    join + aggregate + left-join-back — then (2) jumps pointers:
-    ``component := component's own current component``. The jump
-    halves the remaining pointer depth every round, so convergence is
-    O(log diameter) rounds instead of the O(diameter) of plain
-    propagation (measured on the sf0.1 star-edge graph: 13 rounds →
-    5). Labels only ever decrease, so SUM(component) strictly
-    decreases until the fixpoint — the convergence probe is one
-    partial-aggregated scan (exact DECIMAL(38) sum, overflow-safe at
-    any vertex count) instead of a full old-vs-new join.
+    1. Contraction (Łącki et al., "Connected Components at Scale via
+       Local Contractions", arXiv 1807.10727). The symmetric edge
+       relation, with one self-loop row per vertex, is built in ONE
+       pass over ``edges`` (both directions out of a single explode)
+       and repartitioned by ``src`` with no partition count, so AQE
+       sizes it. One ``mapInArrow`` runs an exact union-find over
+       each partition (:func:`_local_components`) and emits
+       (u, local_root, kind), pinned with a lazy ``localCheckpoint``.
+       All of a vertex's edges land in the partition of its own
+       self-loop row, so the kernel knows there whether an id is a
+       vertex. A local component is final when every id in it is a
+       ``src`` of its partition; the kernel drops it if it holds no
+       vertex and keeps its non-vertex ids (kind 0) otherwise.
+    2. One aggregate over the contracted rows counts the NULL
+       endpoints, the rows of ids that are only a ``dst`` in a
+       partition (open components) and the kind-0 rows. With no open
+       component every local root is already the component minimum:
+       kind-0 rows raise, and the contracted rows are the answer
+       (the contraction counts as round 1 of ``LAST_CC_ROUNDS``). On
+       a small graph AQE coalesces the repartition to one partition,
+       so this is the path taken.
+    3. Otherwise labels start at min(local_root) per u (its "is a
+       vertex" flag comes from its own partition) and propagate over
+       the contracted star edges (u, local_root) only: each round
+       takes the min label over the closed neighborhood, then jumps
+       pointers (``component := component's own component``), and
+       the round is localCheckpoint-ed to cut lineage. The round's
+       probe is one aggregate: an exact DECIMAL(38) label sum, which
+       strictly falls until the fixpoint, and the count of ids whose
+       neighborhood mixes vertices and non-vertices. A mixed
+       component always has a star edge between the two kinds, so
+       round 1 finds it and raises.
 
-    Scale shape: the symmetric self-looped edge relation is built in
-    ONE pass over ``edges`` (both directions come out of a single
-    explode, so the candidate-pair chain upstream is scanned once,
-    not twice as with a union of two selects) and pinned with a
-    ``localCheckpoint`` that the first round materializes. The
-    initial labels are the self-loop rows read straight off that
-    pinned relation — the vertex chain is not recomputed. The label
-    frontier is localCheckpoint-ed per round to cut lineage
-    (iterative algorithms otherwise replan from scratch each round).
-    (A persist(MEMORY_AND_DISK) of the edge relation pre-partitioned
-    by ``src`` — which would also remove the per-round edge-side
-    exchange at SMJ scale — was measured 1.3-2.6× SLOWER end to end
-    at the bench point: the columnar cache build and per-round
-    InMemoryTableScan cost more than the tiny exchanges they save.)
-    Returns (id, component) with component = min id in the component.
+    Measured on one 5,920-document ``dedup_components`` input (7,703
+    star edges, local[4], calls after the first in one Spark session): the
+    propagation over every edge this replaces took 9 rounds, 91-94
+    Spark jobs and 4.3-5.0 s per call; the contraction takes one
+    partition, no propagation round, 4 jobs and 1.0-1.5 s. Forcing
+    the propagation path on the same input took 18-19 jobs and
+    1.7-2.7 s, so the closed-component shortcut pays.
     """
     both_dirs = F.explode(
         F.array(
@@ -723,37 +809,76 @@ def connected_components(
         .select(both_dirs)
         .select("e.src", "e.dst")
         .unionAll(
-            vertices.select(F.col(id_col).alias("src"), F.col(id_col).alias("dst"))
+            vertices.filter(F.col(id_col).isNotNull())
+            .select(F.col(id_col).alias("src"), F.col(id_col).alias("dst"))
         )
-        .dropDuplicates(["src", "dst"])
+    )
+    id_type = sym.schema["src"].dataType
+    star = (
+        sym.repartition("src")
+        .mapInArrow(
+            _local_components,
+            StructType([
+                StructField("u", id_type),
+                StructField("root", id_type),
+                StructField("kind", ByteType()),
+            ]),
+        )
         .localCheckpoint(eager=False)
     )
+    probe = star.agg(
+        F.count(F.when(F.col("u").isNull(), 1)).alias("null_ends"),
+        F.count(F.when(F.col("u").isNotNull() & F.col("kind").isNull(), 1)).alias("open"),
+        F.count(F.when(F.col("kind") == 0, 1)).alias("non_vertices"),
+    ).collect()[0]
+    global LAST_CC_ROUNDS
+    if probe["null_ends"] or (not probe["open"] and probe["non_vertices"]):
+        raise ValueError(
+            "connected_components: an edge endpoint is not in vertices ("
+            + ("NULL" if probe["null_ends"] else f"{probe['non_vertices']} non-vertex ids")
+            + ")"
+        )
+    if not probe["open"]:
+        LAST_CC_ROUNDS = 1
+        return star.select(F.col("u").alias("id"), F.col("root").alias("component"))
 
-    # the self-loops ARE the vertex set (input self-loop edges were
-    # dropped above): one row per vertex, served from the pinned edge
-    # relation
-    labels = sym.filter(F.col("src") == F.col("dst")).select(
-        F.col("src").alias("id"), F.col("src").alias("component")
+    # closed neighborhoods of the contracted graph: (u, root) both ways
+    # plus a self-loop per id
+    closed_nbhd = star.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u").alias("src"), F.col("root").alias("dst")),
+                F.struct(F.col("root").alias("src"), F.col("u").alias("dst")),
+                F.struct(F.col("u").alias("src"), F.col("u").alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")
+    labels = (
+        star.groupBy("u")
+        .agg(F.min("root").alias("component"), F.min("kind").alias("v"))
+        .select(F.col("u").alias("id"), "component", "v", F.col("v").alias("v_hi"))
     )
 
     def _label_sum(frame: DataFrame) -> tuple:
         row = frame.agg(
             F.sum(F.col("component").cast("decimal(38,0)")).alias("s"),
-            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("v") != F.col("v_hi"), 1)).alias("mixed"),
         ).collect()[0]
-        return row["s"], row["n"]
+        return row["s"], row["mixed"]
 
-    global LAST_CC_ROUNDS
-    prev_sum, n_vertices = _label_sum(labels)
+    prev_sum, _ = _label_sum(labels)
     converged = False
     for LAST_CC_ROUNDS in range(1, max_iterations + 1):
-        # min label over the closed neighborhood (self-loops make
-        # the old left-join-back redundant: every vertex has at
-        # least its own row, carrying its own label)
+        # min label over the closed neighborhood, and the vertex flags
+        # met there
         stepped = (
-            sym.join(labels, sym.src == labels.id)
+            closed_nbhd.join(labels, closed_nbhd.src == labels.id)
             .groupBy("dst")
-            .agg(F.min("component").alias("component"))
+            .agg(
+                F.min("component").alias("component"),
+                F.min("v").alias("v"),
+                F.max("v_hi").alias("v_hi"),
+            )
         )
         # pointer jump: follow my label's label (its component can
         # only be <= mine, so least() is just defensive). The ptr
@@ -770,15 +895,16 @@ def connected_components(
                     F.col("component"),
                     F.coalesce("p_component", F.col("component")),
                 ).alias("component"),
+                "v",
+                "v_hi",
             )
             .localCheckpoint(eager=False)
         )
-        cur_sum, n_labels = _label_sum(new_labels)
-        if n_labels > n_vertices:
+        cur_sum, mixed = _label_sum(new_labels)
+        if mixed:
             raise ValueError(
                 "connected_components: an edge endpoint is not in vertices "
-                f"({n_labels} labels for {n_vertices} vertices after round "
-                f"{LAST_CC_ROUNDS})"
+                f"({mixed} ids next to both kinds after round {LAST_CC_ROUNDS})"
             )
         labels = new_labels
         if cur_sum == prev_sum:
@@ -791,7 +917,7 @@ def connected_components(
             "iterations (graph diameter exceeds the bound); raise "
             "max_iterations"
         )
-    return labels
+    return labels.filter(F.col("v") == 1).select("id", "component")
 
 
 def connected_components_star(

@@ -280,10 +280,12 @@ VOID: dict[str, int] = {
     # (Huffman lookup table), GIF and TIFF (LZW) decoders were
     # rewritten. Later, minhash_signatures became one mapInArrow pass
     # (no explode, no string-min aggregate) and connected_components
-    # gained its edge-endpoint check. Identical results, but a touched
-    # kernel in every query below (each reaches minhash_signatures or
-    # connected_components, or decodes JPEG/GIF/TIFF), so the
-    # re-certification is the VOID discipline:
+    # gained its edge-endpoint check; later still, connected_components
+    # became one union-find contraction per partition followed by
+    # propagation over the contracted stars only. Identical results,
+    # but a touched kernel in every query below (each reaches
+    # minhash_signatures or connected_components, or decodes
+    # JPEG/GIF/TIFF), so the re-certification is the VOID discipline:
     "dedup_minhash_suite": 13,
     "dedup_components_suite": 13,
     "dedup_keep_canonical": 13,

@@ -932,8 +932,9 @@ def pipeline_llm_prep(spark: SparkSession, sf: str) -> DataFrame:
     real-world variant.
 
     Scale shape: the quality gate is map-side and shrinks everything
-    downstream; clustering runs id-only (star edges Σg, CC
-    O(log diameter) rounds); text/metadata rejoin only for survivors;
+    downstream; clustering runs id-only (star edges Σg, CC by local
+    union-find contraction, which at this size leaves no propagation
+    round); text/metadata rejoin only for survivors;
     the final agg is a narrow (lang, source) rollup."""
     from queryengine_spark.operators.dedup import (  # noqa: PLC0415
         connected_components,

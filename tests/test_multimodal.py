@@ -274,3 +274,30 @@ class TestBmpRle4:
         assert img is not None
         # palette entries are (B,G,R,X) on disk -> RGB out
         assert img.tolist() == [[[5, 10, 15], [0, 0, 0], [15, 30, 45]]]
+
+
+def test_extract_features_decodes_ac_and_progressive_jpeg(spark):
+    """JPEGs outside the DC profiles (AC-bearing, 4:2:0 with AC,
+    progressive) report the dimensions the full pixel decoder sees,
+    not the md5-derived fake."""
+    from queryengine_spark.multimodal import _fake_decode
+    from queryengine_spark.multimodal.jpeg import (
+        make_jpeg_420_ac,
+        make_jpeg_ac,
+        make_jpeg_progressive,
+    )
+    from queryengine_spark.multimodal.phash import decode_image
+
+    payloads = {
+        1: make_jpeg_ac(3),
+        2: make_jpeg_420_ac(13, dri=False),
+        3: make_jpeg_progressive(1),
+    }
+    df = spark.createDataFrame(
+        [(i, "image/jpeg", b, None) for i, b in payloads.items()],
+        "asset_id long, media_type string, payload binary, n_bytes long",
+    )
+    got = {r["asset_id"]: (r["width"], r["height"]) for r in extract_features(df).collect()}
+    for i, b in payloads.items():
+        arr = decode_image(b)
+        assert got[i] == (arr.shape[1], arr.shape[0]) != _fake_decode(b), i
