@@ -85,15 +85,14 @@ def _fake_decode(payload: bytes) -> tuple[int, int]:
 
 def _decode_dims(payload: bytes) -> tuple[int, int] | None:
     """REAL decode first, dispatched by magic bytes through every
-    in-repo decoder (BMP / PNG / GIF / baseline-JPEG DC profile) —
-    true (width, height) with no media libraries; then the PIL-shaped
-    hook for formats that need external libs; ``None`` → genuinely
-    opaque payload (caller falls back to the deterministic fake).
-    A JPEG outside the DC profiles (AC-bearing, subsampled with AC,
-    progressive) decodes through ``jpeg.decode_jpeg_rgb``. A decoder
-    returning None for a sniffed-but-malformed (or out-of-profile)
-    container falls through to the hook/fake rather than failing the
-    batch."""
+    in-repo decoder (BMP / PNG / GIF / TIFF / JPEG) — true (width,
+    height) with no media libraries; then the PIL-shaped hook for
+    formats that need external libs; ``None`` → genuinely opaque
+    payload (caller falls back to the deterministic fake). A JPEG
+    payload makes one ``jpeg.decode_jpeg_rgb`` call: one marker walk
+    and one decode, whatever its profile. A decoder returning None for
+    a sniffed-but-malformed (or out-of-profile) container falls
+    through to the hook/fake rather than failing the batch."""
     arr = None
     if payload[:2] == b"BM":
         from queryengine_spark.multimodal.bmp import decode_bmp
@@ -112,22 +111,9 @@ def _decode_dims(payload: bytes) -> tuple[int, int] | None:
 
         arr = decode_tiff(payload)
     elif payload[:2] == b"\xff\xd8":
-        from queryengine_spark.multimodal.jpeg import (
-            decode_jpeg_dc,
-            decode_jpeg_dc_planes,
-            decode_jpeg_rgb,
-        )
+        from queryengine_spark.multimodal.jpeg import decode_jpeg_rgb
 
-        arr = decode_jpeg_dc(payload)
-        if arr is None:
-            # 3-component profiles incl. 4:2:0/4:2:2 subsampling and
-            # DRI (r6): the planes decode carries (w, h) directly
-            res = decode_jpeg_dc_planes(payload)
-            if res is not None:
-                return int(res[0]), int(res[1])
-            # AC-bearing, subsampled-with-AC and progressive streams
-            # decode through the full pixel path
-            arr = decode_jpeg_rgb(payload)
+        arr = decode_jpeg_rgb(payload)
     if arr is not None:
         # (h, w) grayscale or (h, w, channels): shape[1] is width
         return int(arr.shape[1]), int(arr.shape[0])
@@ -187,13 +173,9 @@ def _decode_rgb(payload: bytes):
 
         arr = decode_tiff(payload)
     elif payload[:2] == b"\xff\xd8":
-        from queryengine_spark.multimodal.jpeg import decode_jpeg_dc, decode_jpeg_rgb
+        from queryengine_spark.multimodal.jpeg import decode_jpeg_rgb
 
-        arr = decode_jpeg_dc(payload)
-        if arr is None:
-            # AC-bearing, subsampled and progressive streams: the full
-            # pixel path
-            arr = decode_jpeg_rgb(payload)
+        arr = decode_jpeg_rgb(payload)
     if arr is None:
         return None
     if arr.ndim == 2:  # grayscale (gray-8 JPEG/PNG; 16-bit scaled down)

@@ -1,47 +1,41 @@
-"""Real baseline-JPEG entropy decode for the DC-only profile, no
-media libraries — closing the last stubbed decoder as far as exact
-arithmetic allows.
+"""Baseline, progressive and lossless JPEG decoded with no media
+libraries, plus the synthesizers that build the test corpora.
 
-What is REAL here: the complete JFIF marker walk (SOI/DQT/SOF0/DHT/
-SOS/EOI, length-prefixed segments, 0xFF00 byte unstuffing), canonical
-Huffman table construction FROM THE DHT SEGMENT BYTES (the tables are
-not baked into the decoder — it decodes whatever tables the file
-declares; the synthesizer writes the standard Annex K luminance
-tables), bit-level entropy decoding of the scan (DC category code →
-sign-extended difference bits, DC prediction across blocks, AC
-end-of-block), and dequantization.
+A payload is decoded in three steps, each run once per payload:
 
-Since round 5 the AC run/size grammar is decoded too
-(``decode_jpeg_coeffs``): ZRL 16-zero runs, EOB, implicit block end
-after a coefficient at zigzag 63, zigzag→natural placement, and
-exact integer dequantization — the full baseline sequential entropy
-surface for single-component scans. Since round 7 the PIXEL domain
-is general too: ``idct8_fixed`` is a pinned FIXED-POINT integer IDCT
-(spec in its section header — scaled-integer basis, int64
-accumulation, arithmetic-shift rounding, within ±1 of the exact real
-IDCT) whose arithmetic the DuckDB oracle replicates in BIGINT, so
-``decode_jpeg_pixels`` serves exact certified pixels for AC-bearing
-sequential AND single-component progressive streams; the legacy
-``decode_jpeg_dc`` collapse profile (every pixel = dc + 128 when
-q ≡ 0 mod 8) survives as a strict special case the fixed-point path
-reproduces bit-exactly. Since round 6 the MCU geometry is general: per-component
-sampling factors h, v ∈ 1..4 (4:4:4, 4:2:0 — the dominant
-real-world baseline profile — 4:2:2, 4:4:0, 4:1:1) with interleaved
-multi-block MCUs, DRI restart intervals are honored (scan split at
-validated RST0..RST7 markers, DC predictors reset, bitstream
-byte-realigned), quant tables parse at BOTH precisions (8-bit Pq=0
-and big-endian 16-bit Pq=1), and PROGRESSIVE (SOF2) streams — single-component
-AND 3-component with interleaved DC scans + per-component AC band
-scans — decode exactly in the coefficient domain: spectral
-selection, successive approximation (arithmetic-shift DC vs
-magnitude-shift AC point transforms), EOBn end-of-band runs, and
-refinement correction bits (``decode_jpeg_coeffs_prog`` /
-``decode_jpeg_coeffs_prog3``). Huffman-DCT JPEG is COMPLETE, and r9
-adds LOSSLESS (SOF3, Annex H — the DNG/DICOM process: seven spatial
-predictors, modulo-2^16 differences, the SSSS=16 escape, 8- and
-16-bit precisions). The refusals left are the genuinely different
-codecs — arithmetic-coded (SOF9+), hierarchical (SOF5+) — plus
-undefined DQT precisions, all validated, never guessed at.
+1. **Walk** (:func:`_walk`). One pass over the markers: SOI, DQT
+   (8-bit Pq=0 and 16-bit Pq=1 tables, several per segment), DHT
+   (canonical Huffman tables built FROM THE SEGMENT BYTES — nothing
+   is baked in), DRI, the SOF0/SOF2/SOF3 frame header, every SOS and
+   EOI, with 0xFF fill bytes skipped before any marker. One entropy
+   splitter unstuffs 0xFF00 and cuts each scan at its RST0..RST7
+   markers, whose sequence numbers it checks. The walk returns the
+   frame (SOF kind, precision, size, components with sampling
+   factors h, v ∈ 1..4) and every scan with the tables and restart
+   interval in force at that scan.
+2. **Decode.** :func:`_decode_dct` replays the scans of a sequential
+   (SOF0) or progressive (SOF2, Annex G spectral selection and
+   successive approximation) frame, 1 or 3 components, into
+   ``(w, h, per-component dequantized natural-order coefficient
+   arrays over the real blocks, hv)``. :func:`_decode_sof3` runs the
+   lossless predictor loop (Annex H) on the same walk.
+3. **Views.** Every public ``decode_jpeg_*`` is a view of one decode:
+   the coefficients as decoded; pixels through the pinned
+   fixed-point integer IDCT (:func:`idct8_fixed`, whose arithmetic
+   the DuckDB oracle replicates in BIGINT); full-resolution RGB
+   through the pinned integer upsample and Rec.601 inverse; and the
+   legacy DC-only profile (every q0 ≡ 0 mod 8, every AC zero, every
+   pixel dc/8 + 128 in 0..255), which the IDCT reproduces
+   bit-exactly. :func:`decode_jpeg_rgb` and :func:`jpeg_full_stats`
+   dispatch on the SOF kind and the component count.
+
+Refusals are None, never a guess or an exception: SOF1 and
+SOF5..SOF7 frames (arithmetic-coded SOF9+ streams carry no SOF the
+walk accepts), DQT precisions Pq ≥ 2, sampling factors outside 1..4,
+an interleaved MCU of more than 10 blocks, a DRI in a lossless scan,
+zero width or height, a frame with more blocks than its entropy data
+has bits, truncated or mis-sequenced entropy data, and progressive
+scans that break the Annex G scan-script rules.
 
 Correctness: the DuckDB oracle recomputes pixel sums from the DC
 formula and coefficient sums from the AC formula while Spark decodes
@@ -51,12 +45,14 @@ single-block, negative diffs, byte unstuffing, and an AC vector with
 ZRL runs — so a matched encoder/decoder bug pair cannot cancel, plus
 refusal probes for wrong precision and truncation, plus a hypothesis
 property suite round-tripping random sparse coefficient blocks
-through the generic encoder.
+through the generic encoder. tests/test_jpeg_pipeline.py keeps the
+per-profile decoders this pipeline replaced as a differential oracle.
 """
 
 from __future__ import annotations
 
 import struct
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -227,6 +223,8 @@ def _zigzag_pairs() -> list[tuple[int, int]]:
 
 #: scan index k → natural (row-major) index row*8+col
 ZIGZAG_NAT = [r * 8 + c for r, c in _zigzag_pairs()]
+#: natural index → scan index (the inverse permutation)
+_NAT_ZIGZAG = np.argsort(ZIGZAG_NAT)
 
 #: AC synthesis: fixed zigzag positions chosen to exercise every
 #: run-length shape — k=1 (run 0), k=5 (run 3), k=23 (run 17 → ZRL +
@@ -680,11 +678,14 @@ class _BitReader:
         self.data = data
         self.pos = 0  # bit position over the UNSTUFFED stream
         self.nbits = 8 * len(data)
-        a = np.frombuffer(data + b"\x00\x00", dtype=np.uint8).astype(np.uint32)
-        # _w[i] = bytes i..i+2 big-endian: bits 8*i .. 8*i+23. Built
-        # vectorized, stored as a plain list — list indexing is ~50 ns
-        # where a numpy scalar index costs ~4 µs per call.
-        self._w = ((a[:-2] << 16) | (a[1:-1] << 8) | a[2:]).tolist()
+        # _w[i] = bytes i..i+2 big-endian: bits 8*i .. 8*i+23, read as
+        # the top of a big-endian 32-bit word at every byte offset (a
+        # 1-byte-stride view), stored as a plain list — list indexing
+        # is ~50 ns where a numpy scalar index costs ~4 µs per call.
+        words = np.ndarray(
+            (len(data),), dtype=">u4", buffer=data + b"\x00\x00\x00", strides=(1,)
+        )
+        self._w = (words >> 8).tolist()
 
     def bit(self) -> int | None:
         p = self.pos
@@ -737,7 +738,7 @@ class _HuffTable:
 _DECODE_TABLE_MEMO: dict[tuple[bytes, bytes], _HuffTable] = {}
 
 
-def _build_decode_table(bits: list[int], vals: list[int]) -> _HuffTable:
+def _build_decode_table(bits: bytes | list[int], vals: bytes | list[int]) -> _HuffTable:
     """Huffman decode table from the DHT payload (memoized on table
     content — tables repeat across images)."""
     key = (bytes(bits), bytes(vals))
@@ -762,197 +763,193 @@ def _read_huff(r: _BitReader, table: _HuffTable) -> int | None:
     return None
 
 
-def _split_entropy(b: bytes, scan_start: int):
-    """Entropy region → (segments, end_ok): walk from scan_start,
-    0xFF00 unstuffs to a data 0xFF, restart markers RST0..RST7 split
-    the stream into byte-aligned segments (validated to cycle n =
-    0, 1, ... mod 8 — an out-of-order RSTn is corruption, not data),
-    EOI terminates. Any other marker inside the scan → None."""
+# ---------------------------------------------------------------------------
+# Step 1: the marker walk
+# ---------------------------------------------------------------------------
+
+#: the frame kinds the walk accepts (T.81 B.1.1.3): baseline
+#: sequential, progressive and lossless, all Huffman-coded
+_SOF0, _SOF2, _SOF3 = 0xC0, 0xC2, 0xC3
+
+
+class _Frame(NamedTuple):
+    """A walked stream. ``comps`` lists (quant table or None, h_c,
+    v_c) in frame order, quant tables (64 int64, zigzag order) as
+    defined at EOI; ``scans``
+    lists (comp_tabs, ss, se, ah, al, segments, restart_interval) in
+    stream order, with comp_tabs = [(component index, DC table or
+    None, AC table or None), ...] in scan order and the Huffman tables
+    and restart interval those in force at that scan."""
+
+    kind: int
+    prec: int
+    w: int
+    h: int
+    comps: list
+    scans: list
+
+
+def _split_entropy(b: bytes, pos: int):
+    """One scan's entropy region from ``pos`` → (segments, marker_pos):
+    0xFF00 unstuffs to a data 0xFF, RST0..RST7 split the stream into
+    byte-aligned segments (their numbers must cycle 0, 1, ... mod 8 —
+    an out-of-order RSTn is corruption, not data), and the first other
+    marker ends the scan. None when the bytes run out first."""
     segs: list[bytes] = []
     cur = bytearray()
     expect_rst = 0
-    pos = scan_start
-    n = len(b)
-    while pos < n:
-        c = b[pos]
-        if c != 0xFF:
-            cur.append(c)
-            pos += 1
-            continue
-        if pos + 1 >= n:
+    while True:
+        i = b.find(b"\xff", pos)
+        if i < 0 or i + 1 >= len(b):
             return None
-        m = b[pos + 1]
+        cur += b[pos:i]
+        m = b[i + 1]
+        pos = i + 2
         if m == 0x00:  # stuffed data byte
             cur.append(0xFF)
-            pos += 2
         elif 0xD0 <= m <= 0xD7:  # RSTn
             if m - 0xD0 != expect_rst:
                 return None
             expect_rst = (expect_rst + 1) % 8
             segs.append(bytes(cur))
             cur = bytearray()
-            pos += 2
-        elif m == 0xD9:  # EOI
-            segs.append(bytes(cur))
-            return segs
         else:
-            return None
-    return None  # ran off the end without EOI
+            segs.append(bytes(cur))
+            return segs, i
 
 
-def _parse_segments_multi(b: bytes):
-    """Generalized JFIF marker walk (r5, extended r6): SOI → (DQTs,
-    SOF0, DHTs, optional DRI, SOS) → entropy bytes. Handles MULTIPLE
-    quant tables (several per DQT segment, keyed by table id; 8-bit
-    Pq=0 AND 16-bit Pq=1 precisions, normalized to int tuples), 1- or
-    3-component baseline sequential scans with the FULL legal range
-    of per-component sampling factors h, v ∈ 1..4 (B.2.2; interleaved
-    MCUs capped at 10 data units per B.2.3) — covering 4:4:4, 4:2:0,
-    4:2:2, 4:4:0, 4:1:1 — and DRI restart intervals (the scan is
-    split at RSTn markers into byte-aligned segments with the marker
-    sequence number validated). Returns
-    (comps, (w, h), segments, restart_interval) with
-    comps = [(quant_ints, dc_table, ac_table, h_c, v_c), ...] in
-    scan order, or None. Refuses non-baseline SOFs and undefined DQT
-    precisions (Pq ≥ 2)."""
+def _walk(b: bytes) -> _Frame | None:
+    """The one marker walk: SOI, then DQT, DHT, DRI, one SOF0/SOF2/SOF3
+    frame header and every SOS with its entropy segments, up to EOI.
+    Other marker segments are skipped by their length. Tables and the
+    restart interval may be (re)defined between scans. The structural
+    refusals live here; each decoder checks what its own process needs
+    (which tables a scan reads, the scan script)."""
     if len(b) < 4 or b[:2] != b"\xff\xd8":
         return None
     pos = 2
-    quants: dict[int, bytes] = {}
-    sof = None
-    sof_comps: list[tuple[int, int, int, int]] = []  # (comp_id, quant_id, h, v)
-    huff: dict[tuple[int, int], dict] = {}
-    scan_start = None
-    scan_tabs: list[tuple[int, int, int]] = []  # (comp_id, dc_id, ac_id)
-    restart_interval = 0
-    while pos + 4 <= len(b):
+    quants: dict[int, np.ndarray] = {}
+    huff: dict[tuple[int, int], _HuffTable] = {}
+    kind = None
+    frame: tuple = ()  # (prec, w, h, [(cid, tq, h_c, v_c), ...])
+    ri = 0
+    scans: list = []
+    while pos + 2 <= len(b):
         if b[pos] != 0xFF:
             return None
         # T.81 B.1.1.2: any number of 0xFF fill bytes may precede a
-        # marker — skip them (r10, r9 ADVICE: DNG-embedded SOF3 and
-        # some hardware encoders pad with fills; refusing them lost
-        # spec-valid files)
+        # marker (DNG-embedded SOF3 and some hardware encoders pad)
         while pos + 2 < len(b) and b[pos + 1] == 0xFF:
             pos += 1
-        if pos + 4 > len(b):
-            # fill bytes ran into EOF: no room for marker + length —
-            # refuse (r10 ADVICE: the skip must not outrun the
-            # pos+4<=len guard the loop header established)
-            return None
         marker = b[pos + 1]
+        if marker == 0xD9:  # EOI
+            if kind is None or not scans:
+                return None
+            prec, w, h, fcomps = frame
+            comps = [(quants.get(tq), hc, vc) for _, tq, hc, vc in fcomps]
+            return _Frame(kind, prec, w, h, comps, scans)
+        if pos + 4 > len(b):
+            return None  # fill bytes ran into EOF: no room for a length
         (seglen,) = struct.unpack(">H", b[pos + 2 : pos + 4])
         body = b[pos + 4 : pos + 2 + seglen]
         if len(body) != seglen - 2:
             return None
+        pos += 2 + seglen
         if marker == 0xDB:
-            # a DQT segment may carry several table entries; Pq=0 →
-            # 65-byte 8-bit tables, Pq=1 → 129-byte big-endian 16-bit
-            # tables (r6 — high-quality encoders emit these); both are
-            # normalized to int tuples so dequantization is uniform
+            # one or more tables: Pq=0 → 64 bytes, Pq=1 → 64 big-endian
+            # 16-bit entries (high-quality encoders emit these)
             p = 0
             while p < len(body):
                 pq = body[p] >> 4
-                tid = body[p] & 0x0F
-                if pq == 0:
-                    if p + 65 > len(body):
-                        return None
-                    quants[tid] = tuple(body[p + 1 : p + 65])
-                    p += 65
-                elif pq == 1:
-                    if p + 129 > len(body):
-                        return None
-                    quants[tid] = struct.unpack(">64H", body[p + 1 : p + 129])
-                    p += 129
-                else:
-                    return None  # Pq 2..15 undefined
-        elif marker == 0xC0:
-            if len(body) < 6:
-                return None
-            prec, h, w_, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8 or ncomp not in (1, 3):
-                return None
-            if len(body) < 6 + 3 * ncomp:
-                return None  # truncated SOF: refuse, don't raise
-            sof_comps = []
-            for ci in range(ncomp):
-                cid, samp, tq = body[6 + 3 * ci : 9 + 3 * ci]
-                hc, vc = samp >> 4, samp & 0x0F
-                if ncomp == 1:
-                    # a single-component scan is non-interleaved: one
-                    # block per MCU regardless of declared factors
-                    hc = vc = 1
-                if not (1 <= hc <= 4 and 1 <= vc <= 4):
-                    return None  # factors 0 and 5..15 are illegal (B.2.2)
-                sof_comps.append((cid, tq, hc, vc))
-            if ncomp > 1 and sum(hc * vc for _, _, hc, vc in sof_comps) > 10:
-                return None  # interleaved MCU exceeds 10 blocks (B.2.3)
-            sof = (w_, h)
-        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7):
-            return None  # non-baseline SOF
+                size = 128 if pq else 64
+                if pq > 1 or p + 1 + size > len(body):
+                    return None  # Pq 2..15 undefined, or a short table
+                raw = body[p + 1 : p + 1 + size]
+                quants[body[p] & 0x0F] = np.frombuffer(raw, ">u2" if pq else np.uint8).astype(np.int64)
+                p += 1 + size
+        elif marker == 0xC4:
+            # one or more tables, keyed (class, id)
+            p = 0
+            while p < len(body):
+                bits = body[p + 1 : p + 17]
+                nv = sum(bits)
+                if len(bits) != 16 or p + 17 + nv > len(body):
+                    return None
+                huff[(body[p] >> 4, body[p] & 0x0F)] = _build_decode_table(
+                    bits, body[p + 17 : p + 17 + nv]
+                )
+                p += 17 + nv
         elif marker == 0xDD:
             if len(body) != 2:
                 return None
-            (restart_interval,) = struct.unpack(">H", body)
-        elif marker == 0xC4:
-            # a DHT segment may carry several tables too
-            p = 0
-            while p < len(body):
-                tclass, tid = body[p] >> 4, body[p] & 0x0F
-                bits = list(body[p + 1 : p + 17])
-                if len(bits) != 16:
-                    return None
-                n = sum(bits)
-                if p + 17 + n > len(body):
-                    return None
-                huff[(tclass, tid)] = _build_decode_table(
-                    bits, list(body[p + 17 : p + 17 + n])
-                )
-                p += 17 + n
-        elif marker == 0xDA:
-            ns = body[0]
-            if ns not in (1, 3):
+            (ri,) = struct.unpack(">H", body)
+        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7):
+            # SOF1 and SOF5..7 are refused, and so is a second frame kind
+            if marker not in (_SOF0, _SOF2, _SOF3) or kind not in (None, marker):
                 return None
-            scan_tabs = []
-            for ci in range(ns):
-                cid = body[1 + 2 * ci]
-                tt = body[2 + 2 * ci]
-                scan_tabs.append((cid, tt >> 4, tt & 0x0F))
-            scan_start = pos + 2 + seglen
-            break
-        pos += 2 + seglen
-    if scan_start is None or sof is None or not quants:
-        return None
-    if len(scan_tabs) != len(sof_comps):
-        return None
-    sof_by_id = {cid: (tq, hc, vc) for cid, tq, hc, vc in sof_comps}
-    comps = []
-    for cid, dc_id, ac_id in scan_tabs:
-        if cid not in sof_by_id:
-            return None
-        tq, hc, vc = sof_by_id[cid]
-        if tq not in quants or (0, dc_id) not in huff or (1, ac_id) not in huff:
-            return None
-        comps.append((quants[tq], huff[(0, dc_id)], huff[(1, ac_id)], hc, vc))
-    segments = _split_entropy(b, scan_start)
-    if segments is None:
-        return None
-    return comps, sof, segments, restart_interval
+            if len(body) < 6:
+                return None
+            prec, h, w, nf = struct.unpack(">BHHB", body[:6])
+            if marker == _SOF3:
+                ok = 2 <= prec <= 16 and nf == 1
+            else:
+                ok = prec == 8 and nf in (1, 3)
+            # zero width is illegal and zero height needs DNL (unsupported)
+            if not ok or not w or not h or len(body) < 6 + 3 * nf:
+                return None
+            fcomps = []
+            for i in range(nf):
+                cid, samp, tq = body[6 + 3 * i : 9 + 3 * i]
+                # a single component is non-interleaved: one block per
+                # MCU regardless of its declared factors
+                hc, vc = (samp >> 4, samp & 0x0F) if nf > 1 else (1, 1)
+                if not (1 <= hc <= 4 and 1 <= vc <= 4):
+                    return None  # factors 0 and 5..15 are illegal (B.2.2)
+                fcomps.append((cid, tq, hc, vc))
+            kind, frame = marker, (prec, w, h, fcomps)
+        elif marker == 0xDA:
+            ns = body[0] if body else 0
+            if kind is None or len(body) != 4 + 2 * ns or not 1 <= ns <= len(frame[3]):
+                return None
+            index = {cid: i for i, (cid, _, _, _) in enumerate(frame[3])}
+            comp_tabs = []
+            for k in range(ns):
+                ci = index.get(body[1 + 2 * k])
+                tt = body[2 + 2 * k]
+                if ci is None or any(ci == c for c, _, _ in comp_tabs):
+                    return None  # each scan component is a distinct frame one
+                comp_tabs.append((ci, huff.get((0, tt >> 4)), huff.get((1, tt & 0x0F))))
+            blocks = sum(frame[3][ci][2] * frame[3][ci][3] for ci, _, _ in comp_tabs)
+            if ns > 1 and blocks > 10:
+                return None  # an interleaved MCU holds at most 10 blocks (B.2.3)
+            split = _split_entropy(b, pos)
+            if split is None:
+                return None
+            segments, pos = split
+            ss, se, ahal = body[-3], body[-2], body[-1]
+            scans.append((comp_tabs, ss, se, ahal >> 4, ahal & 0x0F, segments, ri))
+    return None  # ran off the end without EOI
 
 
-def _parse_segments(b: bytes):
-    """Single-component view of :func:`_parse_segments_multi` — the
-    contract the grayscale decode paths keep: returns
-    (quant, (w, h), dc_table, ac_table, segments, restart_interval)
-    or None (also None for 3-component files; those go through
-    decode_jpeg_dc3 / decode_jpeg_dc_planes)."""
-    parsed = _parse_segments_multi(b)
-    if parsed is None:
-        return None
-    comps, sof, segments, ri = parsed
-    if len(comps) != 1:
-        return None
-    quant, dc_tab, ac_tab, _, _ = comps[0]
-    return quant, sof, dc_tab, ac_tab, segments, ri
+# ---------------------------------------------------------------------------
+# Step 2: the Huffman-DCT decode
+# ---------------------------------------------------------------------------
+#
+# One replay loop serves both DCT processes. A sequential (SOF0) block
+# is a DC-first decode at Al = 0 followed by a full-band (1..63)
+# AC-first decode that may not open an EOB run. Progressive (SOF2)
+# scans follow ITU T.81 Annex G: spectral selection + successive
+# approximation, with point transforms that differ by coefficient
+# kind — DC uses an ARITHMETIC shift of the signed value (G.1.2.1, so
+# refinement bits OR into the two's-complement representation), AC
+# shifts the MAGNITUDE and reapplies the sign (G.1.2.2, so a
+# refinement correction bit moves the value AWAY from zero). AC first
+# scans code end-of-band runs (EOBn: size 0, run < 15, run extension
+# bits, up to 2^14 blocks); AC refinement scans interleave one
+# correction bit for every already-nonzero coefficient passed while
+# positioning newly-nonzero ±1·2^Al coefficients, and defer the
+# correction bits of EOB-run blocks until the next EOBn. Every path
+# lands in the same exact integer coefficient domain.
 
 
 def _read_dc_diff(r: _BitReader, dc_tab: _HuffTable) -> int | None:
@@ -967,339 +964,412 @@ def _read_dc_diff(r: _BitReader, dc_tab: _HuffTable) -> int | None:
     return bits_v if bits_v >= (1 << (cat - 1)) else bits_v - (1 << cat) + 1
 
 
-def decode_jpeg_dc(b: bytes) -> np.ndarray | None:
-    """bytes → (h, w) uint8 grayscale array for a single-component
-    baseline JFIF whose scan is DC-only, or None for anything else —
-    including a scan that contains ANY nonzero AC coefficient (the
-    full-IDCT pixel path is out of scope by contract, never
-    approximated; AC-bearing scans are exactly decodable in the
-    COEFFICIENT domain instead — ``decode_jpeg_coeffs``)."""
-    parsed = _parse_segments(b)
-    if parsed is None:
-        return None
-    quant, (w_, h), dc_tab, ac_tab, segments, ri = parsed
-    bw, bh = (w_ + 7) // 8, (h + 7) // 8
-    if len(segments) != (1 if ri == 0 else -(-(bw * bh) // ri)):
-        return None  # segment count must match the declared interval
-    q0 = quant[0]
-    if q0 % 8:
-        return None  # exact-pixel contract requires q0 ≡ 0 (mod 8)
-    out = np.empty((bh * 8, bw * 8), dtype=np.uint8)
-    pred = 0
-    r = _BitReader(segments[0])
-    seg = 0
-    for bi in range(bw * bh):
-        if ri and bi and bi % ri == 0:
-            seg += 1
-            r = _BitReader(segments[seg])
-            pred = 0  # predictor resets at every restart marker
-        diff = _read_dc_diff(r, dc_tab)
-        if diff is None:
-            return None
-        pred += diff
+def _dec_ac_first(r, row, ac_tab, ss, se, al, eobrun):
+    """One block of an AC first scan; returns the updated EOB run or
+    None on corruption."""
+    if eobrun:
+        return eobrun - 1
+    k = ss
+    while k <= se:
         rs = _read_huff(r, ac_tab)
         if rs is None:
             return None
-        if rs != 0x00:
-            return None  # nonzero AC: outside the exact-pixel profile
-        px = pred * q0 // 8 + 128
-        if not 0 <= px <= 255:
+        run, size = rs >> 4, rs & 0x0F
+        if size == 0:
+            if run == 15:
+                k += 16
+                continue
+            bits_v = r.take(run)  # extension bits, MSB first
+            if bits_v is None:
+                return None
+            # the run includes the current block
+            return (1 << run) + bits_v - 1
+        k += run
+        if k > se:
             return None
-        by, bx = divmod(bi, bw)
-        out[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = px
-    return out[:h, :w_]
+        bits_v = r.take(size)
+        if bits_v is None:
+            return None
+        val = bits_v if bits_v >= (1 << (size - 1)) else bits_v - (1 << size) + 1
+        row[k] = val << al
+        k += 1
+    return 0
 
 
-def decode_jpeg_dc_planes(b: bytes) -> tuple[int, int, list[np.ndarray]] | None:
-    """Back-compat wrapper over :func:`decode_jpeg_dc_planes_hv`
-    dropping the sampling-factor list (r9)."""
-    res = decode_jpeg_dc_planes_hv(b)
-    if res is None:
+def _dec_ac_refine(r, row, ac_tab, ss, se, al, eobrun):
+    """One block of an AC refinement scan; returns the updated EOB
+    run or None on corruption."""
+    p1, m1 = 1 << al, -1 << al
+    k = ss
+    if eobrun == 0:
+        while k <= se:
+            rs = _read_huff(r, ac_tab)
+            if rs is None:
+                return None
+            run, size = rs >> 4, rs & 0x0F
+            newval = 0
+            if size == 0:
+                if run < 15:
+                    bits_v = 0
+                    for _ in range(run):
+                        bit = r.bit()
+                        if bit is None:
+                            return None
+                        bits_v = (bits_v << 1) | bit
+                    eobrun = (1 << run) + bits_v
+                    break  # → correction sweep below
+                # run == 15: ZRL — skip 16 zero-history coeffs
+            elif size == 1:
+                bit = r.bit()
+                if bit is None:
+                    return None
+                newval = p1 if bit else m1
+            else:
+                return None  # refinement sizes are 0 or 1 only
+            while k <= se:
+                if row[k] != 0:
+                    bit = r.bit()
+                    if bit is None:
+                        return None
+                    if bit and not (row[k] & p1):
+                        row[k] += p1 if row[k] >= 0 else m1
+                else:
+                    if run == 0:
+                        break
+                    run -= 1
+                k += 1
+            if newval:
+                if k > se:
+                    return None
+                row[k] = newval
+            # past the placed coefficient (or the 16th zero of a ZRL,
+            # where the advance loop stopped ON it)
+            k += 1
+    if eobrun > 0:
+        while k <= se:
+            if row[k] != 0:
+                bit = r.bit()
+                if bit is None:
+                    return None
+                if bit and not (row[k] & p1):
+                    row[k] += p1 if row[k] >= 0 else m1
+            k += 1
+        eobrun -= 1
+    return eobrun
+
+
+def _native_sizes(w: int, h: int, hv: list[tuple[int, int]]) -> list[tuple[int, int]]:
+    """Per-component sampled size (A.1.1): ceil(w·h_c/h_max) ×
+    ceil(h·v_c/v_max), as (width, height)."""
+    hmax = max(hc for hc, _ in hv)
+    vmax = max(vc for _, vc in hv)
+    return [(-(-(w * hc) // hmax), -(-(h * vc) // vmax)) for hc, vc in hv]
+
+
+def _real_blocks(grid: np.ndarray, quant: np.ndarray, pw: int, wb: int, hb: int) -> np.ndarray:
+    """Padded (n, 64) zigzag grid, pw blocks wide → (wb·hb, 64) int64
+    array of DEQUANTIZED natural-order coefficients over the real
+    blocks, raster order. DQT stores zigzag order, so coefficient k
+    dequantizes with quant[k] and lands at natural index
+    ZIGZAG_NAT[k]."""
+    z = grid.reshape(-1, pw, 64)[:hb, :wb].reshape(-1, 64)
+    return (z * quant).take(_NAT_ZIGZAG, axis=1)
+
+
+def _decode_dct(f: _Frame | None):
+    """The one Huffman-DCT decode of a walked SOF0 or SOF2 frame →
+    (w, h, [per-component (n_real_blocks, 64) dequantized natural-order
+    coefficients], [(h_c, v_c), ...]) or None.
+
+    Geometry per A.2.3: an MCU covers 8·h_max × 8·v_max pixels; an
+    interleaved scan walks MCUs of h_c×v_c blocks per component (raster
+    order) into each component's PADDED grid, mcux·h_c blocks wide; a
+    non-interleaved scan walks its component's real block raster,
+    ceil(ceil(dim·factor / max factor) / 8) blocks per axis (A.1.1).
+    A sequential frame is exactly one scan of every component (its Ss,
+    Se, Ah and Al bytes are not read). A progressive scan must keep the
+    script rules: band bounds, Ah = Al + 1 on refinement, DC and AC
+    never in one scan, DC before AC per component, interleaved scans
+    DC-only. At each restart marker the DC predictors reset, and an EOB
+    run may not cross it; the segment count must match the interval.
+    A frame with more blocks than its entropy data has bits is refused
+    before any grid is built."""
+    if f is None or f.kind == _SOF3 or any(q is None for q, _, _ in f.comps):
         return None
-    return res[0], res[1], res[2]
-
-
-def decode_jpeg_dc_planes_hv(
-    b: bytes,
-) -> tuple[int, int, list[np.ndarray], list[tuple[int, int]]] | None:
-    """bytes → (w, h, planes, hv) — hv is the per-component
-    (h_c, v_c) sampling-factor list (r9, threaded to the RGB
-    upsample so the index map never guesses the factor) — for a
-    1- or 3-component baseline JFIF
-    whose scan is DC-only, with GENERAL per-component sampling
-    factors h, v ∈ 1..4 (4:4:4, 4:2:0, 4:2:2, 4:4:0, 4:1:1) and DRI
-    restart intervals (r6). MCU geometry per JPEG A.2.3: an MCU covers
-    8·h_max × 8·v_max pixels and carries v_c×h_c blocks of component
-    c in raster order; component c's native dimensions are
-    ceil(w·h_c/h_max) × ceil(h·v_c/v_max) (A.1.1) and planes[c] is
-    that native-resolution uint8 array (padding blocks decoded, then
-    trimmed — chroma stats stay exact in the subsampled domain, no
-    upsampling filter is ever invented). At each restart marker the
-    DC predictors reset and the bitstream re-aligns; the segment
-    count and RSTn sequence numbers are validated, a mismatch →
-    None. Any nonzero AC or non-baseline profile → None (honest
-    refusal, never an approximate IDCT)."""
-    parsed = _parse_segments_multi(b)
-    if parsed is None:
+    seq = f.kind == _SOF0
+    if seq and (len(f.scans) != 1 or len(f.scans[0][0]) != len(f.comps)):
         return None
-    comps, (w_, h), segments, ri = parsed
-    if any(q[0] % 8 for q, _, _, _, _ in comps):
-        return None  # exact-pixel contract requires q0 ≡ 0 (mod 8)
-    hmax = max(hc for _, _, _, hc, _ in comps)
-    vmax = max(vc for _, _, _, _, vc in comps)
-    mcux = -(-w_ // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    total = mcux * mcuy
-    if len(segments) != (1 if ri == 0 else -(-total // ri)):
-        return None
-    padded = [
-        np.empty((mcuy * vc * 8, mcux * hc * 8), dtype=np.uint8)
-        for _, _, _, hc, vc in comps
-    ]
-    preds = [0] * len(comps)
-    r = _BitReader(segments[0])
-    seg = 0
-    for mcu in range(total):
-        if ri and mcu and mcu % ri == 0:
-            seg += 1
-            r = _BitReader(segments[seg])
-            preds = [0] * len(comps)
-        my, mx = divmod(mcu, mcux)
-        for c, (quant, dc_tab, ac_tab, hc, vc) in enumerate(comps):
-            for dy in range(vc):
-                for dx in range(hc):
+    n = len(f.comps)
+    hv = [(hc, vc) for _, hc, vc in f.comps]
+    hmax = max(hc for hc, _ in hv)
+    vmax = max(vc for _, vc in hv)
+    mcux = -(-f.w // (8 * hmax))
+    mcuy = -(-f.h // (8 * vmax))
+    pw = [mcux * hc for hc, _ in hv]
+    sizes = _native_sizes(f.w, f.h, hv)
+    wb = [-(-cw // 8) for cw, _ in sizes]
+    hb = [-(-ch // 8) for _, ch in sizes]
+    nbits = 8 * sum(len(s) for scan in f.scans for s in scan[5])
+    if mcux * mcuy * sum(hc * vc for hc, vc in hv) > nbits:
+        return None  # every block costs at least one bit
+    grids = [np.zeros((mcuy * vc * pw[c], 64), np.int64) for c, (_, vc) in enumerate(hv)]
+    # flat views the block decoders index like lists, with Python ints
+    flat = [memoryview(g.reshape(-1)) for g in grids]
+    dc_done = [False] * n
+    for comp_tabs, ss, se, ah, al, segments, ri in f.scans:
+        if seq:
+            ss, se, ah, al = 0, 63, 0, 0
+        elif (
+            not (0 <= ss <= se <= 63)
+            or al > 13
+            or (ah and ah != al + 1)
+            or (ss == 0 and se)  # DC and AC never share a progressive scan
+            # G.1.1.1.1: an AC scan has one component, after its DC scan
+            or (ss and (len(comp_tabs) > 1 or not dc_done[comp_tabs[0][0]]))
+        ):
+            return None
+        for _, dc_tab, ac_tab in comp_tabs:
+            if (dc_tab is None and ss == 0 and ah == 0) or (
+                ac_tab is None and (seq or ss)
+            ):
+                return None  # a table the scan reads is undefined
+        # units of one MCU: (component, tables, grid rows per MCU row,
+        # grid columns per MCU column, block offset inside the MCU)
+        if len(comp_tabs) > 1:
+            across, down = mcux, mcuy
+            units = [
+                (c, dc_tab, ac_tab, vc * pw[c], hc, dy * pw[c] + dx)
+                for c, dc_tab, ac_tab in comp_tabs
+                for hc, vc in (hv[c],)
+                for dy in range(vc)
+                for dx in range(hc)
+            ]
+        else:
+            c, dc_tab, ac_tab = comp_tabs[0]
+            across, down = wb[c], hb[c]
+            units = [(c, dc_tab, ac_tab, pw[c], 1, 0)]
+        total = across * down
+        if len(segments) != (1 if ri == 0 else -(-total // ri)):
+            return None
+        preds = [0] * n
+        eobrun = 0
+        r = _BitReader(segments[0])
+        seg = 0
+        for m in range(total):
+            if ri and m and m % ri == 0:
+                if eobrun:
+                    return None  # EOB runs must not cross restarts
+                seg += 1
+                r = _BitReader(segments[seg])
+                preds = [0] * n
+            my, mx = divmod(m, across)
+            for c, dc_tab, ac_tab, ystep, xstep, off in units:
+                bi = 64 * (my * ystep + mx * xstep + off)
+                row = flat[c][bi : bi + 64]
+                if ss == 0 and ah == 0:  # DC first
                     diff = _read_dc_diff(r, dc_tab)
                     if diff is None:
                         return None
                     preds[c] += diff
-                    rs = _read_huff(r, ac_tab)
-                    if rs is None or rs != 0x00:
-                        return None  # nonzero AC: outside the exact profile
-                    px = preds[c] * quant[0] // 8 + 128
-                    if not 0 <= px <= 255:
+                    row[0] = preds[c] << al
+                    if seq and _dec_ac_first(r, row, ac_tab, 1, 63, 0, 0) != 0:
+                        return None  # corrupt, or an EOB run in a sequential scan
+                elif ss == 0:  # DC refine: raw bit ORed at two's complement
+                    bit = r.bit()
+                    if bit is None:
                         return None
-                    y0, x0 = (my * vc + dy) * 8, (mx * hc + dx) * 8
-                    padded[c][y0 : y0 + 8, x0 : x0 + 8] = px
+                    if bit:
+                        row[0] |= 1 << al
+                elif ah == 0:
+                    eobrun = _dec_ac_first(r, row, ac_tab, ss, se, al, eobrun)
+                else:
+                    eobrun = _dec_ac_refine(r, row, ac_tab, ss, se, al, eobrun)
+                if eobrun is None:
+                    return None
+        if ss == 0:
+            for c, _, _ in comp_tabs:
+                dc_done[c] = True
+    arrs = [
+        _real_blocks(grids[c], quant, pw[c], wb[c], hb[c])
+        for c, (quant, _, _) in enumerate(f.comps)
+    ]
+    return f.w, f.h, arrs, hv
+
+
+# ---------------------------------------------------------------------------
+# Step 3: the views
+# ---------------------------------------------------------------------------
+
+
+def _view(b: bytes, kinds: tuple, ncomp: int):
+    """Walk and decode ``b`` once → the :func:`_decode_dct` tuple, or
+    None unless the frame is one of ``kinds`` with ``ncomp`` components."""
+    f = _walk(b)
+    if f is None or f.kind not in kinds or len(f.comps) != ncomp:
+        return None
+    return _decode_dct(f)
+
+
+def _planes(
+    w: int, h: int, arrs: list[np.ndarray], hv: list[tuple[int, int]]
+) -> list[np.ndarray]:
+    """The pixel view: every component's real blocks through the pinned
+    fixed-point IDCT (one call for all of them), as uint8 planes
+    trimmed to their native sampled size (:func:`_native_sizes`); no
+    upsampling filter invented."""
+    px = idct8_fixed(np.concatenate(arrs))
     planes = []
-    for (_, _, _, hc, vc), arr in zip(comps, padded):
-        wc = -(-(w_ * hc) // hmax)
-        hcp = -(-(h * vc) // vmax)
-        planes.append(arr[:hcp, :wc])
-    return w_, h, planes, [(hc, vc) for _, _, _, hc, vc in comps]
+    for cw, ch in _native_sizes(w, h, hv):
+        wb, hb = -(-cw // 8), -(-ch // 8)
+        img = px[: wb * hb].reshape(hb, wb, 8, 8).transpose(0, 2, 1, 3)
+        planes.append(img.reshape(hb * 8, wb * 8)[:ch, :cw].astype(np.uint8))
+        px = px[wb * hb :]
+    return planes
 
 
-def _decode_sequential_multi(b: bytes):
-    """Full baseline SEQUENTIAL decode of a 1- or 3-component
-    interleaved scan with the COMPLETE AC grammar (r7 — until now the
-    multi-component sequential path was DC-only, leaving the single
-    most common real-world JPEG shape, AC-bearing 4:2:0 baseline,
-    undecodable): general sampling factors, DRI restart intervals,
-    per-component quant/Huffman tables. Returns (comps, (w, h),
-    grids, pw, wb, hb) with grids[c] an (pw·ph, 64) int64 array of
-    DEQUANTIZED natural-order coefficients over the PADDED grid —
-    the same contract as ``_decode_progressive``, so the dequant/
-    trim/IDCT machinery is shared."""
-    parsed = _parse_segments_multi(b)
-    if parsed is None:
-        return None
-    comps, (w_, h), segments, ri = parsed
-    hmax = max(hc for _, _, _, hc, _ in comps)
-    vmax = max(vc for _, _, _, _, vc in comps)
-    mcux = -(-w_ // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    total = mcux * mcuy
-    if len(segments) != (1 if ri == 0 else -(-total // ri)):
-        return None
-    pw = [mcux * hc for _, _, _, hc, _ in comps]
-    ph = [mcuy * vc for _, _, _, _, vc in comps]
-    wb = [-(-(-(-(w_ * hc) // hmax)) // 8) for _, _, _, hc, _ in comps]
-    hb = [-(-(-(-(h * vc) // vmax)) // 8) for _, _, _, _, vc in comps]
-    grids = [
-        np.zeros((pw[c] * ph[c], 64), dtype=np.int64) for c in range(len(comps))
-    ]
-    preds = [0] * len(comps)
-    r = _BitReader(segments[0])
-    seg = 0
-    for mcu in range(total):
-        if ri and mcu and mcu % ri == 0:
-            seg += 1
-            r = _BitReader(segments[seg])
-            preds = [0] * len(comps)
-        my, mx = divmod(mcu, mcux)
-        for c, (quant, dc_tab, ac_tab, hc, vc) in enumerate(comps):
-            for dy in range(vc):
-                for dx in range(hc):
-                    diff = _read_dc_diff(r, dc_tab)
-                    if diff is None:
-                        return None
-                    preds[c] += diff
-                    row = grids[c][(my * vc + dy) * pw[c] + (mx * hc + dx)]
-                    row[0] = preds[c] * quant[0]
-                    k = 1
-                    while k < 64:  # the decode_jpeg_coeffs AC grammar
-                        rs = _read_huff(r, ac_tab)
-                        if rs is None:
-                            return None
-                        if rs == 0x00:
-                            break
-                        run, size = rs >> 4, rs & 0x0F
-                        if size == 0:
-                            if run != 15:
-                                return None
-                            k += 16
-                            if k >= 64:
-                                return None
-                            continue
-                        k += run
-                        if k > 63:
-                            return None
-                        bits_v = r.take(size)
-                        if bits_v is None:
-                            return None
-                        val = (
-                            bits_v
-                            if bits_v >= (1 << (size - 1))
-                            else bits_v - (1 << size) + 1
-                        )
-                        row[ZIGZAG_NAT[k]] = val * quant[k]
-                        k += 1
-    return comps, (w_, h), grids, pw, wb, hb
+def decode_jpeg_coeffs(b: bytes) -> tuple[int, int, np.ndarray] | None:
+    """Single-component SEQUENTIAL coefficient view: bytes → (width,
+    height, coeffs), coeffs an (n_blocks, 64) int64 array of exact
+    DEQUANTIZED pre-IDCT coefficients in natural (row-major) order,
+    blocks in raster order. The complete AC grammar (ZRL, EOB, the
+    implicit block end after k=63), DRI restarts and 16-bit DQTs are
+    honored; there is no DC-only or q0 restriction, because
+    dequantization is exact integer multiplication."""
+    d = _view(b, (_SOF0,), 1)
+    return None if d is None else (d[0], d[1], d[2][0])
 
 
-def _trim_real_blocks(grid: np.ndarray, pw_c: int, wb_c: int, hb_c: int) -> np.ndarray:
-    """Padded (pw·ph, 64) grid → (wb·hb, 64) over the REAL blocks."""
-    rows = [by * pw_c + bx for by in range(hb_c) for bx in range(wb_c)]
-    return grid[rows]
+def decode_jpeg_coeffs_prog(b: bytes) -> tuple[int, int, np.ndarray] | None:
+    """Progressive twin of :func:`decode_jpeg_coeffs` for a
+    single-component SOF2 stream."""
+    d = _view(b, (_SOF2,), 1)
+    return None if d is None else (d[0], d[1], d[2][0])
 
 
 def decode_jpeg_seq_coeffs_multi(
     b: bytes,
 ) -> tuple[int, int, list[np.ndarray]] | None:
-    """Sequential multi-component twin of
-    :func:`decode_jpeg_coeffs_prog3`: (w, h, [per-component
-    (n_real_blocks, 64) dequantized coefficient arrays])."""
-    res = _decode_sequential_multi(b)
-    if res is None:
-        return None
-    comps, (w_, h), grids, pw, wb, hb = res
-    if len(comps) != 3:
-        return None
-    return w_, h, [
-        _trim_real_blocks(grids[c], pw[c], wb[c], hb[c]) for c in range(3)
-    ]
+    """3-component SEQUENTIAL coefficient view: (w, h, [per-component
+    (n_real_blocks, 64) dequantized coefficient arrays]) over each
+    component's real block grid — subsampled chroma keeps its native
+    resolution."""
+    d = _view(b, (_SOF0,), 3)
+    return None if d is None else d[:3]
+
+
+def decode_jpeg_coeffs_prog3(
+    b: bytes,
+) -> tuple[int, int, list[np.ndarray]] | None:
+    """Progressive twin of :func:`decode_jpeg_seq_coeffs_multi`."""
+    d = _view(b, (_SOF2,), 3)
+    return None if d is None else d[:3]
+
+
+def decode_jpeg_pixels(b: bytes) -> np.ndarray | None:
+    """Single-component PIXEL view, sequential or progressive: the
+    coefficients through the fixed-point integer IDCT → (h, w) uint8
+    image, or None."""
+    d = _view(b, (_SOF0, _SOF2), 1)
+    return None if d is None else _planes(*d)[0]
 
 
 def decode_jpeg_pixels_seq_multi(
     b: bytes,
 ) -> tuple[int, int, list[np.ndarray]] | None:
-    """Sequential multi-component PIXEL decode (r7): each plane
-    through the fixed-point IDCT at its native sampled resolution —
-    the same contract as :func:`decode_jpeg_pixels_prog3`."""
-    m = _multi3_from_seq(_decode_sequential_multi(b))
-    if m is None:
+    """3-component SEQUENTIAL pixel view: (w, h, [per-component uint8
+    planes at their native sampled resolution]). Full-resolution RGB
+    is :func:`decode_jpeg_rgb`."""
+    d = _view(b, (_SOF0,), 3)
+    return None if d is None else (d[0], d[1], _planes(*d))
+
+
+def decode_jpeg_pixels_prog3(
+    b: bytes,
+) -> tuple[int, int, list[np.ndarray]] | None:
+    """Progressive twin of :func:`decode_jpeg_pixels_seq_multi`."""
+    d = _view(b, (_SOF2,), 3)
+    return None if d is None else (d[0], d[1], _planes(*d))
+
+
+def _dc_planes(b: bytes, ncomp: int | None = None):
+    """The DC-only profile of a SEQUENTIAL stream with ``ncomp``
+    components (1 or 3 when None): (w, h, planes, hv), planes[c] the
+    native-resolution uint8 plane of component c and hv its (h_c, v_c)
+    sampling factors, for any legal sampling (4:4:4, 4:2:0, 4:2:2,
+    4:4:0, 4:1:1) and DRI. It is the pixel view restricted to streams
+    whose blocks are all flat: every q0 ≡ 0 (mod 8), every AC
+    coefficient zero and every dc/8 + 128 in 0..255 — exactly what the
+    IDCT gives such a block, so the blocks are tiled without it.
+    Anything else → None (the full pixel views serve it)."""
+    f = _walk(b)
+    if (
+        f is None
+        or f.kind != _SOF0
+        or ncomp not in (None, len(f.comps))
+        or any(q is None or q[0] % 8 for q, _, _ in f.comps)
+    ):
         return None
-    w_, h, _, planes, _hv = m
-    return w_, h, planes
+    d = _decode_dct(f)
+    if d is None:
+        return None
+    w, h, arrs, hv = d
+    planes = []
+    for a, (cw, ch) in zip(arrs, _native_sizes(w, h, hv)):
+        # Python ints: cheaper than numpy ufuncs on the few blocks of a
+        # typical frame; dc/8 + 128 in 0..255 ⇔ dc in -1024..1016
+        dc = a[:, 0].tolist()
+        if np.count_nonzero(a[:, 1:]) or min(dc) < -1024 or max(dc) > 1016:
+            return None
+        px = np.array([v // 8 + 128 for v in dc], np.uint8)
+        px = px.reshape(-(-ch // 8), -(-cw // 8)).repeat(8, 0).repeat(8, 1)
+        planes.append(px[:ch, :cw])
+    return w, h, planes, hv
+
+
+def decode_jpeg_dc_planes_hv(
+    b: bytes,
+) -> tuple[int, int, list[np.ndarray], list[tuple[int, int]]] | None:
+    """(w, h, planes, hv) of a 1- or 3-component stream in the DC-only
+    profile (see :func:`_dc_planes`), or None."""
+    return _dc_planes(b)
+
+
+def decode_jpeg_dc_planes(b: bytes) -> tuple[int, int, list[np.ndarray]] | None:
+    """:func:`decode_jpeg_dc_planes_hv` without the sampling factors."""
+    d = _dc_planes(b)
+    return None if d is None else d[:3]
+
+
+def decode_jpeg_dc(b: bytes) -> np.ndarray | None:
+    """bytes → (h, w) uint8 grayscale array for a single-component
+    baseline stream in the DC-only profile (see :func:`_dc_planes`),
+    or None — AC-bearing scans are served by
+    :func:`decode_jpeg_pixels`, never approximated here."""
+    d = _dc_planes(b, 1)
+    return None if d is None else d[2][0]
 
 
 def decode_jpeg_dc3(b: bytes) -> np.ndarray | None:
     """bytes → (h, w, 3) uint8 YCbCr planes for a 3-component 4:4:4
-    baseline JFIF whose scan is DC-only (r5): interleaved MCUs,
-    SEPARATE DC predictors and per-component quant/Huffman tables
-    resolved from the headers. Since r6 a thin stacking wrapper over
-    :func:`decode_jpeg_dc_planes`; subsampled files (planes of
-    different shapes) keep returning None from THIS function — they
-    are served natively by the planes path instead."""
-    res = decode_jpeg_dc_planes(b)
-    if res is None:
+    stream in the DC-only profile; subsampled streams (planes of
+    different shapes) return None here and are served by
+    :func:`decode_jpeg_dc_planes`."""
+    d = _dc_planes(b, 3)
+    if d is None:
         return None
-    w_, h, planes = res
-    if len(planes) != 3 or any(p.shape != (h, w_) for p in planes):
+    w, h, planes, _ = d
+    if any(p.shape != (h, w) for p in planes):
         return None
     return np.stack(planes, axis=-1)
 
 
-def decode_jpeg_coeffs(b: bytes) -> tuple[int, int, np.ndarray] | None:
-    """Full baseline entropy decode in the exact COEFFICIENT domain
-    (r5): bytes → (width, height, coeffs) where coeffs is an
-    (n_blocks, 64) int64 array of DEQUANTIZED pre-IDCT coefficients
-    in natural (row-major) order, blocks in scan order. Handles the
-    complete AC run/size grammar — ZRL (16-zero runs), EOB, and the
-    implicit block end after a coefficient at k=63. Only
-    non-baseline/multi-component/DRI profiles are refused (via
-    ``_parse_segments``); unlike the pixel path there is NO DC-only
-    restriction and no q0 % 8 requirement, because dequantization is
-    exact integer multiplication and the float IDCT is never run.
-    Coefficient k (zigzag) dequantizes with quant[k] (DQT stores
-    zigzag order) and lands at natural index ZIGZAG_NAT[k]. DRI
-    restart intervals are honored (r6): predictor resets + bitstream
-    re-alignment at each validated RSTn."""
-    parsed = _parse_segments(b)
-    if parsed is None:
-        return None
-    quant, (w_, h), dc_tab, ac_tab, segments, ri = parsed
-    bw, bh = (w_ + 7) // 8, (h + 7) // 8
-    if len(segments) != (1 if ri == 0 else -(-(bw * bh) // ri)):
-        return None
-    r = _BitReader(segments[0])
-    seg = 0
-    out = np.zeros((bw * bh, 64), dtype=np.int64)
-    pred = 0
-    for bi in range(bw * bh):
-        if ri and bi and bi % ri == 0:
-            seg += 1
-            r = _BitReader(segments[seg])
-            pred = 0
-        diff = _read_dc_diff(r, dc_tab)
-        if diff is None:
-            return None
-        pred += diff
-        out[bi, 0] = pred * quant[0]
-        k = 1
-        while k < 64:
-            rs = _read_huff(r, ac_tab)
-            if rs is None:
-                return None
-            if rs == 0x00:  # EOB: rest of the block is zero
-                break
-            run, size = rs >> 4, rs & 0x0F
-            if size == 0:
-                if run != 15:
-                    return None  # only ZRL has size 0
-                k += 16
-                if k >= 64:
-                    return None  # ZRL must leave room for a coefficient
-                continue
-            k += run
-            if k > 63:
-                return None
-            bits_v = r.take(size)
-            if bits_v is None:
-                return None
-            val = bits_v if bits_v >= (1 << (size - 1)) else bits_v - (1 << size) + 1
-            out[bi, ZIGZAG_NAT[k]] = val * quant[k]
-            k += 1
-    return w_, h, out
-
-
 # ---------------------------------------------------------------------------
-# Progressive JPEG (SOF2) — exact coefficient-domain decode (r6)
+# Progressive JPEG (SOF2) synthesis
 # ---------------------------------------------------------------------------
 #
-# Spectral selection + successive approximation per ITU T.81 Annex G,
-# single-component scans. The point transforms differ by coefficient
-# kind and the decoder must honor both exactly: DC uses an ARITHMETIC
-# shift of the signed value (G.1.2.1 — so refinement bits OR into the
-# two's-complement representation), while AC shifts the MAGNITUDE and
-# reapplies the sign (G.1.2.2 — so a refinement correction bit moves
-# the value AWAY from zero). AC first scans code end-of-band runs
-# (EOBn: run/size symbols with size 0 and run < 15, run extension
-# bits, spanning up to 2^14 blocks); AC refinement scans interleave
-# one correction bit for every already-nonzero coefficient passed
-# while positioning newly-nonzero ±1·2^Al coefficients, and defer the
-# correction bits of EOB-run blocks until the next EOBn emission.
-# Everything decodes to the same exact integer coefficient domain as
-# the sequential path — the float IDCT is still never run.
+# The encoders below emit the four Annex G scan kinds the decoder
+# replays (see the Step 2 comment): DC first and refine, AC first
+# with EOBn runs, and AC refine with deferred correction bits.
 
 #: canonical Huffman table for the synthesized progressive AC scans:
 #: every symbol the encoder can emit — EOBn (r<<4 for r 0..14), ZRL
@@ -1612,512 +1682,6 @@ def make_jpeg_prog_420(asset_id: int) -> bytes:
     return bytes(out)
 
 
-def _split_entropy_scan(b: bytes, start: int):
-    """Progressive twin of :func:`_split_entropy`: collect one scan's
-    entropy region from ``start``, unstuffing 0xFF00 and splitting at
-    validated RSTn markers, but STOP at the first other marker (the
-    next scan's DHT/SOS, or EOI) instead of requiring EOI — returns
-    (segments, marker_pos) or None on corruption/truncation."""
-    segs: list[bytes] = []
-    cur = bytearray()
-    expect_rst = 0
-    pos = start
-    n = len(b)
-    while pos < n:
-        c = b[pos]
-        if c != 0xFF:
-            cur.append(c)
-            pos += 1
-            continue
-        if pos + 1 >= n:
-            return None
-        m = b[pos + 1]
-        if m == 0x00:
-            cur.append(0xFF)
-            pos += 2
-        elif 0xD0 <= m <= 0xD7:
-            if m - 0xD0 != expect_rst:
-                return None
-            expect_rst = (expect_rst + 1) % 8
-            segs.append(bytes(cur))
-            cur = bytearray()
-            pos += 2
-        else:
-            segs.append(bytes(cur))
-            return segs, pos
-    return None
-
-
-def _parse_progressive(b: bytes):
-    """Marker walk for a PROGRESSIVE (SOF2) JFIF, 1 or 3 components
-    (r6): unlike the sequential walk, SOS repeats — each scan's
-    parameters (component list, Ss, Se, Ah, Al), table snapshot,
-    restart interval, and entropy segments are collected in order,
-    and DQT/DHT/DRI segments may appear BETWEEN scans (tables are
-    resolved at scan time, the way real progressive encoders
-    redefine them). Returns (comps, (w, h), scans) with comps =
-    [(quant_ints, h_c, v_c), ...] in SOF order and scans =
-    [(comp_tabs, ss, se, ah, al, segments, ri), ...] where comp_tabs
-    = [(comp_index, dc_tab, ac_tab), ...] in scan order. Refuses
-    undefined DQT precisions, illegal sampling factors, and
-    interleaved scans that are not DC-only (G.1: AC scans are always
-    single-component)."""
-    if len(b) < 4 or b[:2] != b"\xff\xd8":
-        return None
-    pos = 2
-    quants: dict[int, tuple] = {}
-    huff: dict[tuple[int, int], dict] = {}
-    sof = None
-    sof_comps: list[tuple[int, int, int, int]] = []  # (cid, tq, hc, vc)
-    restart_interval = 0
-    scans = []
-    while pos + 2 <= len(b):
-        if b[pos] != 0xFF:
-            return None
-        # T.81 B.1.1.2: any number of 0xFF fill bytes may precede a
-        # marker — skip them (r10, r9 ADVICE: DNG-embedded SOF3 and
-        # some hardware encoders pad with fills; refusing them lost
-        # spec-valid files)
-        while pos + 2 < len(b) and b[pos + 1] == 0xFF:
-            pos += 1
-        marker = b[pos + 1]
-        if marker == 0xD9:  # EOI
-            if sof is None or not scans:
-                return None
-            comps = []
-            for _cid, tq, hc, vc in sof_comps:
-                if tq not in quants:
-                    return None
-                comps.append((quants[tq], hc, vc))
-            return comps, sof, scans
-        if pos + 4 > len(b):
-            return None
-        (seglen,) = struct.unpack(">H", b[pos + 2 : pos + 4])
-        body = b[pos + 4 : pos + 2 + seglen]
-        if len(body) != seglen - 2:
-            return None
-        if marker == 0xDB:
-            p = 0
-            while p < len(body):
-                pq = body[p] >> 4
-                tid = body[p] & 0x0F
-                if pq == 0:
-                    if p + 65 > len(body):
-                        return None
-                    quants[tid] = tuple(body[p + 1 : p + 65])
-                    p += 65
-                elif pq == 1:
-                    if p + 129 > len(body):
-                        return None
-                    quants[tid] = struct.unpack(">64H", body[p + 1 : p + 129])
-                    p += 129
-                else:
-                    return None
-        elif marker == 0xC2:
-            if len(body) < 6:
-                return None
-            prec, h, w_, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8 or ncomp not in (1, 3):
-                return None
-            if len(body) < 6 + 3 * ncomp:
-                return None
-            sof_comps = []
-            for ci in range(ncomp):
-                cid, samp, tq = body[6 + 3 * ci : 9 + 3 * ci]
-                hc, vc = samp >> 4, samp & 0x0F
-                if ncomp == 1:
-                    hc = vc = 1  # single component is non-interleaved
-                if not (1 <= hc <= 4 and 1 <= vc <= 4):
-                    return None
-                sof_comps.append((cid, tq, hc, vc))
-            sof = (w_, h)
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7):
-            return None  # not progressive (or non-baseline): not ours
-        elif marker == 0xDD:
-            if len(body) != 2:
-                return None
-            (restart_interval,) = struct.unpack(">H", body)
-        elif marker == 0xC4:
-            p = 0
-            while p < len(body):
-                tclass, tid = body[p] >> 4, body[p] & 0x0F
-                bits = list(body[p + 1 : p + 17])
-                if len(bits) != 16:
-                    return None
-                nv = sum(bits)
-                if p + 17 + nv > len(body):
-                    return None
-                huff[(tclass, tid)] = _build_decode_table(
-                    bits, list(body[p + 17 : p + 17 + nv])
-                )
-                p += 17 + nv
-        elif marker == 0xDA:
-            if sof is None or len(body) < 1:
-                return None
-            ns = body[0]
-            if len(body) != 4 + 2 * ns or not 1 <= ns <= len(sof_comps):
-                return None
-            ss, se, ahal = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0x0F
-            if ns > 1:
-                if ss != 0 or se != 0:
-                    return None  # interleaved AC scans are illegal (G.1)
-                if sum(hc * vc for _, _, hc, vc in sof_comps) > 10:
-                    return None
-            cid_index = {cid: i for i, (cid, _, _, _) in enumerate(sof_comps)}
-            comp_tabs = []
-            for si in range(ns):
-                cid = body[1 + 2 * si]
-                tt = body[2 + 2 * si]
-                if cid not in cid_index:
-                    return None
-                # table presence is only required where the scan reads
-                # it: DC refinement is raw bits, AC never touches DC
-                dc_tab = huff.get((0, tt >> 4))
-                ac_tab = huff.get((1, tt & 0x0F))
-                if ss == 0 and ah == 0 and dc_tab is None:
-                    return None
-                if ss > 0 and ac_tab is None:
-                    return None
-                comp_tabs.append((cid_index[cid], dc_tab, ac_tab))
-            split = _split_entropy_scan(b, pos + 2 + seglen)
-            if split is None:
-                return None
-            segments, nxt = split
-            scans.append(
-                (comp_tabs, ss, se, ah, al, segments, restart_interval)
-            )
-            pos = nxt
-            continue
-        pos += 2 + seglen
-    return None
-
-
-def _dec_ac_first(r, row, ac_tab, ss, se, al, eobrun):
-    """One block of an AC first scan; returns the updated EOB run or
-    None on corruption."""
-    if eobrun:
-        return eobrun - 1
-    k = ss
-    while k <= se:
-        rs = _read_huff(r, ac_tab)
-        if rs is None:
-            return None
-        run, size = rs >> 4, rs & 0x0F
-        if size == 0:
-            if run == 15:
-                k += 16
-                continue
-            bits_v = r.take(run)  # extension bits, MSB first
-            if bits_v is None:
-                return None
-            # the run includes the current block
-            return (1 << run) + bits_v - 1
-        k += run
-        if k > se:
-            return None
-        bits_v = r.take(size)
-        if bits_v is None:
-            return None
-        val = bits_v if bits_v >= (1 << (size - 1)) else bits_v - (1 << size) + 1
-        row[k] = val << al
-        k += 1
-    return 0
-
-
-def _dec_ac_refine(r, row, ac_tab, ss, se, al, eobrun):
-    """One block of an AC refinement scan; returns the updated EOB
-    run or None on corruption."""
-    p1, m1 = 1 << al, -1 << al
-    k = ss
-    if eobrun == 0:
-        while k <= se:
-            rs = _read_huff(r, ac_tab)
-            if rs is None:
-                return None
-            run, size = rs >> 4, rs & 0x0F
-            newval = 0
-            if size == 0:
-                if run < 15:
-                    bits_v = 0
-                    for _ in range(run):
-                        bit = r.bit()
-                        if bit is None:
-                            return None
-                        bits_v = (bits_v << 1) | bit
-                    eobrun = (1 << run) + bits_v
-                    break  # → correction sweep below
-                # run == 15: ZRL — skip 16 zero-history coeffs
-            elif size == 1:
-                bit = r.bit()
-                if bit is None:
-                    return None
-                newval = p1 if bit else m1
-            else:
-                return None  # refinement sizes are 0 or 1 only
-            while k <= se:
-                if row[k] != 0:
-                    bit = r.bit()
-                    if bit is None:
-                        return None
-                    if bit and not (row[k] & p1):
-                        row[k] += p1 if row[k] >= 0 else m1
-                else:
-                    if run == 0:
-                        break
-                    run -= 1
-                k += 1
-            if newval:
-                if k > se:
-                    return None
-                row[k] = newval
-            # past the placed coefficient (or the 16th zero of a ZRL,
-            # where the advance loop stopped ON it)
-            k += 1
-    if eobrun > 0:
-        while k <= se:
-            if row[k] != 0:
-                bit = r.bit()
-                if bit is None:
-                    return None
-                if bit and not (row[k] & p1):
-                    row[k] += p1 if row[k] >= 0 else m1
-            k += 1
-        eobrun -= 1
-    return eobrun
-
-
-def _decode_progressive(b: bytes):
-    """Replay every scan of a 1- or 3-component SOF2 stream through
-    the four Annex G decoders. Geometry per A.2.3: interleaved
-    (multi-component, DC-only by G.1) scans walk MCUs carrying
-    h_c×v_c blocks per component into each component's PADDED grid
-    (mcux·h_c wide); non-interleaved scans walk the owning
-    component's ceil-dimension block raster. Returns (comps, (w, h),
-    grids, pw, wb, hb) with grids[c] the padded QUANTIZED
-    zigzag-indexed rows, pw[c] the padded width and wb/hb[c] the
-    real (non-padding) block dims, or None. Scan-script sanity is
-    enforced (band bounds, Ah = Al + 1, per-component DC-before-AC);
-    restart intervals are honored per scan with predictor AND
-    EOB-run resets; a nonzero EOB run crossing a restart boundary is
-    corruption → None."""
-    parsed = _parse_progressive(b)
-    if parsed is None:
-        return None
-    comps, (w_, h), scans = parsed
-    ncomp = len(comps)
-    hmax = max(hc for _, hc, _ in comps)
-    vmax = max(vc for _, _, vc in comps)
-    mcux = -(-w_ // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    pw = [mcux * hc for _, hc, _ in comps]
-    ph = [mcuy * vc for _, _, vc in comps]
-    # real block dims: ceil(component sample dims / 8), sample dims
-    # per A.1.1 = ceil(image dim · factor / max factor)
-    wb = [-(-(-(-(w_ * hc) // hmax)) // 8) for _, hc, _ in comps]
-    hb = [-(-(-(-(h * vc) // vmax)) // 8) for _, _, vc in comps]
-    grids = [
-        [[0] * 64 for _ in range(pw[c] * ph[c])] for c in range(ncomp)
-    ]
-    dc_done = [False] * ncomp
-    for comp_tabs, ss, se, ah, al, segments, ri in scans:
-        if not (0 <= ss <= se <= 63) or al > 13 or (ah and ah != al + 1):
-            return None
-        if ss == 0 and se != 0:
-            return None  # DC and AC never share a progressive scan
-        if ss > 0 and not dc_done[comp_tabs[0][0]]:
-            return None  # G.1.1.1.1: the DC scan precedes AC scans
-        interleaved = len(comp_tabs) > 1
-        if interleaved:
-            total = mcux * mcuy
-        else:
-            c0 = comp_tabs[0][0]
-            total = wb[c0] * hb[c0]
-        if len(segments) != (1 if ri == 0 else -(-total // ri)):
-            return None
-        preds = [0] * ncomp
-        eobrun = 0
-        r = _BitReader(segments[0])
-        seg = 0
-        for m in range(total):
-            if ri and m and m % ri == 0:
-                if eobrun:
-                    return None  # EOB runs must not cross restarts
-                seg += 1
-                r = _BitReader(segments[seg])
-                preds = [0] * ncomp
-            if interleaved:
-                my, mx = divmod(m, mcux)
-                units = [
-                    (c, dc_tab, (my * vc + dy) * pw[c] + (mx * hc + dx))
-                    for c, dc_tab, _ in comp_tabs
-                    for _, hc, vc in (comps[c],)
-                    for dy in range(vc)
-                    for dx in range(hc)
-                ]
-            else:
-                c0, dc_tab0, ac_tab0 = comp_tabs[0]
-                by, bx = divmod(m, wb[c0])
-                units = [(c0, dc_tab0, by * pw[c0] + bx)]
-            for c, dc_tab, bi in units:
-                row = grids[c][bi]
-                if ss == 0:
-                    if ah == 0:  # DC first
-                        diff = _read_dc_diff(r, dc_tab)
-                        if diff is None:
-                            return None
-                        preds[c] += diff
-                        row[0] = preds[c] << al
-                    else:  # DC refine: raw bit ORed at two's complement
-                        bit = r.bit()
-                        if bit is None:
-                            return None
-                        if bit:
-                            row[0] |= 1 << al
-                elif ah == 0:
-                    eobrun = _dec_ac_first(
-                        r, row, comp_tabs[0][2], ss, se, al, eobrun
-                    )
-                else:
-                    eobrun = _dec_ac_refine(
-                        r, row, comp_tabs[0][2], ss, se, al, eobrun
-                    )
-                if eobrun is None:
-                    return None
-        if ss == 0:
-            for c, _, _ in comp_tabs:
-                dc_done[c] = True
-    return comps, (w_, h), grids, pw, wb, hb
-
-
-def _dequant_grid(grid, quant, pw_c, wb_c, hb_c) -> np.ndarray:
-    """Padded quantized grid → (wb·hb, 64) dequantized natural-order
-    array over the REAL blocks only, raster order."""
-    out = np.zeros((wb_c * hb_c, 64), dtype=np.int64)
-    for by in range(hb_c):
-        for bx in range(wb_c):
-            row = grid[by * pw_c + bx]
-            o = out[by * wb_c + bx]
-            for k, v in enumerate(row):
-                if v:
-                    o[ZIGZAG_NAT[k]] = v * quant[k]
-    return out
-
-
-def decode_jpeg_coeffs_prog(b: bytes) -> tuple[int, int, np.ndarray] | None:
-    """Progressive twin of :func:`decode_jpeg_coeffs` (r6): bytes →
-    (width, height, coeffs) with coeffs an (n_blocks, 64) int64 array
-    of exact DEQUANTIZED pre-IDCT coefficients in natural order, for
-    a SINGLE-component SOF2 stream; 3-component streams are served by
-    :func:`decode_jpeg_coeffs_prog3`."""
-    res = _decode_progressive(b)
-    if res is None:
-        return None
-    comps, (w_, h), grids, pw, wb, hb = res
-    if len(comps) != 1:
-        return None
-    return w_, h, _dequant_grid(grids[0], comps[0][0], pw[0], wb[0], hb[0])
-
-
-def _planes3_from_coeffs(
-    arrs: list[np.ndarray],
-    hv: list[tuple[int, int]],
-    w_: int,
-    h: int,
-    wb: list[int],
-    hb: list[int],
-) -> list[np.ndarray]:
-    """[per-component (n_real_blocks, 64) DEQUANTIZED coefficients] →
-    native-resolution uint8 planes through the fixed-point IDCT —
-    the one shared pixel assembly both the progressive and the
-    sequential multi-component paths ride (r8: also lets
-    jpeg_full_stats derive coefficients AND pixels from a single
-    entropy decode instead of re-running it)."""
-    hmax = max(hc for hc, _ in hv)
-    vmax = max(vc for _, vc in hv)
-    planes = []
-    for c in range(3):
-        px = idct8_fixed(arrs[c])
-        img = px.reshape(hb[c], wb[c], 8, 8).transpose(0, 2, 1, 3)
-        img = img.reshape(hb[c] * 8, wb[c] * 8)
-        hc, vc = hv[c]
-        cw = -(-(w_ * hc) // hmax)
-        ch = -(-(h * vc) // vmax)
-        planes.append(img[:ch, :cw].astype(np.uint8))
-    return planes
-
-
-def _multi3_from_prog(res) -> tuple | None:
-    """_decode_progressive result → (w, h, coeff arrays, pixel
-    planes, hv sampling factors), all views from the ONE decoded
-    grid set (hv added r9 so the RGB upsample uses the true
-    factors, not a recovered ceil)."""
-    if res is None:
-        return None
-    comps, (w_, h), grids, pw, wb, hb = res
-    if len(comps) != 3:
-        return None
-    arrs = [
-        _dequant_grid(grids[c], comps[c][0], pw[c], wb[c], hb[c])
-        for c in range(3)
-    ]
-    hv = [(hc, vc) for _, hc, vc in comps]
-    return w_, h, arrs, _planes3_from_coeffs(arrs, hv, w_, h, wb, hb), hv
-
-
-def _multi3_from_seq(res) -> tuple | None:
-    """_decode_sequential_multi result → the same dual view + hv."""
-    if res is None:
-        return None
-    comps, (w_, h), grids, pw, wb, hb = res
-    if len(comps) != 3:
-        return None
-    arrs = [
-        _trim_real_blocks(grids[c], pw[c], wb[c], hb[c]) for c in range(3)
-    ]
-    hv = [(hc, vc) for *_, hc, vc in comps]
-    return w_, h, arrs, _planes3_from_coeffs(arrs, hv, w_, h, wb, hb), hv
-
-
-def decode_jpeg_pixels_prog3(
-    b: bytes,
-) -> tuple[int, int, list[np.ndarray]] | None:
-    """PIXEL decode of a 3-component progressive stream (r7): each
-    component's real (non-padding) block grid runs through the pinned
-    fixed-point integer IDCT and is returned at its NATIVE sampled
-    resolution — (w, h, [per-component (ch, cw) uint8 planes]).
-    Full-resolution RGB is served separately by the pinned integer
-    nearest-neighbor upsample + Rec.601 path (:func:`planes3_to_rgb`,
-    r8). This closes the last
-    pixel refusal: every profile the coefficient decoders accept now
-    has an exact, oracle-replayable pixel path."""
-    m = _multi3_from_prog(_decode_progressive(b))
-    if m is None:
-        return None
-    w_, h, _, planes, _hv = m
-    return w_, h, planes
-
-
-def decode_jpeg_coeffs_prog3(
-    b: bytes,
-) -> tuple[int, int, list[np.ndarray]] | None:
-    """3-component progressive decode (r6): bytes → (width, height,
-    [per-component (n_blocks_c, 64) dequantized coefficient arrays])
-    over each component's REAL (non-padding) block grid — subsampled
-    chroma keeps its native resolution, consistent with the baseline
-    planes path."""
-    res = _decode_progressive(b)
-    if res is None:
-        return None
-    comps, (w_, h), grids, pw, wb, hb = res
-    if len(comps) != 3:
-        return None
-    return w_, h, [
-        _dequant_grid(grids[c], comps[c][0], pw[c], wb[c], hb[c])
-        for c in range(3)
-    ]
-
-
 # ---------------------------------------------------------------------------
 # Fixed-point integer IDCT — the exact pixel path for AC-bearing scans (r7)
 # ---------------------------------------------------------------------------
@@ -2165,31 +1729,13 @@ def idct8_fixed(coefs: np.ndarray) -> np.ndarray:
     """(n, 64) natural-order DEQUANTIZED int64 coefficients →
     (n, 8, 8) int64 pixels in [0, 255] via the pinned fixed-point
     IDCT spec above. Natural index = 8·v + u (v vertical / row
-    frequency, u horizontal / column), so the einsum reads
-    F[v][u]·B[u][x]·B[v][y] exactly as specified."""
+    frequency, u horizontal / column). The sum is taken as two exact
+    int64 matrix products — rows, Σ_u F[v][u]·B[u][x], then columns,
+    Σ_v B[v][y]·(row pass)[v][x] — which is the specified
+    Σ_u Σ_v F[v][u]·B[u][x]·B[v][y] term for term."""
     c = coefs.reshape(-1, 8, 8)
-    acc = np.einsum("nvu,ux,vy->nyx", c, _IDCT_B_NP, _IDCT_B_NP)
+    acc = _IDCT_B_NP.T @ (c @ _IDCT_B_NP)
     return np.clip(((acc + IDCT_BIAS) >> (2 * IDCT_SHIFT)) + 128, 0, 255)
-
-
-def decode_jpeg_pixels(b: bytes) -> np.ndarray | None:
-    """Full PIXEL decode for any single-component stream the exact
-    coefficient decoders accept — baseline sequential (incl. DRI
-    restarts and 16-bit DQTs) AND progressive SOF2 — through the
-    fixed-point integer IDCT. Returns an (h, w) uint8 image or None.
-    This closes the AC pixel refusal; 3-component progressive
-    streams are served by :func:`decode_jpeg_pixels_prog3` (native
-    per-plane resolution)."""
-    co = decode_jpeg_coeffs(b)
-    if co is None:
-        co = decode_jpeg_coeffs_prog(b)
-    if co is None:
-        return None
-    w_, h, coefs = co
-    bw, bh = (w_ + 7) // 8, (h + 7) // 8
-    px = idct8_fixed(coefs)
-    img = px.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)
-    return img[:h, :w_].astype(np.uint8)
 
 
 # ---------------------------------------------------------------------------
@@ -2378,37 +1924,28 @@ def planes3_to_rgb(
 
 
 def decode_jpeg_rgb(b: bytes) -> np.ndarray | None:
-    """(h, w, 3) uint8 RGB for ANY profile the decoders accept:
-    single-component streams replicate gray to three channels;
-    3-component streams (DC-only or AC, any sampling) go through the
-    pinned integer upsample + Rec.601 path. The one-call entry the
-    image ops (phash, resize/crop) dispatch JPEG payloads to (r8)."""
-    gray = decode_jpeg_pixels(b)
-    if gray is not None:
-        return np.repeat(gray[:, :, None], 3, axis=2)
-    ll = decode_jpeg_lossless(b)
-    if ll is not None:
-        # r9: 8-bit SOF3 renders like any gray stream; deeper
-        # precisions have no defined 8-bit rendering here — refuse
-        w_, h, img, prec = ll
-        if prec != 8:
+    """(h, w, 3) uint8 RGB for ANY profile the decoders accept, from one
+    walk and one decode, dispatched on the SOF kind and component
+    count: 8-bit lossless and single-component streams replicate gray
+    to three channels; 3-component streams (any sampling, DC-only or
+    AC, sequential or progressive) go through the pinned integer
+    upsample + Rec.601 path. Lossless streams deeper than 8 bits have
+    no 8-bit rendering here and are refused. The one-call entry the
+    image ops (phash, resize/crop, dims) dispatch JPEG payloads to."""
+    f = _walk(b)
+    if f is not None and f.kind == _SOF3:
+        ll = _decode_sof3(f)
+        if ll is None or ll[3] != 8:
             return None
-        return np.repeat(img.astype(np.uint8)[:, :, None], 3, axis=2)
-    res = decode_jpeg_dc_planes_hv(b)
-    if res is not None and len(res[2]) == 3:
-        w_, h, planes, hv = res
-    else:
-        m = _multi3_from_prog(_decode_progressive(b))
-        if m is None:
-            m = _multi3_from_seq(_decode_sequential_multi(b))
-        if m is None:
-            return None
-        w_, h, _, planes, hv = m
-    rgb = planes3_to_rgb(w_, h, planes, hv)
-    if rgb is None:
+        return np.repeat(ll[2].astype(np.uint8)[:, :, None], 3, axis=2)
+    d = _decode_dct(f)
+    if d is None:
         return None
-    r, g, bl = rgb
-    return np.stack([r, g, bl], axis=-1).astype(np.uint8)
+    w, h, arrs, hv = d
+    planes = _planes(w, h, arrs, hv)
+    if len(planes) == 1:
+        return np.repeat(planes[0][:, :, None], 3, axis=2)
+    return np.stack(planes3_to_rgb(w, h, planes, hv), axis=-1).astype(np.uint8)
 
 
 # ---------------------------------------------------------------------------
@@ -2516,85 +2053,6 @@ def make_jpeg_lossless(asset_id: int, prec: int = 8) -> bytes:
     )
 
 
-def _parse_segments_lossless(b: bytes):
-    """Marker walk for SOF3 streams → (prec, w, h, psel, pt,
-    dc_table, entropy_bytes) or None. Accepts precisions 2..16 per
-    H.1; single component; refuses DRI (restart geometry in a
-    lossless scan is unimplemented — refusal, never a guess), DCT
-    SOFs (those belong to the other parsers), and a scan header
-    whose Ss is not a valid predictor 1..7 or Se != 0."""
-    if len(b) < 4 or b[:2] != b"\xff\xd8":
-        return None
-    pos = 2
-    huff: dict[int, dict] = {}
-    sof = None
-    prec = 0
-    scan = None
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            return None
-        # T.81 B.1.1.2: any number of 0xFF fill bytes may precede a
-        # marker — skip them (r10, r9 ADVICE: DNG-embedded SOF3 and
-        # some hardware encoders pad with fills; refusing them lost
-        # spec-valid files)
-        while pos + 2 < len(b) and b[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 4 > len(b):
-            # fill bytes ran into EOF: no room for marker + length —
-            # refuse (r10 ADVICE: the skip must not outrun the
-            # pos+4<=len guard the loop header established)
-            return None
-        marker = b[pos + 1]
-        (seglen,) = struct.unpack(">H", b[pos + 2 : pos + 4])
-        body = b[pos + 4 : pos + 2 + seglen]
-        if len(body) != seglen - 2:
-            return None
-        if marker == 0xC3:
-            if len(body) < 9:
-                return None
-            prec, h, w_, ncomp = struct.unpack(">BHHB", body[:6])
-            if not (2 <= prec <= 16) or ncomp != 1:
-                return None
-            sof = (w_, h)
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC5, 0xC6, 0xC7, 0xDD):
-            return None  # DCT frames / DRI: not this parser's contract
-        elif marker == 0xC4:
-            p = 0
-            while p < len(body):
-                tclass, tid = body[p] >> 4, body[p] & 0x0F
-                bits = list(body[p + 1 : p + 17])
-                if len(bits) != 16:
-                    return None
-                n = sum(bits)
-                if p + 17 + n > len(body):
-                    return None
-                if tclass == 0:
-                    huff[tid] = _build_decode_table(
-                        bits, list(body[p + 17 : p + 17 + n])
-                    )
-                p += 17 + n
-        elif marker == 0xDA:
-            if len(body) != 6 or body[0] != 1:
-                return None
-            dc_id = body[2] >> 4
-            psel, se, ahal = body[3], body[4], body[5]
-            pt = ahal & 0x0F
-            if not (1 <= psel <= 7) or se != 0 or (ahal >> 4) != 0:
-                return None
-            if pt >= prec or dc_id not in huff:
-                return None
-            scan = (psel, pt, huff[dc_id], pos + 2 + seglen)
-            break
-        pos += 2 + seglen
-    if sof is None or scan is None:
-        return None
-    psel, pt, table, scan_start = scan
-    segments = _split_entropy(b, scan_start)
-    if segments is None or len(segments) != 1:
-        return None  # no DRI → a RSTn in the scan is corruption
-    return prec, sof[0], sof[1], psel, pt, table, segments[0]
-
-
 def _read_ll_diff(r: _BitReader, tab: _HuffTable) -> int | None:
     """One lossless difference: category then magnitude bits, with
     the SSSS=16 → 32768 no-bits escape (H.2)."""
@@ -2611,22 +2069,26 @@ def _read_ll_diff(r: _BitReader, tab: _HuffTable) -> int | None:
     return v if v >= (1 << (cat - 1)) else v - (1 << cat) + 1
 
 
-def decode_jpeg_lossless(
-    b: bytes,
-) -> tuple[int, int, np.ndarray, int] | None:
-    """SOF3 stream → (w, h, int64 (h, w) sample array, precision) or
-    None. The decoder mirrors nothing from the encoder but the spec:
-    predictions re-derived per H.1.2.1, reconstruction
-    (pred + diff) mod 2^16 per H.1.2.2, then range-checked against
-    the declared precision (an out-of-range sample means a corrupt
-    stream — refuse, don't clamp)."""
-    parsed = _parse_segments_lossless(b)
-    if parsed is None:
+def _decode_sof3(f: _Frame | None) -> tuple[int, int, np.ndarray, int] | None:
+    """The lossless decode of a walked SOF3 frame → (w, h, int64 (h, w)
+    sample array, precision) or None. One scan with no restart
+    interval (restart geometry in a lossless scan is not implemented:
+    refused, never guessed), predictor Ss in 1..7, Se = Ah = 0 and
+    Pt < P. Predictions are re-derived per H.1.2.1, reconstruction is
+    (pred + diff) mod 2^16 per H.1.2.2, and a sample outside the
+    declared precision means a corrupt stream (refused, not clamped)."""
+    if f is None or f.kind != _SOF3 or len(f.scans) != 1:
         return None
-    prec, w, h, psel, pt, tab, entropy = parsed
-    if w <= 0 or h <= 0 or w > 1 << 14 or h > 1 << 14:
+    comp_tabs, psel, se, ah, pt, segments, ri = f.scans[0]
+    tab = comp_tabs[0][1]
+    if ri or len(segments) != 1 or tab is None:
         return None
-    r = _BitReader(entropy)
+    if not (1 <= psel <= 7) or se or ah or pt >= f.prec:
+        return None
+    w, h, prec = f.w, f.h, f.prec
+    if w > 1 << 14 or h > 1 << 14:
+        return None
+    r = _BitReader(segments[0])
     img = np.zeros((h, w), np.int64)
     maxv = (1 << prec) - 1
     for y in range(h):
@@ -2640,6 +2102,14 @@ def decode_jpeg_lossless(
                 return None
             img[y, x] = v
     return w, h, img, prec
+
+
+def decode_jpeg_lossless(
+    b: bytes,
+) -> tuple[int, int, np.ndarray, int] | None:
+    """SOF3 stream → (w, h, int64 (h, w) sample array, precision) or
+    None (see :func:`_decode_sof3`)."""
+    return _decode_sof3(_walk(b))
 
 
 JPEG_ASSET_SCHEMA = StructType(
@@ -2741,108 +2211,40 @@ def synthesize_jpeg_mixed(ids: DataFrame, id_col: str = "asset_id") -> DataFrame
 
 
 def jpeg_full_stats(assets: DataFrame) -> DataFrame:
-    """Exact pixel stats for every profile (fixed-point integer IDCT
-    since r7) PLUS exact integer pre-IDCT coefficient stats for every
-    baseline payload. 3-component payloads additionally report
-    full-resolution RGB channel sums (r8: pinned integer NN chroma
-    upsample + Rec.601 — see planes3_to_rgb). ONE entropy decode per
-    payload: the 3-component AC paths derive coefficient AND pixel
-    views from the same decoded grids (r7 ADVICE — the prog3/seq
-    pixel twins used to re-run the full entropy decode)."""
-
-    def rgb_sums(w, h, planes, hv):
-        rgb = planes3_to_rgb(w, h, planes, hv)
-        rgb_c = planes3_to_rgb_centered(w, h, planes, hv)
-        if rgb is None or rgb_c is None:
-            return (None,) * 6
-        return tuple(int(c.sum()) for c in (*rgb, *rgb_c))
+    """Exact pixel stats (fixed-point integer IDCT) PLUS exact integer
+    pre-IDCT coefficient stats for every Huffman-DCT payload, from one
+    walk and one decode per payload, dispatched on the SOF kind and
+    component count. 3-component payloads add native-resolution chroma
+    sums and full-resolution RGB sums through the pinned integer
+    upsample + Rec.601 path, nearest-neighbour (see planes3_to_rgb) and
+    centered (see planes3_to_rgb_centered). Lossless (SOF3) payloads
+    report exact sample stats only: they have no blocks, coefficients
+    or chroma, so those columns are NULL."""
 
     def stats(aid, payload):
-        b = payload or b""
-        ll = decode_jpeg_lossless(b)
-        if ll is not None:
-            # r9: SOF3 lossless — exact samples, no blocks/
-            # coefficients/chroma to report (the NULLs are the
-            # honest answer, not a refusal: the stream has no
-            # DCT domain)
+        f = _walk(payload or b"")
+        if f is not None and f.kind == _SOF3:
+            ll = _decode_sof3(f)
+            if ll is None:
+                return [(aid,)]
             w, h, img, _prec = ll
             return [(aid, w, h, w * h, int(img.sum()), int(img.min()), int(img.max()))]
-        res = decode_jpeg_dc_planes_hv(b)
-        if res is not None and len(res[2]) == 3:
-            # 3-component DC-only pixel path: 4:4:4 AND the
-            # subsampled profiles (r6) — chroma stats are
-            # exact in each plane's NATIVE resolution; RGB
-            # sums at FULL resolution via the r8 integer
-            # upsample + Rec.601 path
-            w, h, comps3, hv3 = res
-            y, cb, cr = (p.astype(np.int64) for p in comps3)
-            nblk = 0
-            dcsum = 0
-            for p in (y, cb, cr):
-                ph, pw = p.shape
-                nblk += ((ph + 7) // 8) * ((pw + 7) // 8)
-                # each block is a constant plane, so its
-                # top-left sample recovers the dequantized dc
-                # exactly: dc_dq = (sample - 128) × 8
-                dcsum += int((p[::8, ::8] - 128).sum()) * 8
-            return [
-                (aid, w, h, w * h, int(y.sum()), int(y.min()), int(y.max()),
-                 nblk, dcsum, 0, 0, 0, int(cb.sum()), int(cr.sum()),
-                 *rgb_sums(w, h, comps3, hv3))
-            ]
-        co = decode_jpeg_coeffs(b)
-        multi = None
-        if co is None:
-            # ONE progressive parse serves the single- AND
-            # 3-component shapes (decode_jpeg_coeffs_prog
-            # used to parse fully just to learn the count)
-            prog = _decode_progressive(b)
-            if prog is not None:
-                comps, (w_, h_), grids, pw, wb, hb = prog
-                if len(comps) == 1:
-                    co = (
-                        w_,
-                        h_,
-                        _dequant_grid(grids[0], comps[0][0], pw[0], wb[0], hb[0]),
-                    )
-                else:
-                    multi = _multi3_from_prog(prog)
-            else:
-                multi = _multi3_from_seq(_decode_sequential_multi(b))
-        if multi is not None:
-            # 3-component AC-bearing profiles: progressive
-            # (r6) or SEQUENTIAL interleaved (r7 — the
-            # dominant web shape). Exact coefficient stats
-            # summed across components; luma stats on the
-            # luma plane, chroma sums per native plane, RGB
-            # sums at full resolution (r8)
-            w, h, arrs, planes, hvm = multi
-            allc = np.concatenate(arrs, axis=0)
-            ac = np.delete(allc, 0, axis=1)
-            y, cb, cr = (p.astype(np.int64) for p in planes)
-            return [
-                (aid, w, h, int(y.size), int(y.sum()), int(y.min()), int(y.max()),
-                 int(allc.shape[0]), int(allc[:, 0].sum()), int(ac.sum()),
-                 int(np.abs(ac).sum()), int((ac != 0).sum()),
-                 int(cb.sum()), int(cr.sum()), *rgb_sums(w, h, planes, hvm))
-            ]
-        if co is None:
+        d = _decode_dct(f)
+        if d is None:
             return [(aid,)]
-        w, h, coefs = co
-        # r7: the pixel profile runs the pinned fixed-point
-        # integer IDCT on EVERY single-component payload —
-        # AC-bearing scans included. On DC-only blocks it
-        # reproduces dc + 128 bit-exactly, so the legacy
-        # collapse profile is a strict special case.
-        bw, bh = (w + 7) // 8, (h + 7) // 8
-        px = idct8_fixed(coefs)
-        img = px.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3)
-        img = img.reshape(bh * 8, bw * 8)[:h, :w]
-        ac = np.delete(coefs, 0, axis=1)
-        return [
-            (aid, w, h, w * h, int(img.sum()), int(img.min()), int(img.max()),
-             int(coefs.shape[0]), int(coefs[:, 0].sum()), int(ac.sum()),
-             int(np.abs(ac).sum()), int((ac != 0).sum()))
-        ]
+        w, h, arrs, hv = d
+        planes = [p.astype(np.int64) for p in _planes(w, h, arrs, hv)]
+        allc = np.concatenate(arrs, axis=0)
+        ac = allc[:, 1:]
+        y = planes[0]
+        row = (
+            aid, w, h, w * h, int(y.sum()), int(y.min()), int(y.max()),
+            int(allc.shape[0]), int(allc[:, 0].sum()), int(ac.sum()),
+            int(np.abs(ac).sum()), int((ac != 0).sum()),
+        )
+        if len(planes) == 3:
+            rgb = (*planes3_to_rgb(w, h, planes, hv), *planes3_to_rgb_centered(w, h, planes, hv))
+            row += (int(planes[1].sum()), int(planes[2].sum()), *(int(c.sum()) for c in rgb))
+        return [row]
 
     return map_rows(assets, JPEG_FULL_SCHEMA, stats, "asset_id", "payload")

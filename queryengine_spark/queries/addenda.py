@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from queryengine_spark.functions.text import tokenize_ws
-from queryengine_spark.plans import spread
+from queryengine_spark.plans import map_rows, spread
 from queryengine_spark.queries.base import t
 from queryengine_spark.queries.textstats import _TOKS
 
@@ -1617,7 +1617,12 @@ def multimodal_wav_adpcm(spark: SparkSession, sf: str) -> DataFrame:
     cross-engine. The step-ladder reconstruction between leads is
     pinned by pytest hand-expanded vectors and the ≤16-per-sample
     round-trip bound (tests/test_curation.py, test_codec_properties)."""
-    import pandas as pd
+    from pyspark.sql.types import (
+        IntegerType,
+        LongType,
+        StructField,
+        StructType,
+    )
 
     from queryengine_spark.multimodal.wav import (
         BMP_ASSET_SCHEMA,
@@ -1626,25 +1631,6 @@ def multimodal_wav_adpcm(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     spb = (ADPCM_CORPUS_ALIGN - 4) * 2 + 1
-
-    def synth(batches):
-        for pdf in batches:
-            ids_ = [int(a) for a in pdf["asset_id"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids_, dtype="int64"),
-                    "payload": [
-                        make_wav_adpcm(a, ADPCM_CORPUS_ALIGN) for a in ids_
-                    ],
-                }
-            )
-
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     out_schema = StructType(
         [
@@ -1656,35 +1642,22 @@ def multimodal_wav_adpcm(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def stats(batches):
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                dec = (
-                    decode_adpcm_wav(bytes(payload))
-                    if payload is not None
-                    else None
-                )
-                if dec is None:
-                    rows.append((int(aid), None, None, None, None))
-                    continue
-                rate, s = dec
-                n = len(s)
-                leads = s[::spb]
-                rows.append(
-                    (int(aid), rate, n, len(leads), int(leads.sum()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "sample_rate", "n_samples", "n_blocks",
-                    "lead_sum",
-                ],
-            )
+    def adpcm_stats(aid, payload):
+        dec = decode_adpcm_wav(payload) if payload is not None else None
+        if dec is None:
+            return [(aid,)]
+        rate, s = dec
+        leads = s[::spb]
+        return [(aid, rate, len(s), len(leads), int(leads.sum()))]
 
     ids = t(spark, sf, "documents").select(F.col("doc_id").alias("asset_id"))
-    assets = spread(ids).mapInPandas(synth, BMP_ASSET_SCHEMA)
-    return assets.mapInPandas(stats, out_schema)
+    assets = map_rows(
+        spread(ids),
+        BMP_ASSET_SCHEMA,
+        lambda a: [(a, make_wav_adpcm(a, ADPCM_CORPUS_ALIGN))],
+        "asset_id",
+    )
+    return map_rows(assets, out_schema, adpcm_stats, "asset_id", "payload")
 
 
 from queryengine_spark.multimodal.wav import (  # noqa: E402

@@ -299,6 +299,15 @@ VOID: dict[str, int] = {
     "multimodal_image_decode": 13,
     "dedup_image_phash": 13,
     "multimodal_media_suite": 13,
+    # round 14: one JPEG marker walk and one Huffman-DCT decode per
+    # payload replace the per-profile walks and block loops. Identical
+    # results, but every query that reaches the JPEG decoders (found by
+    # making the walk raise and running every registered query) has a
+    # touched kernel; multimodal_wav_adpcm crosses into Python through
+    # map_rows instead of two hand-written mapInPandas loops:
+    "multimodal_features": 13,
+    "multimodal_scene_cuts": 13,
+    "multimodal_wav_adpcm": 13,
 }
 
 

@@ -318,11 +318,11 @@ def test_truncated_sof_returns_none():
     """A SOF declaring 3 components but truncated mid-component-list
     must return None, not raise (r5 ADVICE: one corrupt payload must
     not fail the whole map_rows batch)."""
-    from queryengine_spark.multimodal.jpeg import _parse_segments_multi
+    from queryengine_spark.multimodal.jpeg import _walk
 
     bad_sof = _seg(0xC0, struct.pack(">BHHB", 8, 8, 8, 3) + bytes([1, 0x11, 0]))
     payload = b"\xff\xd8" + bad_sof + b"\xff\xd9"
-    assert _parse_segments_multi(payload) is None
+    assert _walk(payload) is None
     assert decode_jpeg_dc(payload) is None
 
 
@@ -624,21 +624,21 @@ def test_sampling_factor_limits():
     factors 5..15 (B.2.2), and interleaved MCUs over 10 data units
     (B.2.3: 2×2 + 2×2 + 2×2 = 12 blocks)."""
     from queryengine_spark.multimodal.jpeg import (
-        _parse_segments_multi,
+        _walk,
         make_jpeg_420,
     )
 
     p = make_jpeg_420(4, dri=False)
-    assert _parse_segments_multi(p) is not None
+    assert _walk(p) is not None
     for samp in (0x52, 0x25, 0x02, 0x20, 0xF1):
         bad = p.replace(bytes([1, 0x22, 0]), bytes([1, samp, 0]), 1)
-        assert _parse_segments_multi(bad) is None, hex(samp)
+        assert _walk(bad) is None, hex(samp)
     over = p.replace(
         bytes([1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1]),
         bytes([1, 0x22, 0, 2, 0x22, 1, 3, 0x22, 1]),
         1,
     )
-    assert _parse_segments_multi(over) is None
+    assert _walk(over) is None
 
 
 def test_411_assets_decode_to_formula():
@@ -737,7 +737,7 @@ def test_16bit_quant_table_decodes_exactly():
         AC_POSITIONS,
         QUANT_AC16,
         ZIGZAG_NAT,
-        _parse_segments_multi,
+        _walk,
         block_ac,
         decode_jpeg_coeffs,
         make_jpeg_ac16,
@@ -760,7 +760,7 @@ def test_16bit_quant_table_decodes_exactly():
         # flip the precision nibble to the undefined Pq=2 → refusal
         i = p.index(b"\xff\xdb") + 4
         bad = p[:i] + bytes([0x20 | (p[i] & 0x0F)]) + p[i + 1 :]
-        assert _parse_segments_multi(bad) is None
+        assert _walk(bad) is None
 
 
 # --- r6: progressive (SOF2) coefficient-domain decode -----------------------
@@ -1239,10 +1239,9 @@ def test_multi3_single_decode_views_agree():
     functions (coefficients AND pixels) — the de-duplicated decode
     path changes cost, never values."""
     from queryengine_spark.multimodal.jpeg import (
-        _decode_progressive,
-        _decode_sequential_multi,
-        _multi3_from_prog,
-        _multi3_from_seq,
+        _decode_dct,
+        _planes,
+        _walk,
         decode_jpeg_coeffs_prog3,
         decode_jpeg_pixels_prog3,
         decode_jpeg_pixels_seq_multi,
@@ -1252,7 +1251,8 @@ def test_multi3_single_decode_views_agree():
     )
 
     b = make_jpeg_prog_420(11)
-    w, h, arrs, planes, _hv = _multi3_from_prog(_decode_progressive(b))
+    w, h, arrs, hv = _decode_dct(_walk(b))
+    planes = _planes(w, h, arrs, hv)
     w2, h2, arrs2 = decode_jpeg_coeffs_prog3(b)
     _, _, planes2 = decode_jpeg_pixels_prog3(b)
     assert (w, h) == (w2, h2)
@@ -1260,7 +1260,8 @@ def test_multi3_single_decode_views_agree():
     assert all((x == y).all() for x, y in zip(planes, planes2))
 
     b = make_jpeg_420_ac(13, dri=False)
-    w, h, arrs, planes, _hv2 = _multi3_from_seq(_decode_sequential_multi(b))
+    w, h, arrs, hv = _decode_dct(_walk(b))
+    planes = _planes(w, h, arrs, hv)
     w2, h2, arrs2 = decode_jpeg_seq_coeffs_multi(b)
     _, _, planes2 = decode_jpeg_pixels_seq_multi(b)
     assert (w, h) == (w2, h2)
@@ -1621,16 +1622,13 @@ class TestLosslessJpeg:
         """r10 ADVICE: the fill-byte skip must not outrun the buffer —
         fills right before EOI with nothing after them must return the
         None refusal (the parsers saw no scan), not raise struct.error
-        into the Spark task. Pinned on all three segment walks."""
+        into the Spark task. Pinned on the marker walk."""
         import queryengine_spark.multimodal.jpeg as J
 
         probe = b"\xff\xd8\xff\xff\xff\xd9"
-        assert J._parse_segments_multi(probe) is None
-        assert J._parse_segments_lossless(probe) is None
-        assert J._parse_progressive(probe) is None
+        assert J._walk(probe) is None
         # and an all-fill tail with no terminating marker byte at all
-        assert J._parse_segments_multi(b"\xff\xd8\xff\xff\xff") is None
-        assert J._parse_segments_lossless(b"\xff\xd8\xff\xff\xff") is None
+        assert J._walk(b"\xff\xd8\xff\xff\xff") is None
 
     def test_rgb_entry_serves_8bit_refuses_16bit(self):
         import queryengine_spark.multimodal.jpeg as J
