@@ -34,9 +34,9 @@ Scale notes:
   (a mapInArrow over an AQE-sized repartition) contracts each
   partition's components to stars; when every component closes
   inside one partition (every small graph) that is the answer, and
-  otherwise min-label propagation with pointer jumping runs over
-  the contracted stars only. The large-star/small-star variant
-  (O(log² n) rounds) stays as the suite leg.
+  otherwise the large-star/small-star rounds (O(log² n)) run over
+  the contracted stars only. The same rounds over every edge stay
+  as the suite's second leg (connected_components_star).
 """
 
 from __future__ import annotations
@@ -58,10 +58,11 @@ from queryengine_spark.plans import spread
 
 _HEX_HIGH = ("8", "9", "a", "b", "c", "d", "e", "f")
 
-#: rounds the most recent connected-components call took to converge
-#: (either backend; a contraction that leaves nothing to propagate
-#: counts as one) — measurement hook for the backend A/B
-#: (scripts/ab_cc_backend.py, docs/SCALE.md); not part of any result.
+#: rounds the most recent connected-components call took to converge:
+#: the star rounds of connected_components_star, or 1 for the
+#: contraction of connected_components plus its star rounds, if any
+#: — measurement hook (perfbench's dedup.cc_rounds, docs/SCALE.md);
+#: not part of any result.
 LAST_CC_ROUNDS = 0
 
 
@@ -297,6 +298,29 @@ def _band_bucket_array(n_hashes: int, band_size: int):
     )
 
 
+def _bucket_pairs(buckets: DataFrame, max_bucket: int | None) -> DataFrame:
+    """(id_a, id_b) with id_a < id_b, distinct: the ids of (id, bucket)
+    that share a bucket, by a bucket equi-self-join, after dropping
+    buckets of more than ``max_bucket`` members when it is set."""
+    if max_bucket is not None:
+        # window count instead of agg+join: one shuffle on bucket,
+        # whose partitioning the self-join below then reuses
+        g = Window.partitionBy("bucket")
+        buckets = (
+            buckets.withColumn("g", F.count(F.lit(1)).over(g))
+            .filter(F.col("g") <= max_bucket)
+            .drop("g")
+        )
+    a = buckets.select(F.col("id").alias("id_a"), "bucket")
+    b = buckets.select(F.col("id").alias("id_b"), "bucket")
+    return (
+        a.join(b, "bucket")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
 def minhash_lsh_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -332,23 +356,7 @@ def minhash_lsh_candidate_pairs(
     buckets = sig.select(
         "id", F.explode(_band_bucket_array(n_hashes, band_size)).alias("bucket")
     ).localCheckpoint(eager=False)
-    if max_bucket is not None:
-        # window count instead of agg+join: one shuffle on bucket,
-        # whose partitioning the self-join below then reuses
-        g = Window.partitionBy("bucket")
-        buckets = (
-            buckets.withColumn("g", F.count(F.lit(1)).over(g))
-            .filter(F.col("g") <= max_bucket)
-            .drop("g")
-        )
-    a = buckets.select(F.col("id").alias("id_a"), "bucket")
-    b = buckets.select(F.col("id").alias("id_b"), "bucket")
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return _bucket_pairs(buckets, max_bucket)
 
 
 def minhash_lsh_star_edges(
@@ -426,23 +434,11 @@ def minhash_candidate_jaccard(
     sig = minhash_signatures(df, id_col, text_col, total, shingle_n).localCheckpoint(
         eager=False
     )
-    buckets = sig.select(
-        "id", F.explode(_band_bucket_array(n_hashes, band_size)).alias("bucket")
-    )
-    if max_bucket is not None:
-        g = Window.partitionBy("bucket")
-        buckets = (
-            buckets.withColumn("g", F.count(F.lit(1)).over(g))
-            .filter(F.col("g") <= max_bucket)
-            .drop("g")
-        )
-    a = buckets.select(F.col("id").alias("id_a"), "bucket")
-    b = buckets.select(F.col("id").alias("id_b"), "bucket")
-    pairs = (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    pairs = _bucket_pairs(
+        sig.select(
+            "id", F.explode(_band_bucket_array(n_hashes, band_size)).alias("bucket")
+        ),
+        max_bucket,
     )
     est_range = range(n_hashes, total)
     sa = sig.select(
@@ -744,8 +740,8 @@ def connected_components(
     dst_col: str = "id_b",
     max_iterations: int = 20,
 ) -> DataFrame:
-    """Connected components by local contraction, then min-label
-    propagation with pointer jumping over what is left — turns
+    """Connected components by local contraction, then the
+    large-star/small-star rounds over what is left — turns
     near-dup candidate PAIRS into dedup CLUSTERS (the final step of
     fuzzy dedup: keep one doc per component). Returns (id, component)
     with component = min id in the component.
@@ -778,25 +774,22 @@ def connected_components(
        (the contraction counts as round 1 of ``LAST_CC_ROUNDS``). On
        a small graph AQE coalesces the repartition to one partition,
        so this is the path taken.
-    3. Otherwise labels start at min(local_root) per u (its "is a
-       vertex" flag comes from its own partition) and propagate over
-       the contracted star edges (u, local_root) only: each round
-       takes the min label over the closed neighborhood, then jumps
-       pointers (``component := component's own component``), and
-       the round is localCheckpoint-ed to cut lineage. The round's
-       probe is one aggregate: an exact DECIMAL(38) label sum, which
-       strictly falls until the fixpoint, and the count of ids whose
-       neighborhood mixes vertices and non-vertices. A mixed
-       component always has a star edge between the two kinds, so
-       round 1 finds it and raises.
+    3. Otherwise each id's kind is min(kind) over its rows (only its
+       own partition's row is not NULL), and one aggregate counts the
+       contracted edges (u, local_root) that join a vertex to a
+       non-vertex: a mixed component always has one, so it raises
+       here. Then :func:`_star_rounds` runs over the contracted edges
+       with u != local_root (``LAST_CC_ROUNDS`` = 1 + its rounds), and
+       each vertex's component is its fixed-point center, or itself.
 
     Measured on one 5,920-document ``dedup_components`` input (7,703
-    star edges, local[4], calls after the first in one Spark session): the
-    propagation over every edge this replaces took 9 rounds, 91-94
-    Spark jobs and 4.3-5.0 s per call; the contraction takes one
-    partition, no propagation round, 4 jobs and 1.0-1.5 s. Forcing
-    the propagation path on the same input took 18-19 jobs and
-    1.7-2.7 s, so the closed-component shortcut pays.
+    star edges, local[4], calls after the first in one Spark session):
+    min-label propagation over every edge, which the contraction
+    replaced, took 9 rounds, 91-94 Spark jobs and 4.3-5.0 s per call;
+    the contraction takes one partition, no round, 4 jobs and
+    1.0-1.5 s. Forcing the fallback on the same input (8 uncoalesced
+    shuffle partitions) took 4 star rounds, 52 jobs and 4.8-7.5 s, so
+    the closed-component shortcut pays.
     """
     both_dirs = F.explode(
         F.array(
@@ -842,112 +835,47 @@ def connected_components(
         LAST_CC_ROUNDS = 1
         return star.select(F.col("u").alias("id"), F.col("root").alias("component"))
 
-    # closed neighborhoods of the contracted graph: (u, root) both ways
-    # plus a self-loop per id
-    closed_nbhd = star.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("u").alias("src"), F.col("root").alias("dst")),
-                F.struct(F.col("root").alias("src"), F.col("u").alias("dst")),
-                F.struct(F.col("u").alias("src"), F.col("u").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    labels = (
-        star.groupBy("u")
-        .agg(F.min("root").alias("component"), F.min("kind").alias("v"))
-        .select(F.col("u").alias("id"), "component", "v", F.col("v").alias("v_hi"))
+    # open components: the star rounds over the contracted edges. An
+    # id is a vertex when its own partition says so (min skips the
+    # NULL kinds of the partitions where it is only a dst), and a
+    # component that mixes the two kinds has a contracted edge
+    # between them.
+    kinds = star.groupBy("u").agg(F.min("kind").alias("kind"))
+    contracted = star.select("u", F.col("root").alias("v"))
+    mixed = (
+        contracted.join(kinds, "u")
+        .join(kinds.select(F.col("u").alias("v"), F.col("kind").alias("kind_v")), "v")
+        .filter(F.col("kind") != F.col("kind_v"))
+        .count()
+    )
+    if mixed:
+        raise ValueError(
+            "connected_components: an edge endpoint is not in vertices "
+            f"({mixed} contracted edges join a vertex to a non-vertex)"
+        )
+    centers, rounds = _star_rounds(contracted, max_iterations, "connected_components")
+    LAST_CC_ROUNDS = 1 + rounds
+    return (
+        kinds.filter(F.col("kind") == 1)
+        .join(centers, "u", "left")
+        .select(F.col("u").alias("id"), F.coalesce("v", "u").alias("component"))
     )
 
-    def _label_sum(frame: DataFrame) -> tuple:
-        row = frame.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s"),
-            F.count(F.when(F.col("v") != F.col("v_hi"), 1)).alias("mixed"),
-        ).collect()[0]
-        return row["s"], row["mixed"]
 
-    prev_sum, _ = _label_sum(labels)
-    converged = False
-    for LAST_CC_ROUNDS in range(1, max_iterations + 1):
-        # min label over the closed neighborhood, and the vertex flags
-        # met there
-        stepped = (
-            closed_nbhd.join(labels, closed_nbhd.src == labels.id)
-            .groupBy("dst")
-            .agg(
-                F.min("component").alias("component"),
-                F.min("v").alias("v"),
-                F.max("v_hi").alias("v_hi"),
-            )
-        )
-        # pointer jump: follow my label's label (its component can
-        # only be <= mine, so least() is just defensive). The ptr
-        # side's join key is the groupBy key, so it reuses the
-        # aggregation's exchange.
-        ptr = stepped.select(
-            F.col("dst").alias("p_id"), F.col("component").alias("p_component")
-        )
-        new_labels = (
-            stepped.join(ptr, stepped.component == ptr.p_id, "left")
-            .select(
-                F.col("dst").alias("id"),
-                F.least(
-                    F.col("component"),
-                    F.coalesce("p_component", F.col("component")),
-                ).alias("component"),
-                "v",
-                "v_hi",
-            )
-            .localCheckpoint(eager=False)
-        )
-        cur_sum, mixed = _label_sum(new_labels)
-        if mixed:
-            raise ValueError(
-                "connected_components: an edge endpoint is not in vertices "
-                f"({mixed} ids next to both kinds after round {LAST_CC_ROUNDS})"
-            )
-        labels = new_labels
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations (graph diameter exceeds the bound); raise "
-            "max_iterations"
-        )
-    return labels.filter(F.col("v") == 1).select("id", "component")
-
-
-def connected_components_star(
-    vertices: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iterations: int = 25,
-) -> DataFrame:
-    """Connected components by the alternating large-star/small-star
-    algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14): converges in O(log² n) rounds regardless of
-    graph diameter, where min-label propagation
-    (:func:`connected_components`) needs O(diameter) rounds — the
-    scale path for pathological chain-shaped dedup graphs.
+def _star_rounds(e: DataFrame, max_iterations: int, name: str) -> tuple[DataFrame, int]:
+    """The alternating large-star/small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14) over the
+    undirected edges (u, v), until a round leaves the edge set
+    unchanged: O(log² n) rounds regardless of graph diameter.
 
     large-star: every node links its strictly-larger neighbors to the
     minimum of its closed neighborhood; small-star: every node links
     its smaller neighbors (and itself) to that minimum. At the fixed
     point the edges form stars centered at each component's minimum
-    id. Returns (id, component), component = min id (identical output
-    to label propagation; equivalence pinned in tests).
-    """
-    e = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    id. Returns those edges, one (u, v = component min) row per id u
+    that is not a minimum, and the number of rounds; raises
+    RuntimeError when ``max_iterations`` rounds do not reach it."""
+    e = e.filter(F.col("u") != F.col("v")).distinct().localCheckpoint(eager=False)
 
     def _sig(df: DataFrame) -> tuple[int, int]:
         row = df.agg(
@@ -956,16 +884,14 @@ def connected_components_star(
         ).collect()[0]
         return row["n"], row["s"]
 
-    global LAST_CC_ROUNDS
     sig = _sig(e)
-    converged = False
     both_uv = F.explode(
         F.array(
             F.struct(F.col("u").alias("u"), F.col("v").alias("v")),
             F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
         )
     ).alias("s")
-    for LAST_CC_ROUNDS in range(1, max_iterations + 1):
+    for rounds in range(1, max_iterations + 1):
         # large-star over the symmetric neighborhood (both directions
         # from ONE explode pass instead of a union of two scans)
         sym = e.select(both_uv).select("s.u", "s.v")
@@ -990,7 +916,7 @@ def connected_components_star(
                 F.struct(F.col("u").alias("a"), F.col("m").alias("b")),
             )
         ).alias("l")
-        small = (
+        e = (
             large.join(m2, "u")
             .select(legs)
             .select("l.a", "l.b")
@@ -999,20 +925,40 @@ def connected_components_star(
             .distinct()
             .localCheckpoint(eager=False)  # cut per-round lineage
         )
-        new_sig = _sig(small)
-        e = small
+        new_sig = _sig(e)
         if new_sig == sig:
-            converged = True
-            break
+            return e, rounds
         sig = new_sig
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iterations} "
-            "rounds; raise max_iterations"
-        )
-    # fixed point: e = {(leaf, center)}; centers and singletons map to self
+    raise RuntimeError(
+        f"{name} did not converge in {max_iterations} rounds; raise max_iterations"
+    )
+
+
+def connected_components_star(
+    vertices: DataFrame,
+    edges: DataFrame,
+    id_col: str = "id",
+    src_col: str = "id_a",
+    dst_col: str = "id_b",
+    max_iterations: int = 25,
+) -> DataFrame:
+    """Connected components by the large-star/small-star rounds
+    (:func:`_star_rounds`) over every input edge, without the local
+    contraction of :func:`connected_components` (which runs the same
+    rounds only over the edges its contraction leaves open): the
+    suite's second leg. Returns (id, component), component = min id
+    (identical output to :func:`connected_components`; equivalence
+    pinned in tests).
+    """
+    global LAST_CC_ROUNDS
+    centers, LAST_CC_ROUNDS = _star_rounds(
+        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v")),
+        max_iterations,
+        "connected_components_star",
+    )
+    # centers and singletons map to self
     out = vertices.select(F.col(id_col).alias("id")).join(
-        e.withColumnRenamed("u", "id"), "id", "left"
+        centers.withColumnRenamed("u", "id"), "id", "left"
     )
     return out.select("id", F.coalesce("v", "id").alias("component"))
 

@@ -30,6 +30,20 @@ PR_BASE = 1_000_000
 PR_TELEPORT = 150_000  # floor(0.15 * PR_BASE)
 
 
+def _symmetric_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """(src, dst) in both directions of every edge, distinct, pinned
+    with a lazy localCheckpoint: the undirected graph every operator
+    here walks."""
+    return (
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .union(
+            edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
+        )
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
 def pagerank(
     vertices: DataFrame,
     edges: DataFrame,
@@ -41,14 +55,7 @@ def pagerank(
     """Fixed-``iterations`` integer PageRank over the UNDIRECTED
     graph induced by ``edges`` (each pair contributes both
     directions). Returns (id, rank) for every vertex."""
-    sym = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .union(
-            edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    sym = _symmetric_edges(edges, src_col, dst_col)
     outdeg = sym.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     # (src, dst, deg): the contribution topology, constant per round
     topo = sym.join(outdeg, "src").localCheckpoint(eager=False)
@@ -101,14 +108,7 @@ def triangle_counts(
     All joins are equi-joins on ids (shuffle-partitioned), the degree
     relation is id-keyed and reused via lazy checkpoint; no UDF, no
     driver state. Returns (id, n_tri) for nodes in ≥1 triangle."""
-    sym = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .union(
-            edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    sym = _symmetric_edges(edges, src_col, dst_col)
     deg = (
         sym.groupBy("src")
         .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
@@ -170,7 +170,7 @@ def bfs_hops(
     1 + min_{(u,v)∈E} d_i(u)) — so the plan is ``max_hops`` bounded
     equi-join + min-aggregate stages, checkpointed per round to keep
     lineage flat (the same O(rounds) discipline as :func:`pagerank`
-    and the label-propagation CC). All-integer, so the result is
+    and the star rounds of the CC operators). All-integer, so the result is
     bit-identical to the oracle's unrolled recurrence.
 
     Scale: each round shuffles (frontier ⋈ edges) + one min-combine —
@@ -179,14 +179,7 @@ def bfs_hops(
 
     ``seeds`` must have one column named ``id``.
     """
-    sym = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .union(
-            edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    sym = _symmetric_edges(edges, src_col, dst_col)
     dist = seeds.select("id", F.lit(0).cast("bigint").alias("dist")).localCheckpoint(
         eager=False
     )

@@ -282,7 +282,8 @@ VOID: dict[str, int] = {
     # (no explode, no string-min aggregate) and connected_components
     # gained its edge-endpoint check; later still, connected_components
     # became one union-find contraction per partition followed by
-    # propagation over the contracted stars only. Identical results,
+    # propagation over the contracted stars only, and then by the
+    # large-star/small-star rounds there instead. Identical results,
     # but a touched kernel in every query below (each reaches
     # minhash_signatures or connected_components, or decodes
     # JPEG/GIF/TIFF), so the re-certification is the VOID discipline:

@@ -319,7 +319,8 @@ DEDUP_SIMHASH_HAMMING_SQL = _simhash_hamming_sql()
 
 def dedup_components(spark: SparkSession, sf: str) -> DataFrame:
     """Fuzzy-dedup clusters: MinHash-LSH candidate pairs → connected
-    components (iterative min-label propagation). The oracle computes
+    components (local union-find contraction, then star rounds over
+    any component it leaves open). The oracle computes
     the same components with a recursive CTE over the same pairs —
     component = min doc_id reachable in the undirected candidate
     graph. Edges are the connectivity-equivalent per-bucket STARS
@@ -518,11 +519,12 @@ def dedup_simhash_suite(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def dedup_components_suite(spark: SparkSession, sf: str) -> DataFrame:
-    """Connected-components fold (r8): leg 'labelprop' = distributed
-    label propagation, leg 'star' = the alternating star-contraction
-    backend — both must produce IDENTICAL components (they share one
-    oracle statement, so the composite hash pins backend agreement
-    twice over)."""
+    """Connected-components fold (r8): leg 'labelprop' =
+    :func:`dedup_components` (local contraction first; the leg keeps
+    its historical name, which is output data), leg 'star' = the
+    alternating star rounds over every edge — both must produce
+    IDENTICAL components (they share one oracle statement, so the
+    composite hash pins backend agreement twice over)."""
     return fold_legs(
         [
             ("labelprop", dedup_components(spark, sf)),

@@ -925,7 +925,7 @@ PREP_MAX_CHARS = 500
 def pipeline_llm_prep(spark: SparkSession, sf: str) -> DataFrame:
     """The composed LLM data-prep shape END TO END in one declarative
     plan: quality gate (token/char bounds) → MinHash-LSH near-dup
-    clustering over the survivors (star edges + pointer-jump CC) →
+    clustering over the survivors (star edges + contraction CC) →
     keep one canonical doc per cluster → per-(lang, source) corpus
     stats. Differs from pipeline_clean_corpus (exact fingerprint
     dedup) by using the NEAR-dup cluster machinery — the expensive
@@ -933,7 +933,7 @@ def pipeline_llm_prep(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale shape: the quality gate is map-side and shrinks everything
     downstream; clustering runs id-only (star edges Σg, CC by local
-    union-find contraction, which at this size leaves no propagation
+    union-find contraction, which at this size leaves no star
     round); text/metadata rejoin only for survivors;
     the final agg is a narrow (lang, source) rollup."""
     from queryengine_spark.operators.dedup import (  # noqa: PLC0415

@@ -9,6 +9,7 @@ is the LLM-pipeline surface (SURVEY §2 extensions).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from queryengine_spark.operators.dedup import (
@@ -84,6 +85,8 @@ def test_star_cc_path_graph_converges_fast(spark):
     e = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
     out = _labels(connected_components_star(v, e, max_iterations=10))
     assert out == {i: 0 for i in range(n)}
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_star(v, e, max_iterations=1).collect()
 
 
 def test_minhash_jaccard_estimator_tracks_exact(spark, sf_dir):

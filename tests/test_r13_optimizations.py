@@ -142,7 +142,7 @@ def test_cc_unreached_non_vertices_and_self_loops_are_dropped(spark):
 # AQE coalesces the ``src`` repartition to one partition, where one
 # union-find sees the whole graph. With coalescing off and 8 shuffle
 # partitions the local components stay open across partitions, so
-# these cover the propagation over the contracted star edges.
+# these cover the star rounds over the contracted edges.
 
 
 @pytest.fixture
@@ -164,6 +164,8 @@ def test_cc_multi_partition_matches_union_find(spark, eight_partitions):
     n = 80
     chains = list(range(n))
     rng.shuffle(chains)
+    order = list(range(512))
+    random.Random(29).shuffle(order)
     graphs = {
         "random": (60, [(rng.randrange(60), rng.randrange(60)) for _ in range(45)]),
         "path": (64, [(i, i + 1) for i in range(63)]),
@@ -177,16 +179,21 @@ def test_cc_multi_partition_matches_union_find(spark, eight_partitions):
             [(chains[i], chains[i + 1]) for i in range(39)]
             + [(chains[i], chains[i + 1]) for i in range(40, 79)],
         ),
+        # diameter 511 over shuffled ids, within the round bound
+        # dedup_components passes
+        "shuffled_path_512": (512, list(zip(order, order[1:]))),
     }
     for name, (nv, edges) in graphs.items():
         edges = [(a, b) for a, b in edges if a != b]
         v, e = _graph(spark, nv, edges)
-        got = _labels(connected_components(v, e, max_iterations=40))
+        got = _labels(connected_components(v, e, max_iterations=30))
         assert got == _union_find_components(nv, edges), name
         if name == "path":
             # the local components are open across partitions, so the
-            # labels were propagated, not read off one union-find
+            # labels came from the star rounds, not one union-find
             assert dedup.LAST_CC_ROUNDS >= 2
+            with pytest.raises(RuntimeError, match="did not converge"):
+                connected_components(v, e, max_iterations=1).collect()
 
 
 def test_cc_multi_partition_out_of_contract(spark, eight_partitions):
